@@ -1,7 +1,7 @@
-"""Engine lifetime for one benchmark run: start, restart, and a clean stop.
+"""Engine lifetime for one benchmark run: a cold start and a clean stop.
 
-``start`` launches the JVM through ``session.get_spark``; ``restart``
-stops the SparkContext and builds a new one in the same JVM. ``close``
+``start`` launches the JVM through ``session.get_spark`` and runs a first
+trivial job plus the workload's per-session set-up. ``close``
 stops the session, closes the JVM's stdin (the gateway exits on EOF) and
 waits for the JVM and every Python worker it forked to end.
 """
@@ -37,14 +37,8 @@ class Engine:
         first_job(self.spark)
         self.on_start(self.spark)
         t2 = time.perf_counter()
-        if self.procs is None:
-            self.procs = Processes(self.spark.sparkContext._gateway.proc.pid)
+        self.procs = Processes(self.spark.sparkContext._gateway.proc.pid)
         return t1 - t0, t2 - t1
-
-    def restart(self) -> float:
-        self.spark.stop()
-        a, b = self.start()
-        return a + b
 
     def close(self, timeout: float = 30.0) -> None:
         from pyspark import SparkContext

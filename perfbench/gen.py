@@ -112,3 +112,91 @@ def corpus(work: str, seed: int, n_files: int, tokens_per_file: int) -> str:
             fh.write(f"{n_files}\n" + "\n".join(names) + "\n")
 
     return _cached(work, f"corpus-s{seed}-n{n_files}x{tokens_per_file}", build)
+
+
+STOPWORDS = "the a an and of to in is it that as for on with at by from or be are".split()
+KEEP, DUP = "keep", "dup"  # planted roles, carried in the ``source`` column
+
+
+def documents(work: str, seed: int, n_base: int) -> str:
+    """``documents.parquet`` (doc_id, text, lang, source, n_chars) with
+    planted duplicate clusters: ``n_base`` base documents of 80-400 words
+    (~20% stopwords, ending in "."), plus 5% exact copies and 20% near
+    copies (~3% of words replaced), doc ids shuffled. Every document passes
+    the pipeline's quality gates. ``source`` records the planted truth:
+    ``keep`` for the lowest doc id of each cluster (the one keep-first
+    dedup must keep), ``dup`` for the rest, so the pipeline's
+    (split, source) manifest counts what survived of each role;
+    ``cluster.npy`` holds each document's cluster (index = doc id - 1)."""
+
+    def build(d: str) -> None:
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        rng = _rng(seed, 2)
+        vocab = np.concatenate([vocabulary(seed, 5000), np.array(STOPWORDS)])
+        p = np.full(len(vocab), 0.8 / 5000)
+        p[5000:] = 0.2 / len(STOPWORDS)
+        bases = [vocab[rng.choice(len(vocab), size=rng.integers(80, 401), p=p)] for _ in range(n_base)]
+        texts, cluster = [" ".join(w) + "." for w in bases], list(range(n_base))
+        for b in rng.choice(n_base, size=n_base // 20, replace=False):
+            texts.append(texts[b])
+            cluster.append(b)
+        for b in rng.choice(n_base, size=n_base // 5, replace=False):
+            words = bases[b].copy()
+            at = rng.choice(len(words), size=max(1, round(0.03 * len(words))), replace=False)
+            words[at] = vocab[rng.integers(0, 5000, size=len(at))]
+            texts.append(" ".join(words) + ".")
+            cluster.append(b)
+        ids = rng.permutation(len(texts)) + 1
+        first = {}
+        for i, c in zip(ids, cluster):
+            first[c] = min(first.get(c, i), i)
+        order = np.argsort(ids)
+        texts = [texts[i] for i in order]
+        roles = [KEEP if first[cluster[i]] == ids[i] else DUP for i in order]
+        table = pa.table(
+            {
+                "doc_id": pa.array(ids[order], pa.int64()),
+                "text": pa.array(texts, pa.string()),
+                "lang": pa.array(["en"] * len(texts), pa.string()),
+                "source": pa.array(roles, pa.string()),
+                "n_chars": pa.array([len(t) for t in texts], pa.int32()),
+            }
+        )
+        pq.write_table(table, os.path.join(d, "documents.parquet"))
+        np.save(os.path.join(d, "cluster.npy"), np.array(cluster)[order])
+
+    return _cached(work, f"documents-s{seed}-n{n_base}", build)
+
+
+QUERY_ID_BASE = 1_000_000_000  # query ids never collide with corpus ids
+
+
+def embeddings(work: str, seed: int, n: int, n_queries: int, k: int, clusters: int = 64, dim: int = 64) -> str:
+    """``corpus.parquet`` and ``queries.parquet`` (vec_id, embedding
+    float[dim]) drawn around ``clusters`` random centres, and
+    ``truth.npy``: each query's exact top-``k`` corpus ids by cosine
+    (rank order), computed in numpy."""
+
+    def build(d: str) -> None:
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        rng = _rng(seed, 3)
+        centres = rng.standard_normal((clusters, dim))
+
+        def draw(m: int) -> np.ndarray:
+            return (centres[rng.integers(0, clusters, size=m)] + 0.6 * rng.standard_normal((m, dim))).astype(np.float32)
+
+        corpus, queries = draw(n), draw(n_queries)
+        for name, vecs, base in (("corpus", corpus, 0), ("queries", queries, QUERY_ID_BASE)):
+            emb = pa.FixedSizeListArray.from_arrays(pa.array(vecs.ravel()), dim).cast(pa.list_(pa.float32()))
+            table = pa.table({"vec_id": pa.array(np.arange(n if base == 0 else n_queries) + base, pa.int64()), "embedding": emb})
+            pq.write_table(table, os.path.join(d, f"{name}.parquet"))
+        c = corpus.astype(np.float64)
+        q = queries.astype(np.float64)
+        cos = (q @ c.T) / np.outer(np.linalg.norm(q, axis=1), np.linalg.norm(c, axis=1))
+        np.save(os.path.join(d, "truth.npy"), np.argsort(-cos, axis=1, kind="stable")[:, :k])
+
+    return _cached(work, f"embeddings-s{seed}-n{n}q{n_queries}k{k}", build)

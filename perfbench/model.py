@@ -1,32 +1,30 @@
-"""Pure-Python reference outputs and the checks that compare against them.
+"""Reference outputs computed outside Spark, and the checks against them.
 
-The index model follows the reference engine's observable semantics:
-whitespace tokens, ASCII lowercase, strip every character outside
-``[a-z]``, drop empty words, distinct (word, doc) pairs, postings in
-ascending doc order, one file per first letter with lines ordered by
-postings length descending, then word ascending.
+The inverted-index semantics come from the test suite's pure-Python model
+(``tests/pymodel.py``); this module adds the sink parser and the
+comparisons. The dedup pipeline is checked against its DuckDB oracle
+(``registry.ORACLE_SQL``), the ANN search against numpy.
 """
 
 from __future__ import annotations
 
+import json
 import os
-import re
+import string
 
-_NON_LETTER = re.compile(r"[^a-z]")
+import numpy as np
 
-
-def _words(text: str) -> list[str]:
-    words = (_NON_LETTER.sub("", t.lower()) for t in text.split())
-    return [w for w in words if w]
+from gen import DUP, KEEP
+from tests.pymodel import inverted_index, letter_file_rows, normalize
 
 
 def doc_words(text: str) -> set[str]:
-    return set(_words(text))
+    return {w for w in map(normalize, text.split()) if w}
 
 
 def word_tokens(text: str) -> int:
     """Tokens that survive normalization (the tokenizer's useful output)."""
-    return len(_words(text))
+    return sum(1 for t in text.split() if normalize(t))
 
 
 def read_docs(manifest: str) -> list[str]:
@@ -41,15 +39,14 @@ def read_docs(manifest: str) -> list[str]:
     return out
 
 
-def letter_lines(word_sets: list[set[str]]) -> dict[str, list[str]]:
+def letter_lines(docs: list[str]) -> dict[str, list[str]]:
     """``{letter: [word:[d1 d2 ...], ...]}`` in the reference's line order."""
-    postings: dict[str, list[int]] = {}
-    for doc_id, words in enumerate(word_sets, start=1):
-        for w in words:
-            postings.setdefault(w, []).append(doc_id)
-    out: dict[str, list[str]] = {}
-    for w, docs in sorted(postings.items(), key=lambda kv: (-len(kv[1]), kv[0])):
-        out.setdefault(w[0], []).append(f"{w}:[{' '.join(map(str, docs))}]")
+    postings = inverted_index(dict(enumerate(docs, start=1)))
+    out = {}
+    for letter in string.ascii_lowercase:
+        rows = letter_file_rows(postings, letter)
+        if rows:
+            out[letter] = [f"{w}:[{' '.join(map(str, ids))}]" for w, ids in rows]
     return out
 
 
@@ -92,3 +89,74 @@ def bad_docs(pairs: list[tuple[str, int]], word_sets: list[set[str]], committed:
         elif d < 1:
             bad.add(d)
     return bad
+
+
+# --- dedup pipeline ---------------------------------------------------------
+
+
+def oracle_rows(docs_dir: str, sql: str) -> list[list]:
+    """The pipeline's DuckDB oracle over ``documents.parquet``, as sorted
+    rows; computed once per input directory and cached beside it."""
+    cache = os.path.join(docs_dir, "oracle.json")
+    if os.path.exists(cache):
+        with open(cache) as fh:
+            return json.load(fh)
+    import duckdb
+
+    con = duckdb.connect()
+    try:
+        con.execute("SET threads=2")
+        con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{docs_dir}/documents.parquet')")
+        rows = sorted([list(r) for r in con.execute(sql).fetchall()])
+    finally:
+        con.close()
+    with open(cache + ".tmp", "w") as fh:
+        json.dump(rows, fh)
+    os.replace(cache + ".tmp", cache)
+    return rows
+
+
+def manifest_rows(rows) -> list[list]:
+    """Spark rows of the (split, source, n_docs, total_chars) manifest."""
+    return sorted([[r["split"], r["source"], int(r["n_docs"]), int(r["total_chars"])] for r in rows])
+
+
+def planted_ratios(manifest: list[list], roles: dict[str, int]) -> tuple[float, float]:
+    """(share of planted duplicates removed, share of cluster keepers kept)
+    from the manifest's per-source counts; ``roles`` = documents per role."""
+    kept = {KEEP: 0, DUP: 0}
+    for _split, source, n, _chars in manifest:
+        kept[source] = kept.get(source, 0) + n
+    return 1 - kept[DUP] / roles[DUP], kept[KEEP] / roles[KEEP]
+
+
+# --- ANN search -------------------------------------------------------------
+
+
+def topk_ok(rows, queries: np.ndarray, corpus: np.ndarray, k: int, qid_base: int) -> bool:
+    """Every query has ranks 1..k over distinct corpus ids, cosines equal
+    numpy's for those pairs and do not increase with rank."""
+    got: dict[int, list] = {}
+    for r in rows:
+        got.setdefault(r["query_id"] - qid_base, []).append((r["rank"], r["vec_id"], r["cosine"]))
+    if sorted(got) != list(range(len(queries))):
+        return False
+    for qi, hits in got.items():
+        hits.sort()
+        ids = [v for _, v, _ in hits]
+        if [r for r, _, _ in hits] != list(range(1, k + 1)) or len(set(ids)) != k:
+            return False
+        c = corpus[ids]
+        want = c @ queries[qi] / (np.linalg.norm(c, axis=1) * np.linalg.norm(queries[qi]))
+        cos = np.array([s for _, _, s in hits])
+        if not np.allclose(cos, want, rtol=0, atol=1e-9) or np.any(np.diff(cos) > 1e-12):
+            return False
+    return True
+
+
+def recall_at_k(rows, truth: np.ndarray, qid_base: int) -> float:
+    got: dict[int, set] = {}
+    for r in rows:
+        got.setdefault(r["query_id"] - qid_base, set()).add(r["vec_id"])
+    k = truth.shape[1]
+    return float(np.mean([len(got.get(i, set()) & set(truth[i].tolist())) / k for i in range(len(truth))]))

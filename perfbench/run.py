@@ -25,7 +25,7 @@ WORK = os.path.join(HERE, ".work")
 
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    ap.add_argument("--workload", required=True, choices=("index_batch", "index_stream"))
+    ap.add_argument("--workload", required=True, choices=("index_batch", "index_stream", "dedup_corpus", "ann_search"))
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)

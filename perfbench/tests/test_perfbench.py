@@ -3,8 +3,8 @@
     python3 -m pytest perfbench/tests -q
 
 Generator determinism, metric names against BENCHMARK.json, the output
-checks catching corrupted outputs, a tiny-size run of every workload in
-both modes, and the refusal to run without the engine package.
+checks catching corrupted outputs, a tiny-size run of every workload, and
+the refusal to run without the engine package.
 """
 
 from __future__ import annotations
@@ -16,6 +16,7 @@ import shutil
 import subprocess
 import sys
 
+import numpy as np
 import pytest
 
 HERE = os.path.dirname(os.path.abspath(__file__))
@@ -53,9 +54,30 @@ def test_corpus_generator_is_deterministic(tmp_path):
     assert gen.corpus(str(tmp_path / "a"), 7, 6, 150) == a
 
 
+@pytest.mark.parametrize("make", [lambda w, s: gen.documents(w, s, 20), lambda w, s: gen.embeddings(w, s, 300, 4, 5)])
+def test_table_generators_are_deterministic(tmp_path, make):
+    a, b, c = make(str(tmp_path / "a"), 7), make(str(tmp_path / "b"), 7), make(str(tmp_path / "c"), 8)
+    assert _same_tree(a, b)
+    assert not _same_tree(a, c)
+
+
+def test_planted_roles_match_clusters(tmp_path):
+    import pyarrow.parquet as pq
+
+    d = gen.documents(str(tmp_path), 3, 40)
+    table = pq.read_table(os.path.join(d, "documents.parquet")).to_pydict()
+    cluster = np.load(os.path.join(d, "cluster.npy"))
+    assert table["doc_id"] == list(range(1, len(cluster) + 1))
+    keepers = {}
+    for doc, c in zip(table["doc_id"], cluster):
+        keepers.setdefault(c, doc)
+    assert [gen.KEEP if keepers[c] == doc else gen.DUP for doc, c in zip(table["doc_id"], cluster)] == table["source"]
+    assert table["source"].count(gen.DUP) == 40 // 20 + 40 // 5
+
+
 def test_metric_names_match_benchmark_json():
     bench = _bench_json()
-    assert {w["name"] for w in bench["workloads"]} == set(workloads.WORKLOADS)
+    assert [w["name"] for w in bench["workloads"]] == list(workloads.GATED)
     assert {m["name"]: m["unit"] for m in bench["end_to_end"]} == workloads.END_TO_END
     assert {m["name"]: m["unit"] for m in bench["per_layer"]} == workloads.PER_LAYER
 
@@ -69,7 +91,7 @@ def _write_letters(out: str, lines: dict[str, list[str]]) -> None:
 
 def test_corrupted_letter_output_is_caught(tmp_path):
     docs = ["Apple, banana! apple", "Cherry banana 2024 APPLE's", "avocado"]
-    expected = model.letter_lines([model.doc_words(t) for t in docs])
+    expected = model.letter_lines(docs)
     assert expected["a"] == ["apple:[1]", "apples:[2]", "avocado:[3]"]
     assert expected["b"] == ["banana:[1 2]"]
     good = str(tmp_path / "good")
@@ -93,6 +115,33 @@ def test_stream_pair_check_flags_wrong_documents():
     assert model.bad_docs(good + [("x", 3)], word_sets, committed=2) == {3}
 
 
+def test_dedup_and_topk_checks_catch_corruption():
+    good = [["train", gen.KEEP, 8, 800], ["train", gen.DUP, 1, 90], ["val", gen.KEEP, 2, 200]]
+    dup_recall, unique_kept = model.planted_ratios(good, {gen.KEEP: 10, gen.DUP: 4})
+    assert (dup_recall, unique_kept) == (0.75, 1.0)
+    def rows(pairs):
+        return [{"split": a, "source": b, "n_docs": n, "total_chars": c} for a, b, n, c in pairs]
+
+    assert model.manifest_rows(rows(good[::-1])) == sorted(good)
+    assert model.manifest_rows(rows([*good[:2], ["val", gen.KEEP, 2, 201]])) != sorted(good)
+
+    rng = np.random.default_rng(0)
+    corpus, queries = rng.standard_normal((30, 8)), rng.standard_normal((2, 8))
+    cos = queries @ corpus.T / np.outer(np.linalg.norm(queries, axis=1), np.linalg.norm(corpus, axis=1))
+    truth = np.argsort(-cos, axis=1)[:, :3]
+    hits = [
+        {"query_id": 100 + q, "vec_id": int(v), "cosine": float(cos[q, v]), "rank": r + 1}
+        for q in range(2) for r, v in enumerate(truth[q])
+    ]
+    assert model.topk_ok(hits, queries, corpus, 3, 100)
+    assert model.recall_at_k(hits, truth, 100) == 1.0
+    wrong_score = [dict(h, cosine=h["cosine"] + 1e-3) if i == 1 else h for i, h in enumerate(hits)]
+    assert not model.topk_ok(wrong_score, queries, corpus, 3, 100)
+    assert not model.topk_ok(hits[:-1], queries, corpus, 3, 100)
+    swapped = [dict(h, vec_id=int(truth[0][0])) if i == 1 else h for i, h in enumerate(hits)]
+    assert not model.topk_ok(swapped, queries, corpus, 3, 100)
+
+
 def _run(args: list[str], cwd: str = ROOT) -> subprocess.CompletedProcess:
     return subprocess.run(
         [sys.executable, "perfbench/run.py", *args],
@@ -103,8 +152,10 @@ def _run(args: list[str], cwd: str = ROOT) -> subprocess.CompletedProcess:
     )
 
 
-@pytest.mark.parametrize("trace", [0, 1])
-@pytest.mark.parametrize("workload", workloads.WORKLOADS)
+@pytest.mark.parametrize(
+    "workload,trace",
+    [(w, t) for w in workloads.GATED for t in (0, 1)] + [(w, 1) for w in workloads.WORKLOADS if w not in workloads.GATED],
+)
 def test_tiny_run(workload, trace):
     proc = _run(["--workload", workload, "--seed", "1", "--seconds", "1", "--trace", str(trace), "--size", "tiny"])
     assert proc.returncode == 0, proc.stderr[-3000:]

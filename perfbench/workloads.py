@@ -1,10 +1,11 @@
 """The benchmark workloads and the measurement loops they share.
 
 Each workload is a closed loop: one client submits one operation at a
-time and waits for it. Set-up (engine start), warm-up and the timed window
-are separate phases; every operation, warm-up included, is checked against
-a reference computed outside Spark, and a mismatch counts as a failed
-operation, never as a crash.
+time and waits for it. Set-up (a cold engine start), the first operation
+(cold: class loading, code generation, Python workers), a short warm-up
+and the timed window are separate phases; every operation is checked
+against a reference computed outside Spark, and a mismatch counts as a
+failed operation, never as a crash.
 
 With tracing on, the run also times each layer: the first half of the
 window runs untraced (job-group counts, CPU), the second half traced
@@ -23,6 +24,8 @@ import threading
 import time
 from dataclasses import dataclass, field
 
+import numpy as np
+
 import gen
 import model
 from engine import Engine
@@ -31,7 +34,10 @@ from observe import Tracer, dir_bytes, group_counts
 MB = 1024 * 1024
 _T0 = time.perf_counter()
 
-WORKLOADS = ("index_batch", "index_stream")
+# BENCHMARK.json gates the first two; the other two are checked and traced
+# the same way but cost too much per run to repeat in the gate.
+GATED = ("index_batch", "index_stream")
+WORKLOADS = GATED + ("dedup_corpus", "ann_search")
 END_TO_END = {
     "setup_s": "s",
     "job_p50_s": "s",
@@ -57,6 +63,20 @@ PER_LAYER = {
     "streaming.trigger_gap_s": "s",
     "streaming.batches": "count",
     "streaming.pair_table_mb": "MB",
+    "dedup.exact_s": "s",
+    "dedup.minhash_s": "s",
+    "dedup.lsh_s": "s",
+    "dedup.pairs": "count",
+    "dedup.pair_precision": "ratio",
+    "dedup.dup_recall": "ratio",
+    "dedup.unique_kept": "ratio",
+    "graph.cc_s": "s",
+    "graph.jobs": "count",
+    "graph.components": "count",
+    "similarity.ivf_s": "s",
+    "similarity.brute_s": "s",
+    "similarity.queries_per_s": "1/s",
+    "similarity.recall_at_k": "ratio",
     "spark.jobs": "count",
     "spark.stages": "count",
     "spark.tasks": "count",
@@ -69,15 +89,25 @@ PER_LAYER = {
     "trace.overhead_s": "s",
 }
 
-# Input sizes and warm-up lengths. Warm-up runs until the JIT has settled:
-# at full size index_batch jobs fall from ~8 s to a ~1.5 s plateau by the
-# sixth job, microbatches from ~7 s to ~0.9 s by the sixth batch.
-# "tiny" is for the benchmark's own tests.
+# Input sizes and warm-up lengths (warm-up counts the cold first
+# operation). Warm-up runs until the JIT has settled: at full size
+# index_batch jobs fall from ~10 s to a ~2.5 s plateau by the fifth job,
+# microbatches from ~12 s to a plateau by the eighth batch. "tiny" is for
+# the benchmark's own tests.
 SIZES = {
-    "full": {"files": 120, "tokens_per_file": 1000, "batch_warm": 5, "files_per_batch": 4, "stream_warm": 6},
-    "tiny": {"files": 12, "tokens_per_file": 200, "batch_warm": 1, "files_per_batch": 2, "stream_warm": 1},
+    "full": {
+        "files": 120, "tokens_per_file": 1000, "batch_warm": 4,
+        "files_per_batch": 4, "stream_warm": 8,
+        "dedup_docs": 200, "dedup_warm": 4, "vectors": 5000, "queries": 50, "ann_warm": 4,
+    },
+    "tiny": {
+        "files": 12, "tokens_per_file": 200, "batch_warm": 1,
+        "files_per_batch": 2, "stream_warm": 1,
+        "dedup_docs": 20, "dedup_warm": 1, "vectors": 400, "queries": 5, "ann_warm": 1,
+    },
 }
-SETUP_SAMPLES = 5
+TOP_K = 10
+IVF_STRIDE, IVF_NPROBE = 50, 4  # corpus / 50 cells, 4 probed per query
 
 
 def log(msg: str) -> None:
@@ -93,7 +123,7 @@ class Tally:
     failed: int = 0
     durations: list = field(default_factory=list)  # timed, untraced
     traced: list = field(default_factory=list)  # timed, traced
-    docs: int = 0  # documents indexed by the timed untraced operations
+    docs: int = 0  # documents handled by the timed untraced operations
     busy_s: float = 0.0  # wall time those operations took, gaps included
     layer: dict = field(default_factory=dict)
 
@@ -108,80 +138,25 @@ def _cpu_layer(tally: Tally, cpu0: dict, cpu1: dict, ops: int, wall: float, core
     tally.layer["cpu.util"] = sum(cpu1[k] - cpu0[k] for k in cpu0) / (wall * cores)
 
 
-# --- index_batch ------------------------------------------------------------
+# --- operation loops: index_batch, dedup_corpus, ann_search ----------------
 
 
-class IndexBatch:
-    """Manifest → read_corpus → invert → write_letter_files, the CLI path,
-    as repeated jobs in one warm session."""
+class OpLoop:
+    """A closed loop over ``op``: warm-up, then the timed window, untraced
+    for the whole window (its first half when tracing), then traced.
+    Subclasses give ``op`` and ``traced_op`` (each returning (quality,
+    seconds), quality 1.0 for a fully correct output and below 1 for an
+    approximate one, or None for a wrong output), ``docs`` per operation,
+    and ``layer_times`` from the tracer."""
 
-    def __init__(self, work: str, seed: int, size: dict) -> None:
-        d = gen.corpus(work, seed, size["files"], size["tokens_per_file"])
-        self.manifest = os.path.join(d, "manifest.txt")
-        self.out = os.path.join(work, "out", "letters")
-        self.warm = size["batch_warm"]
-        self.n_docs = size["files"]
-        docs = model.read_docs(self.manifest)
-        self.expected = model.letter_lines([model.doc_words(t) for t in docs])
-        self.tokens = sum(model.word_tokens(t) for t in docs)
-        self.input_mb = dir_bytes(os.path.join(d, "docs"))[0] / MB
+    warm = 1
+    docs = 0
+    out = ""
 
     def on_start(self, spark) -> None:
         pass
 
-    def _correct(self) -> bool:
-        return model.letters_match(self.out, self.expected)
-
-    def op(self, spark) -> tuple[bool, float]:
-        """One job: (output correct, seconds)."""
-        from mapreduce_model_spark.operators.inverted_index import invert, write_letter_files
-        from mapreduce_model_spark.sources.manifest import read_corpus
-
-        t0 = time.perf_counter()
-        write_letter_files(invert(read_corpus(spark, self.manifest)), self.out)
-        wall = time.perf_counter() - t0
-        return self._correct(), wall
-
-    def traced_op(self, spark, tr: Tracer, tally: Tally, group: str) -> tuple[bool, float]:
-        from pyspark.sql import functions as F
-
-        from mapreduce_model_spark.operators.inverted_index import invert, write_letter_files
-        from mapreduce_model_spark.sources.manifest import read_corpus
-
-        t0 = time.perf_counter()
-        with tr.span("op", group):
-            with tr.span("sources.read_corpus", group) as src:
-                docs = read_corpus(spark, self.manifest).persist()
-                rows = docs.count()
-            with tr.span("inverted_index.invert", group) as inv:
-                index = invert(docs).persist()
-                words = index.count()
-            with tr.span("sinks.write_letter_files", group) as sink:
-                write_letter_files(index, self.out)
-        wall = time.perf_counter() - t0
-        pairs = index.agg(F.sum("n_docs")).first()[0]
-        index.unpersist()
-        docs.unpersist()
-        out_bytes, out_files = dir_bytes(self.out)
-        src.counts = {"rows": rows}
-        inv.counts = {"words": words, "pairs": pairs}
-        sink.counts = {"bytes": out_bytes, "files": out_files}
-        tally.layer.update(
-            {
-                "sources.rows": rows,
-                "sources.input_mb": self.input_mb,
-                "inverted_index.tokens": self.tokens,
-                "inverted_index.pairs": pairs,
-                "inverted_index.pairs_per_token": pairs / self.tokens,
-                "sinks.bytes_written": out_bytes,
-                "sinks.files_written": out_files,
-            }
-        )
-        return self._correct(), wall
-
     def measure(self, eng: Engine, seconds: float, trace: bool, tally: Tally) -> None:
-        """Warm-up, then the timed window: untraced jobs for the whole
-        window (its first half when tracing), then traced ones."""
         spark = eng.spark
         sc = spark.sparkContext
         n = 0
@@ -191,9 +166,9 @@ class IndexBatch:
             group = f"op-{n}"
             n += 1
             sc.setJobGroup(group, group)
-            ok, wall = self.traced_op(spark, tr, tally, group) if traced else self.op(spark)
-            tally.record(ok)
-            log(f"{group}{' traced' if traced else ''}: {wall:.3f}s ok={ok}")
+            q, wall = self.traced_op(spark, tr, tally, group) if traced else self.op(spark)
+            tally.record(q is not None)
+            log(f"{group}{' traced' if traced else ''}: {wall:.3f}s quality={q}")
             return group, wall
 
         for _ in range(self.warm):
@@ -208,7 +183,7 @@ class IndexBatch:
             group, wall = run(False)
             groups.append(group)
             tally.durations.append(wall)
-            tally.docs += self.n_docs
+            tally.docs += self.docs
             if trace:
                 local_peak = max(local_peak, dir_bytes(local)[0])
         tally.busy_s = sum(tally.durations)
@@ -224,16 +199,269 @@ class IndexBatch:
         t1 = time.perf_counter()
         while not tally.traced or time.perf_counter() - t1 < seconds - untraced_s:
             tally.traced.append(run(True, tr)[1])
-        k = len(tally.traced)
+        tally.layer.update(self.layer_times(tr, len(tally.traced)))
+        tally.layer["trace.overhead_s"] = statistics.median(tally.traced) - statistics.median(tally.durations)
+        tr.dump(os.path.join(self.out, "spans.jsonl"))
+
+
+class IndexBatch(OpLoop):
+    """Manifest → read_corpus → invert → write_letter_files, the CLI path,
+    as repeated jobs in one warm session."""
+
+    def __init__(self, work: str, seed: int, size: dict) -> None:
+        d = gen.corpus(work, seed, size["files"], size["tokens_per_file"])
+        self.manifest = os.path.join(d, "manifest.txt")
+        self.out = os.path.join(work, "out", "index_batch")
+        self.letters = os.path.join(self.out, "letters")
+        self.warm = size["batch_warm"]
+        self.docs = size["files"]
+        docs = model.read_docs(self.manifest)
+        self.expected = model.letter_lines(docs)
+        self.tokens = sum(model.word_tokens(t) for t in docs)
+        self.input_mb = dir_bytes(os.path.join(d, "docs"))[0] / MB
+
+    def _quality(self) -> float | None:
+        return 1.0 if model.letters_match(self.letters, self.expected) else None
+
+    def op(self, spark) -> tuple[float | None, float]:
+        from mapreduce_model_spark.operators.inverted_index import invert, write_letter_files
+        from mapreduce_model_spark.sources.manifest import read_corpus
+
+        t0 = time.perf_counter()
+        write_letter_files(invert(read_corpus(spark, self.manifest)), self.letters)
+        wall = time.perf_counter() - t0
+        return self._quality(), wall
+
+    def traced_op(self, spark, tr: Tracer, tally: Tally, group: str) -> tuple[float | None, float]:
+        from pyspark.sql import functions as F
+
+        from mapreduce_model_spark.operators.inverted_index import invert, write_letter_files
+        from mapreduce_model_spark.sources.manifest import read_corpus
+
+        t0 = time.perf_counter()
+        with tr.span("op", group):
+            with tr.span("sources.read_corpus", group) as src:
+                docs = read_corpus(spark, self.manifest).persist()
+                rows = docs.count()
+            with tr.span("inverted_index.invert", group) as inv:
+                index = invert(docs).persist()
+                words = index.count()
+            with tr.span("sinks.write_letter_files", group) as sink:
+                write_letter_files(index, self.letters)
+        wall = time.perf_counter() - t0
+        pairs = index.agg(F.sum("n_docs")).first()[0]
+        index.unpersist()
+        docs.unpersist()
+        out_bytes, out_files = dir_bytes(self.letters)
+        src.counts = {"rows": rows}
+        inv.counts = {"words": words, "pairs": pairs}
+        sink.counts = {"bytes": out_bytes, "files": out_files}
         tally.layer.update(
             {
-                "sources.scan_s": tr.self_time("sources.read_corpus") / k,
-                "inverted_index.exec_s": tr.self_time("inverted_index.invert") / k,
-                "sinks.write_s": tr.self_time("sinks.write_letter_files") / k,
-                "trace.overhead_s": statistics.median(tally.traced) - statistics.median(tally.durations),
+                "sources.rows": rows,
+                "sources.input_mb": self.input_mb,
+                "inverted_index.tokens": self.tokens,
+                "inverted_index.pairs": pairs,
+                "inverted_index.pairs_per_token": pairs / self.tokens,
+                "sinks.bytes_written": out_bytes,
+                "sinks.files_written": out_files,
             }
         )
-        tr.dump(os.path.join(os.path.dirname(self.out), "spans.jsonl"))
+        return self._quality(), wall
+
+    def layer_times(self, tr: Tracer, k: int) -> dict:
+        return {
+            "sources.scan_s": tr.self_time("sources.read_corpus") / k,
+            "inverted_index.exec_s": tr.self_time("inverted_index.invert") / k,
+            "sinks.write_s": tr.self_time("sinks.write_letter_files") / k,
+        }
+
+
+PIPELINE = "corpus_build_pipeline_near"
+
+
+class DedupCorpus(OpLoop):
+    """The corpus-build pipeline over a documents table with planted
+    duplicate clusters: quality filter → exact dedup → MinHash → LSH →
+    connected components → split manifest, through ``registry.QUERIES``.
+    Checked against the query's DuckDB oracle; quality is the share of
+    documents whose planted role (keep or duplicate) the pipeline honoured."""
+
+    def __init__(self, work: str, seed: int, size: dict) -> None:
+        import pyarrow.parquet as pq
+
+        from mapreduce_model_spark.registry import ORACLE_SQL
+
+        self.docs_dir = gen.documents(work, seed, size["dedup_docs"])
+        self.out = os.path.join(work, "out", "dedup_corpus")
+        os.makedirs(self.out, exist_ok=True)
+        self.warm = size["dedup_warm"]
+        self.oracle = model.oracle_rows(self.docs_dir, ORACLE_SQL[PIPELINE])
+        self.cluster = np.load(os.path.join(self.docs_dir, "cluster.npy"))
+        self.docs = len(self.cluster)
+        roles = pq.read_table(os.path.join(self.docs_dir, "documents.parquet"), columns=["source"]).column(0).to_pylist()
+        self.roles = {r: roles.count(r) for r in (gen.KEEP, gen.DUP)}
+        self.ratios = (0.0, 0.0)
+
+    def _quality(self, rows) -> float | None:
+        manifest = model.manifest_rows(rows)
+        if manifest != self.oracle:
+            return None
+        self.ratios = dup_recall, unique_kept = model.planted_ratios(manifest, self.roles)
+        return (dup_recall * self.roles[gen.DUP] + unique_kept * self.roles[gen.KEEP]) / self.docs
+
+    def op(self, spark) -> tuple[float | None, float]:
+        from mapreduce_model_spark.registry import QUERIES
+
+        t0 = time.perf_counter()
+        rows = QUERIES[PIPELINE](spark, self.docs_dir).collect()
+        wall = time.perf_counter() - t0
+        return self._quality(rows), wall
+
+    def traced_op(self, spark, tr: Tracer, tally: Tally, group: str) -> tuple[float | None, float]:
+        """The same query with its MinHash, LSH and connected-components
+        calls wrapped (the query imports them from their modules when it
+        runs), each materializing its output inside its span. The query
+        span's self time is the rest: quality filter, exact dedup and the
+        split manifest."""
+        import mapreduce_model_spark.operators.dedup as dedup
+        import mapreduce_model_spark.operators.graph as graph
+        from mapreduce_model_spark.registry import QUERIES
+
+        sc = spark.sparkContext
+        originals = (dedup.minhash_signatures, dedup.lsh_near_dup_pairs, graph.dedup_survivors)
+        held, found = [], {}
+
+        def minhash(df, *args, **kwargs):
+            held.append(df.persist())
+            df.count()  # the exact-dedup survivors, outside the MinHash span
+            with tr.span("dedup.minhash", group):
+                sig = originals[0](df, *args, **kwargs).persist()
+                held.append(sig)
+                sig.count()
+            return sig
+
+        def lsh(*args, **kwargs):
+            with tr.span("dedup.lsh", group):
+                pairs = originals[1](*args, **kwargs).persist()
+                held.append(pairs)
+                found["pairs"] = [(r["id_a"], r["id_b"]) for r in pairs.select("id_a", "id_b").collect()]
+            return pairs
+
+        def survivors(*args, **kwargs):
+            sc.setJobGroup(group + ".cc", group + ".cc")
+            try:
+                with tr.span("graph.cc", group + ".cc"):
+                    out = originals[2](*args, **kwargs).persist()
+                    held.append(out)
+                    found["components"] = out.filter("is_survivor").count()
+            finally:
+                sc.setJobGroup(group, group)
+            return out
+
+        dedup.minhash_signatures, dedup.lsh_near_dup_pairs, graph.dedup_survivors = minhash, lsh, survivors
+        try:
+            t0 = time.perf_counter()
+            with tr.span("dedup.query", group):
+                rows = QUERIES[PIPELINE](spark, self.docs_dir).collect()
+            wall = time.perf_counter() - t0
+        finally:
+            dedup.minhash_signatures, dedup.lsh_near_dup_pairs, graph.dedup_survivors = originals
+            for df in held:
+                df.unpersist()
+        pairs = found["pairs"]
+        true_pairs = sum(self.cluster[a - 1] == self.cluster[b - 1] for a, b in pairs)
+        tally.layer.update(
+            {
+                "dedup.pairs": len(pairs),
+                "dedup.pair_precision": true_pairs / len(pairs) if pairs else 1.0,
+                "graph.components": found["components"],
+                "graph.jobs": group_counts(sc, group + ".cc")["jobs"],
+                "sources.rows": self.docs,
+            }
+        )
+        return self._quality(rows), wall
+
+    def layer_times(self, tr: Tracer, k: int) -> dict:
+        dup_recall, unique_kept = self.ratios
+        return {
+            "dedup.exact_s": tr.self_time("dedup.query") / k,
+            "dedup.minhash_s": tr.self_time("dedup.minhash") / k,
+            "dedup.lsh_s": tr.self_time("dedup.lsh") / k,
+            "dedup.dup_recall": dup_recall,
+            "dedup.unique_kept": unique_kept,
+            "graph.cc_s": tr.self_time("graph.cc") / k,
+        }
+
+
+class AnnSearch(OpLoop):
+    """IVF cosine top-k (``operators.similarity.ivf_cosine_topk``) for a
+    batch of queries over a clustered embedding corpus. Every result is
+    checked against numpy cosines; quality is recall@k against numpy's
+    exact top-k. The traced half also times brute-force ``cosine_topk``."""
+
+    def __init__(self, work: str, seed: int, size: dict) -> None:
+        import pyarrow.parquet as pq
+
+        self.emb_dir = gen.embeddings(work, seed, size["vectors"], size["queries"], TOP_K)
+        self.out = os.path.join(work, "out", "ann_search")
+        os.makedirs(self.out, exist_ok=True)
+        self.warm = size["ann_warm"]
+
+        def vectors(name: str) -> np.ndarray:
+            col = pq.read_table(os.path.join(self.emb_dir, f"{name}.parquet"), columns=["embedding"]).column(0)
+            return np.array(col.to_pylist(), dtype=np.float64)
+
+        self.corpus_np, self.queries_np = vectors("corpus"), vectors("queries")
+        self.truth = np.load(os.path.join(self.emb_dir, "truth.npy"))
+        self.docs = len(self.queries_np)  # queries answered per operation
+        self.recall = 0.0
+
+    def on_start(self, spark) -> None:
+        self.corpus = spark.read.parquet(os.path.join(self.emb_dir, "corpus.parquet"))
+        self.queries = spark.read.parquet(os.path.join(self.emb_dir, "queries.parquet"))
+
+    def _ok(self, hits) -> bool:
+        return model.topk_ok(hits, self.queries_np, self.corpus_np, TOP_K, gen.QUERY_ID_BASE)
+
+    def _quality(self, hits) -> float | None:
+        if not self._ok(hits):
+            return None
+        self.recall = model.recall_at_k(hits, self.truth, gen.QUERY_ID_BASE)
+        return self.recall
+
+    def _ivf(self):
+        from mapreduce_model_spark.operators.similarity import ivf_cosine_topk
+
+        return ivf_cosine_topk(self.corpus, self.queries, k=TOP_K, stride=IVF_STRIDE, nprobe=IVF_NPROBE).collect()
+
+    def op(self, spark) -> tuple[float | None, float]:
+        t0 = time.perf_counter()
+        hits = self._ivf()
+        wall = time.perf_counter() - t0
+        return self._quality(hits), wall
+
+    def traced_op(self, spark, tr: Tracer, tally: Tally, group: str) -> tuple[float | None, float]:
+        from mapreduce_model_spark.operators.similarity import cosine_topk
+
+        t0 = time.perf_counter()
+        with tr.span("similarity.ivf", group):
+            hits = self._ivf()
+        wall = time.perf_counter() - t0
+        with tr.span("similarity.brute", group):
+            brute = cosine_topk(self.corpus, self.queries, k=TOP_K).collect()
+        quality = self._quality(hits)
+        return (quality if self._ok(brute) else None), wall
+
+    def layer_times(self, tr: Tracer, k: int) -> dict:
+        ivf_s = tr.self_time("similarity.ivf") / k
+        return {
+            "similarity.ivf_s": ivf_s,
+            "similarity.brute_s": tr.self_time("similarity.brute") / k,
+            "similarity.queries_per_s": self.docs / ivf_s,
+            "similarity.recall_at_k": self.recall,
+            "sources.rows": len(self.corpus_np),
+        }
 
 
 # --- index_stream -----------------------------------------------------------
@@ -279,7 +507,7 @@ class IndexStream:
         docs = model.read_docs(self.manifest)
         self.word_sets = [model.doc_words(t) for t in docs]
         self.tokens = [model.word_tokens(t) for t in docs]
-        self.out = os.path.join(work, "out", "stream")
+        self.out = os.path.join(work, "out", "index_stream")
 
     def on_start(self, spark) -> None:
         from mapreduce_model_spark.sources import pyds
@@ -434,6 +662,10 @@ def run(workload: str, seed: int, seconds: float, trace: bool, size: str, work: 
         wl = IndexBatch(work, seed, sizes)
     elif workload == "index_stream":
         wl = IndexStream(work, seed, sizes, seconds)
+    elif workload == "dedup_corpus":
+        wl = DedupCorpus(work, seed, sizes)
+    elif workload == "ann_search":
+        wl = AnnSearch(work, seed, sizes)
     else:
         raise ValueError(f"unknown workload {workload!r}; expected one of {WORKLOADS}")
     log(f"{workload}: inputs ready")
@@ -442,8 +674,6 @@ def run(workload: str, seed: int, seconds: float, trace: bool, size: str, work: 
     try:
         start_s, first_s = eng.start()
         log(f"engine started: get_spark {start_s:.2f}s, first job {first_s:.2f}s")
-        setups = [eng.restart() for _ in range(SETUP_SAMPLES)]
-        log(f"set-up samples: {', '.join(f'{s:.3f}' for s in setups)}")
         wl.measure(eng, seconds, trace, tally)
         peak_rss = eng.procs.peak_rss_mb()
     finally:
@@ -457,7 +687,7 @@ def run(workload: str, seed: int, seconds: float, trace: bool, size: str, work: 
         units = PER_LAYER
     else:
         values = {
-            "setup_s": statistics.median(setups),
+            "setup_s": start_s + first_s,
             "job_p50_s": statistics.median(tally.durations),
             "docs_per_s": tally.docs / tally.busy_s,
         }

@@ -1,6 +1,6 @@
 """Benchmark entry point: one workload, one seed, one JSON result line.
 
-    python3 perfbench/run.py --workload index_batch --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload index_batch --seed 1 --seconds 20 --trace 0
 
 Runs from the root of a source checkout: it generates the workload's
 inputs from ``--seed`` (cached under ``perfbench/.work``), starts the

@@ -41,7 +41,6 @@ WORKLOADS = GATED + ("dedup_corpus", "ann_search")
 END_TO_END = {
     "setup_s": "s",
     "job_p50_s": "s",
-    "docs_per_s": "docs/s",
 }
 PER_LAYER = {
     "session.start_s": "s",
@@ -91,13 +90,13 @@ PER_LAYER = {
 
 # Input sizes and warm-up lengths (warm-up counts the cold first
 # operation). Warm-up runs until the JIT has settled: at full size
-# index_batch jobs fall from ~10 s to a ~2.5 s plateau by the fifth job,
-# microbatches from ~12 s to a plateau by the eighth batch. "tiny" is for
-# the benchmark's own tests.
+# index_batch jobs fall from ~10 s to within ~15% of their plateau by the
+# fifth job, microbatches from ~8 s to within ~15% by the fourth batch.
+# "tiny" is for the benchmark's own tests.
 SIZES = {
     "full": {
-        "files": 120, "tokens_per_file": 1000, "batch_warm": 4,
-        "files_per_batch": 4, "stream_warm": 8,
+        "files": 120, "tokens_per_file": 1000, "batch_warm": 5,
+        "files_per_batch": 4, "stream_warm": 5,
         "dedup_docs": 200, "dedup_warm": 4, "vectors": 5000, "queries": 50, "ann_warm": 4,
     },
     "tiny": {
@@ -123,8 +122,6 @@ class Tally:
     failed: int = 0
     durations: list = field(default_factory=list)  # timed, untraced
     traced: list = field(default_factory=list)  # timed, traced
-    docs: int = 0  # documents handled by the timed untraced operations
-    busy_s: float = 0.0  # wall time those operations took, gaps included
     layer: dict = field(default_factory=dict)
 
     def record(self, ok: bool) -> None:
@@ -146,11 +143,10 @@ class OpLoop:
     for the whole window (its first half when tracing), then traced.
     Subclasses give ``op`` and ``traced_op`` (each returning (quality,
     seconds), quality 1.0 for a fully correct output and below 1 for an
-    approximate one, or None for a wrong output), ``docs`` per operation,
-    and ``layer_times`` from the tracer."""
+    approximate one, or None for a wrong output) and ``layer_times`` from
+    the tracer."""
 
     warm = 1
-    docs = 0
     out = ""
 
     def on_start(self, spark) -> None:
@@ -183,10 +179,8 @@ class OpLoop:
             group, wall = run(False)
             groups.append(group)
             tally.durations.append(wall)
-            tally.docs += self.docs
             if trace:
                 local_peak = max(local_peak, dir_bytes(local)[0])
-        tally.busy_s = sum(tally.durations)
         if not trace:
             return
         _cpu_layer(tally, cpu0, eng.procs.cpu(), len(groups), time.perf_counter() - t0, eng.cpus)
@@ -214,7 +208,6 @@ class IndexBatch(OpLoop):
         self.out = os.path.join(work, "out", "index_batch")
         self.letters = os.path.join(self.out, "letters")
         self.warm = size["batch_warm"]
-        self.docs = size["files"]
         docs = model.read_docs(self.manifest)
         self.expected = model.letter_lines(docs)
         self.tokens = sum(model.word_tokens(t) for t in docs)
@@ -570,9 +563,6 @@ class IndexStream:
             return [b["durationMs"][key] / 1000 for b in bs]
 
         tally.durations = secs(untraced, "triggerExecution")
-        tally.docs = sum(b["numInputRows"] for b in untraced)
-        first, last = untraced[0], untraced[-1]
-        tally.busy_s = _epoch(last["timestamp"]) + last["batchDuration"] / 1000 - _epoch(first["timestamp"])
         if not trace:
             return
         tally.traced = secs(traced, "triggerExecution")
@@ -595,7 +585,7 @@ class IndexStream:
                 "streaming.trigger_gap_s": statistics.median(gaps) if gaps else 0.0,
                 "streaming.batches": len(timed),
                 "streaming.pair_table_mb": dir_bytes(pairs_path)[0] / MB,
-                "sources.rows": tally.docs,
+                "sources.rows": sum(b["numInputRows"] for b in untraced),
                 "inverted_index.exec_s": sum(sp.end - sp.start for sp in spans) / n_spans,
                 "inverted_index.tokens": tokens_t / n_spans,
                 "inverted_index.pairs": pairs_t / n_spans,
@@ -689,7 +679,6 @@ def run(workload: str, seed: int, seconds: float, trace: bool, size: str, work: 
         values = {
             "setup_s": start_s + first_s,
             "job_p50_s": statistics.median(tally.durations),
-            "docs_per_s": tally.docs / tally.busy_s,
         }
         units = END_TO_END
     result["metrics"] = {k: {"value": float(values[k]), "unit": units[k]} for k in units}

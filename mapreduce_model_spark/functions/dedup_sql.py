@@ -33,6 +33,16 @@ SIG_SQL = (
 )
 
 
+def words_sql(var: str = "t") -> str:
+    """DuckDB twin of ``functions.text.words_array("text")``: whitespace
+    split, lowercase, strip ``[^a-z]``, drop empty words — the one oracle
+    words-array expression. ``var`` names the lambda parameter."""
+    return rf"""list_filter(
+               list_transform(regexp_split_to_array(trim(text), '\s+'),
+                              {var} -> regexp_replace(lower({var}), '[^a-z]', '', 'g')),
+               w -> length(w) > 0)"""
+
+
 def shingle_cte(src: str = "documents", sfx: str = "") -> str:
     """Words + distinct 3-gram shingle hashes (mod P) as a CTE fragment —
     twin of operators.dedup.doc_shingle_hashes, parameterized on the
@@ -40,10 +50,7 @@ def shingle_cte(src: str = "documents", sfx: str = "") -> str:
     so it composes into larger WITH chains without collisions."""
     return rf"""wbase{sfx} AS (
     SELECT doc_id,
-           list_filter(
-               list_transform(regexp_split_to_array(trim(text), '\s+'),
-                              t -> regexp_replace(lower(t), '[^a-z]', '', 'g')),
-               w -> length(w) > 0) AS words
+           {words_sql()} AS words
     FROM {src}
 ), sh{sfx} AS (
     SELECT doc_id, unnest(list_distinct(

@@ -701,21 +701,19 @@ def kmeans_fit_arrow(
             "vid long, v array<double>, n double, cid int,"
             " ccid int, ce array<double>",
         )
-        assign = mixed.where(F.col("vid").isNotNull()).select(
-            "vid", "v", "n", "cid"
-        )
         if return_centroids:
             # both faces filter the one mixed task output — persist it so
             # the Lloyd task runs once, not once per face
             mixed = mixed.persist()
-            assign = mixed.where(F.col("vid").isNotNull()).select(
-                "vid", "v", "n", "cid"
-            )
-            cents_df = mixed.where(F.col("ccid").isNotNull()).select(
-                F.col("ccid").alias("cid"), F.col("ce").alias("centroid")
-            )
-            return assign, cents_df
-        return assign
+        assign = mixed.where(F.col("vid").isNotNull()).select(
+            "vid", "v", "n", "cid"
+        )
+        if not return_centroids:
+            return assign
+        cents_df = mixed.where(F.col("ccid").isNotNull()).select(
+            F.col("ccid").alias("cid"), F.col("ce").alias("centroid")
+        )
+        return assign, cents_df
     seed_rows = v.orderBy("vid").limit(k).collect()
     cents = np.array([list(r["v"]) for r in seed_rows], dtype=np.float64)
     for _ in range(n_iter):

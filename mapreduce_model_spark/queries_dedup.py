@@ -26,6 +26,7 @@ from mapreduce_model_spark.functions.dedup_sql import (  # noqa: F401 — consta
     components_cte,
     lsh_cte,
     shingle_cte,
+    words_sql,
 )
 from mapreduce_model_spark.operators.dedup import (
     dedup_exact,
@@ -491,10 +492,7 @@ def _simhash_sql(src: str = "documents") -> str:
     return rf"""
 WITH wbase AS (
     SELECT doc_id,
-           list_filter(
-               list_transform(regexp_split_to_array(trim(text), '\s+'),
-                              t -> regexp_replace(lower(t), '[^a-z]', '', 'g')),
-               w -> length(w) > 0) AS words
+           {words_sql()} AS words
     FROM {src}
 ), w AS (SELECT doc_id, unnest(words) AS word FROM wbase),
 tf AS (
@@ -929,10 +927,7 @@ CHUNK_WORDS = 16
 _CHUNKS_CTE = rf"""
 WITH wbase AS (
     SELECT doc_id,
-           list_filter(
-               list_transform(regexp_split_to_array(trim(text), '\s+'),
-                              t -> regexp_replace(lower(t), '[^a-z]', '', 'g')),
-               w -> length(w) > 0) AS words
+           {words_sql()} AS words
     FROM documents
 ), chunks AS (
     SELECT doc_id, i - 1 AS chunk_idx,

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from mapreduce_model_spark.functions.dedup_sql import words_sql
 from mapreduce_model_spark.functions.rounding import rnd
 from mapreduce_model_spark.functions.text import md5_int32, sql_md5_int32
 from mapreduce_model_spark.registry import query, table
@@ -269,13 +270,10 @@ def pii_scrub(spark, sf_dir):
 
 # --- repetition signals (Gopher) ------------------------------------------
 
-_REP_WBASE = r"""
+_REP_WBASE = rf"""
 WITH wbase AS (
     SELECT doc_id,
-           list_filter(
-               list_transform(regexp_split_to_array(trim(text), '\s+'),
-                              t -> regexp_replace(lower(t), '[^a-z]', '', 'g')),
-               w -> length(w) > 0) AS words
+           {words_sql()} AS words
     FROM documents
 )
 """
@@ -590,10 +588,7 @@ _SH5_SQL = r"""
 _DECON_WBASE = rf"""
 WITH wbase AS (
     SELECT doc_id, source,
-           list_filter(
-               list_transform(regexp_split_to_array(trim(text), '\s+'),
-                              t -> regexp_replace(lower(t), '[^a-z]', '', 'g')),
-               w -> length(w) > 0) AS words
+           {words_sql()} AS words
     FROM documents
 )
 """
@@ -1394,13 +1389,10 @@ def doc_chunks_udtf(spark, sf_dir):
 
 @query(
     "ngram_cols_udtf",
-    oracle=r"""
+    oracle=rf"""
 WITH wbase AS (
     SELECT doc_id,
-           list_filter(
-               list_transform(regexp_split_to_array(trim(text), '\s+'),
-                              t -> regexp_replace(lower(t), '[^a-z]', '', 'g')),
-               w -> length(w) > 0) AS words
+           {words_sql()} AS words
     FROM documents
 )
 SELECT doc_id, CAST(i - 1 AS INT) AS pos,
@@ -2191,13 +2183,10 @@ def class_rebalance(spark, sf_dir):
 
 @query(
     "dataset_card",
-    oracle=r"""
+    oracle=rf"""
 WITH wbase AS (
     SELECT doc_id, lang, source, n_chars,
-           len(list_filter(
-               list_transform(regexp_split_to_array(trim(text), '\s+'),
-                              t -> regexp_replace(lower(t), '[^a-z]', '', 'g')),
-               w -> length(w) > 0)) AS n_words
+           len({words_sql()}) AS n_words
     FROM documents
 )
 SELECT CAST(count(*) AS BIGINT)                    AS n_docs,

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from mapreduce_model_spark.functions.dedup_sql import words_sql
 from mapreduce_model_spark.functions.rounding import rnd
 from mapreduce_model_spark.operators.joins import (
     asof_join,
@@ -1270,10 +1271,7 @@ _PACK_CAP = 1024
     oracle=rf"""
 WITH t AS (
     SELECT doc_id,
-           len(list_filter(
-               list_transform(regexp_split_to_array(trim(text), '\s+'),
-                              tk -> regexp_replace(lower(tk), '[^a-z]', '', 'g')),
-               w -> length(w) > 0)) AS n_tok
+           len({words_sql("tk")}) AS n_tok
     FROM documents
 ), c AS (
     SELECT doc_id, CAST(n_tok AS BIGINT) AS n_tok,

@@ -2738,7 +2738,7 @@ def ivfpq_recall_report(spark, sf_dir):
         emb,
         emb.filter(F.col("vec_id") < _IVFPQR_NQ),
         *_ivfpq_train(spark, sf_dir),
-        tag="full",
+        tag="report",
     )
 
 
@@ -2754,29 +2754,28 @@ def ivfpq_recall_sampled(spark, sf_dir):
     recall@10-vs-nprobe curve that stays hash-checked at gen-sf1
     (truth, index, and query set all restricted to the SAME
     deterministic sample on both engines; see kmeans_sampled). Below
-    the 64k cap the twin equals the parent exactly. Index build is the
-    memoized sampled run shared with ivfpq_sampled."""
-    base = table(spark, sf_dir, "embeddings")
-    emb = sample_frame(base, "vec_id")
-    # identity ⇔ the cap didn't bind ⇔ corpus AND query set equal the
-    # parent's (0-based ids: lowest-20 == vec_id < 20) — share its truth
+    the 64k cap, on gap-free 0-based ids, the twin equals the parent
+    exactly. Index build is the memoized sampled run shared with
+    ivfpq_sampled."""
+    emb = sample_frame(table(spark, sf_dir, "embeddings"), "vec_id")
     return _ivfpq_recall_frame(
         spark,
         sf_dir,
         emb,
         _lowest_ids_frame(emb, _IVFPQR_NQ),
         *_ivfpq_train(spark, sf_dir, sampled=True),
-        tag="full" if emb is base else "sampled",
+        tag="sampled",
     )
 
 
 def _ivfpq_recall_frame(spark, sf_dir, emb, qemb, cand, cc, pcents, tag):
     """Shared engine tail of ivfpq_recall_report and its sampled twin:
     all-cells probe tables per query, nprobe-expanded top-k hits, and the
-    exact-L2 broadcast-queries truth over ``emb`` — the truth memoized
-    per (session, sf_dir, corpus tag) so the report/sampled twins pay the
-    brute pass once whenever their corpus and query set coincide (always
-    at driver scales — see the caller's identity check)."""
+    exact-L2 broadcast-queries truth over ``emb``, memoized per (session,
+    sf_dir, face ``tag``). The tag names the face's corpus AND query-set
+    form: the report's ``vec_id < NQ`` and the sampled face's lowest-NQ
+    ids coincide only on gap-free 0-based ids, so the two faces never
+    share a truth."""
     from mapreduce_model_spark.operators.similarity import dot, py_ldot as ldot
     from pyspark.sql import Window
 

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from mapreduce_model_spark.functions.dedup_sql import words_sql
 from mapreduce_model_spark.functions.partitioning import spread_for_fanout
 from mapreduce_model_spark.functions.rounding import rnd
 from mapreduce_model_spark.functions.text import (
@@ -25,14 +26,11 @@ from mapreduce_model_spark.functions.text import (
 from mapreduce_model_spark.registry import query, table
 
 # DuckDB twin of tokens_array / words_array.
-_WBASE = r"""
+_WBASE = rf"""
 WITH wbase AS (
     SELECT doc_id, text, lang,
            regexp_split_to_array(trim(text), '\s+') AS toks,
-           list_filter(
-               list_transform(regexp_split_to_array(trim(text), '\s+'),
-                              t -> regexp_replace(lower(t), '[^a-z]', '', 'g')),
-               w -> length(w) > 0) AS words
+           {words_sql()} AS words
     FROM documents
 )
 """
@@ -613,10 +611,7 @@ _CAP_BUDGET_FRAC = 0.3
     oracle=rf"""
 WITH toks AS (
     SELECT doc_id, source,
-           len(list_filter(
-               list_transform(regexp_split_to_array(trim(text), '\s+'),
-                              t -> regexp_replace(lower(t), '[^a-z]', '', 'g')),
-               w -> length(w) > 0)) AS n_tokens
+           len({words_sql()}) AS n_tokens
     FROM documents
 ), tot AS (
     SELECT source, CAST(sum(n_tokens) AS BIGINT) AS src_tokens
@@ -726,13 +721,10 @@ def source_token_caps(spark, sf_dir):
 
 @query(
     "token_entropy",
-    oracle=r"""
+    oracle=rf"""
 WITH wbase AS (
     SELECT source,
-           list_filter(
-               list_transform(regexp_split_to_array(trim(text), '\s+'),
-                              t -> regexp_replace(lower(t), '[^a-z]', '', 'g')),
-               w -> length(w) > 0) AS words
+           {words_sql()} AS words
     FROM documents
 ), exploded AS (
     SELECT source, unnest(words) AS word FROM wbase
@@ -781,12 +773,9 @@ def token_entropy(spark, sf_dir):
 
 @query(
     "bigram_pmi",
-    oracle=r"""
+    oracle=rf"""
 WITH wbase AS (
-    SELECT list_filter(
-               list_transform(regexp_split_to_array(trim(text), '\s+'),
-                              t -> regexp_replace(lower(t), '[^a-z]', '', 'g')),
-               w -> length(w) > 0) AS words
+    SELECT {words_sql()} AS words
     FROM documents
 ), bi AS (
     SELECT unnest(list_transform(range(1, len(words)),
@@ -1233,13 +1222,10 @@ def cms_heavy_hitters(spark, sf_dir):
 
 @query(
     "source_overlap",
-    oracle=r"""
+    oracle=rf"""
 WITH wbase AS (
     SELECT doc_id, source,
-           list_filter(
-               list_transform(regexp_split_to_array(trim(text), '\s+'),
-                              t -> regexp_replace(lower(t), '[^a-z]', '', 'g')),
-               w -> length(w) > 0) AS words
+           {words_sql()} AS words
     FROM documents
 ), sh AS (
     SELECT source, unnest(list_distinct(
@@ -1319,13 +1305,10 @@ _LM_K = 0.5  # add-k smoothing
 
 @query(
     "lm_perplexity",
-    oracle=r"""
+    oracle=rf"""
 WITH wbase AS (
     SELECT doc_id,
-           list_filter(
-               list_transform(regexp_split_to_array(trim(text), '\s+'),
-                              t -> regexp_replace(lower(t), '[^a-z]', '', 'g')),
-               w -> length(w) > 0) AS words
+           {words_sql()} AS words
     FROM documents
 ), bi AS (
     SELECT doc_id, unnest(list_transform(range(1, len(words)),
@@ -1413,13 +1396,10 @@ def lm_perplexity(spark, sf_dir):
 
 @query(
     "ngram_novelty",
-    oracle=r"""
+    oracle=rf"""
 WITH wbase AS (
     SELECT doc_id,
-           list_filter(
-               list_transform(regexp_split_to_array(trim(text), '\s+'),
-                              t -> regexp_replace(lower(t), '[^a-z]', '', 'g')),
-               w -> length(w) > 0) AS words
+           {words_sql()} AS words
     FROM documents
 ), sh AS (
     SELECT doc_id, unnest(list_distinct(
@@ -1487,10 +1467,7 @@ _BP_MIN_DOCS = 2
     oracle=rf"""
 WITH wbase AS (
     SELECT doc_id, source,
-           list_filter(
-               list_transform(regexp_split_to_array(trim(text), '\s+'),
-                              t -> regexp_replace(lower(t), '[^a-z]', '', 'g')),
-               w -> length(w) > 0) AS words
+           {words_sql()} AS words
     FROM documents
 ), sh AS (
     SELECT DISTINCT doc_id, source, unnest(list_distinct(
@@ -1557,10 +1534,7 @@ _PHRASE = ("table", "scan")
     oracle=rf"""
 WITH wbase AS (
     SELECT doc_id,
-           list_filter(
-               list_transform(regexp_split_to_array(trim(text), '\s+'),
-                              t -> regexp_replace(lower(t), '[^a-z]', '', 'g')),
-               w -> length(w) > 0) AS words
+           {words_sql()} AS words
     FROM documents
 ), pos AS (
     SELECT doc_id, unnest(words) AS word,
@@ -1695,10 +1669,7 @@ _DSIR_TARGET = "src0"  # the "high-quality domain" proxy the sampler aims at
     oracle=rf"""
 WITH sbase AS (
     SELECT doc_id, source,
-           list_filter(
-               list_transform(regexp_split_to_array(trim(text), '\s+'),
-                              t -> regexp_replace(lower(t), '[^a-z]', '', 'g')),
-               w -> length(w) > 0) AS words
+           {words_sql()} AS words
     FROM documents
 ), f AS (
     SELECT doc_id, source,
@@ -1803,10 +1774,7 @@ def _qc_oracle() -> str:
     sql = rf"""
 WITH wbase AS (
     SELECT doc_id, source,
-           list_filter(
-               list_transform(regexp_split_to_array(trim(text), '\s+'),
-                              t -> regexp_replace(lower(t), '[^a-z]', '', 'g')),
-               w -> length(w) > 0) AS words
+           {words_sql()} AS words
     FROM documents
 ), tf AS (
     SELECT doc_id, source,
@@ -2048,13 +2016,10 @@ def _bpe_chain(steps: int = _BPE_STEPS) -> str:
     in sentinel spaces, so a pair can only match on symbol boundaries and
     replacement is left-to-right non-overlapping in both engines. The ONE
     recurrence shared by the bpe_train and bpe_encode oracles."""
-    sql = r"""
+    sql = rf"""
 WITH wbase AS (
     SELECT doc_id, source,
-           list_filter(
-               list_transform(regexp_split_to_array(trim(text), '\s+'),
-                              t -> regexp_replace(lower(t), '[^a-z]', '', 'g')),
-               w -> length(w) > 0) AS words
+           {words_sql()} AS words
     FROM documents
 ), dic AS MATERIALIZED (
     SELECT w AS word, count(*)::BIGINT AS c
@@ -2387,10 +2352,7 @@ _LEX_NQ, _LEX_TOPK = 10, 5
     oracle=rf"""
 WITH wbase AS (
     SELECT doc_id,
-           list_filter(
-               list_transform(regexp_split_to_array(trim(text), '\s+'),
-                              t -> regexp_replace(lower(t), '[^a-z]', '', 'g')),
-               w -> length(w) > 0) AS words
+           {words_sql()} AS words
     FROM documents
 ), tf AS (
     SELECT doc_id, ('0x' || substr(md5(w), 1, 8))::BIGINT AS x,

@@ -18,109 +18,18 @@ reading runs on executors, one file per partition task. This is the
 pattern for wrapping ANY non-Spark-native format (proprietary archives,
 tar shards, API pages) as a parallel scan; Spark handles scheduling,
 retries, and downstream shuffle exactly as for built-in sources.
-
-The WRITE face (``letter_files``, :class:`LetterFilesWriter`) completes
-the plugin surface — batch read, stream read, and a two-phase-commit
-batch write of the reference's per-letter sink (A15):
-
-    df.write.format("letter_files").mode("overwrite").save(out_dir)
 """
 
 from __future__ import annotations
-
-import os
-import shutil
-import uuid
-from dataclasses import dataclass, field
 
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
     DataSourceStreamReader,
-    DataSourceStreamWriter,
-    DataSourceWriter,
     InputPartition,
-    WriterCommitMessage,
 )
 
 FORMAT_NAME = "manifest_corpus"
-LETTER_FORMAT_NAME = "letter_files"
-
-# Commit manifest at the sink root, naming the job ids whose part files are
-# LIVE. Written atomically (temp + os.replace) after publish and BEFORE the
-# overwrite delete phase, so the mixed two-job window a driver crash can
-# leave behind is disambiguated: readers that filter through
-# published_part_files() see exactly one complete dataset at every instant.
-_COMMIT_MANIFEST = "_SUCCESS"
-
-
-def _write_commit_manifest(path: str, job_ids: list[str]) -> None:
-    import json
-
-    tmp = os.path.join(path, f"._SUCCESS.{uuid.uuid4().hex[:8]}.tmp")
-    with open(tmp, "w", encoding="utf-8") as fh:
-        json.dump({"job_ids": sorted(job_ids)}, fh)
-    os.replace(tmp, os.path.join(path, _COMMIT_MANIFEST))
-
-
-def _read_commit_manifest(path: str) -> list[str] | None:
-    import json
-
-    mf = os.path.join(path, _COMMIT_MANIFEST)
-    if not os.path.exists(mf):
-        return None
-    with open(mf, encoding="utf-8") as fh:
-        return list(json.load(fh).get("job_ids", []))
-
-
-def _existing_job_ids(path: str) -> set[str]:
-    """Job ids embedded in already-published batch part names
-    (``part-<pid>-<job>.txt``) — the append-mode fallback for sinks
-    written before the manifest existed."""
-    ids: set[str] = set()
-    if not os.path.isdir(path):
-        return ids
-    for entry in os.listdir(path):
-        if not entry.startswith("letter="):
-            continue
-        for part in os.listdir(os.path.join(path, entry)):
-            if part.startswith("part-") and part.endswith(".txt"):
-                stem = part[: -len(".txt")]
-                bits = stem.split("-")
-                if len(bits) == 3:
-                    ids.add(bits[2])
-    return ids
-
-
-def published_part_files(path: str) -> list[str]:
-    """The COMMITTED view of a letter_files sink: every part file a reader
-    should count, exactly once, even inside the overwrite crash window
-    where two complete job file sets coexist on disk.
-
-    Batch parts (``part-<pid>-<job>.txt``) are filtered to the job ids the
-    commit manifest names; streaming parts (``epoch-<n>-part-<pid>.txt``)
-    are always live — their epoch-keyed names are already exactly-once. A
-    sink without a manifest (legacy, or streaming-only) falls back to all
-    part files, which is correct whenever no overwrite crash is in flight.
-    """
-    manifest = _read_commit_manifest(path)
-    live = None if manifest is None else set(manifest)
-    out: list[str] = []
-    for entry in sorted(os.listdir(path)) if os.path.isdir(path) else []:
-        if not entry.startswith("letter="):
-            continue
-        d = os.path.join(path, entry)
-        for part in sorted(os.listdir(d)):
-            if part.startswith("epoch-"):
-                out.append(os.path.join(d, part))
-            elif part.startswith("part-") and part.endswith(".txt"):
-                # parse the job-id field of part-<pid>-<job>.txt exactly —
-                # a substring test would only be safe while job ids stay
-                # fixed-length hex, a non-local invariant
-                bits = part[: -len(".txt")].split("-")
-                if live is None or (len(bits) == 3 and bits[2] in live):
-                    out.append(os.path.join(d, part))
-    return out
 
 
 class _FilePartition(InputPartition):
@@ -210,230 +119,5 @@ class ManifestDataSource(DataSource):
         return ManifestStreamReader(self.options)
 
 
-@dataclass
-class _StagedFiles(WriterCommitMessage):
-    """One task's staged output: (staged_path, letter, partition_id)
-    triples — the driver decides final names at commit time."""
-
-    pairs: list = field(default_factory=list)
-
-
-def _stage_rows(staging: str, iterator) -> "_StagedFiles":
-    """Stream (letter, line) rows into per-(attempt, letter) staging files;
-    shared by the batch and streaming writers. The attempt uuid keeps
-    retries and speculative duplicates from ever colliding on a name.
-
-    Rows are read BY NAME (a positionally-swapped frame fails loudly
-    instead of writing lines as directory names), and the letter value is
-    validated path-safe — it becomes a directory component at commit."""
-    from pyspark import TaskContext
-
-    pid = TaskContext.get().partitionId()
-    attempt = uuid.uuid4().hex
-    handles: dict = {}
-    msg = _StagedFiles(pairs=[])
-    try:
-        for row in iterator:
-            letter, line = row["letter"], row["line"]
-            if letter is None or line is None:
-                raise ValueError("letter_files: letter/line must be non-null")
-            if "/" in letter or os.sep in letter or letter in ("", ".", ".."):
-                raise ValueError(f"letter_files: unsafe letter value {letter!r}")
-            fh = handles.get(letter)
-            if fh is None:
-                os.makedirs(staging, exist_ok=True)
-                staged = os.path.join(staging, f"{attempt}-{letter}.txt")
-                fh = handles[letter] = open(staged, "w", encoding="utf-8")
-                msg.pairs.append((staged, letter, pid))
-            fh.write(line + "\n")
-    finally:
-        for fh in handles.values():
-            fh.close()
-    return msg
-
-
-class LetterFilesWriter(DataSourceWriter):
-    """Two-phase-commit writer for the reference's per-letter text sink
-    (``letter=<c>/part-<task>.txt`` of ``word:[ids]`` lines, main.cc:
-    136-172 / A15) — the WRITE face of the pluggable-source surface.
-
-    Protocol (the part that matters at scale): each task streams its rows
-    into STAGING files named by a per-attempt uuid and returns the
-    (staged, final) manifest as its commit message; nothing under the
-    final layout is touched by executors. The driver publishes renames
-    only in ``commit()`` — so task retries and speculative duplicates
-    leave dead staging files, never half-written or duplicated visible
-    output, and a failed JOB publishes nothing (``abort()`` discards
-    staging). Final names carry a job-unique id
-    (``part-<task>-<job>.txt``) so ``mode('append')`` accretes instead of
-    silently replacing a prior job's same-numbered parts, and overwrite
-    publishes ALL new files BEFORE deleting prior-job files: a driver
-    crash mid-commit leaves a mix of two complete file sets
-    distinguishable by job id — never a half-written file, and never a
-    window with neither dataset present. A ``_SUCCESS`` commit manifest
-    naming the LIVE job ids is atomically flipped between the publish and
-    delete phases, so manifest-aware readers (:func:`published_part_files`)
-    see exactly one complete dataset at every instant of that window.
-    This is the v1 FileOutputCommitter contract, re-expressed through the
-    Python DataSource API; on an object store the same message flow
-    carries multipart-upload ids instead of rename paths. Assumes
-    executors and driver share a filesystem (true in local mode and on
-    NFS/DBFS-style mounts).
-
-    Input contract: ``(letter string, line string)`` —
-    ``operators.inverted_index.format_output``'s shape; callers that need
-    the reference's in-file order repartition by letter and
-    sortWithinPartitions first, exactly as for ``write_letter_files``.
-    """
-
-    def __init__(self, options, overwrite: bool):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("letter_files requires a save path")
-        self.overwrite = overwrite
-        self.staging = os.path.join(self.path, "_staging")
-        # driver-generated, pickled to executors with the writer: stable
-        # for the job, distinct across jobs (append-safety + the
-        # publish-before-delete overwrite below key off it)
-        self.job_id = uuid.uuid4().hex[:12]
-
-    def write(self, iterator):
-        return _stage_rows(self.staging, iterator)
-
-    def commit(self, messages):
-        # publish FIRST (new names can't collide: the job id is in them) …
-        for m in messages:
-            if m is None:
-                continue
-            for staged, letter, pid in m.pairs:
-                final = os.path.join(
-                    self.path,
-                    f"letter={letter}",
-                    f"part-{pid:05d}-{self.job_id}.txt",
-                )
-                os.makedirs(os.path.dirname(final), exist_ok=True)
-                os.replace(staged, final)
-        # … then flip the commit manifest to the winning job set — the
-        # ATOMIC publish point for manifest-aware readers
-        # (published_part_files): before this os.replace they see the old
-        # dataset, after it the new one, never a mix, whatever instant a
-        # driver crash freezes this method at. Overwrite names this job
-        # alone; append accretes onto the prior live set (manifest ids, or
-        # ids recovered from part names for pre-manifest sinks) …
-        os.makedirs(self.path, exist_ok=True)
-        if self.overwrite:
-            live = [self.job_id]
-        else:
-            # union the prior manifest with the job ids recoverable from
-            # published part names: two concurrent appends each read the
-            # manifest before the other's commit, so manifest-only
-            # accretion would let the second _SUCCESS drop the first
-            # job's (already published) files from the committed view.
-            # Contract note: a CRASHED overwrite must be retried (or its
-            # losers swept) before appends resume — append cannot tell an
-            # unretired overwrite loser from a racing append's files, so
-            # it deliberately keeps everything on disk.
-            prior = set(_read_commit_manifest(self.path) or [])
-            prior |= _existing_job_ids(self.path)
-            live = sorted(prior | {self.job_id})
-        _write_commit_manifest(self.path, live)
-        # … and FINALLY, for overwrite, retire every part file a previous
-        # job published. A crash between the phases leaves both complete
-        # datasets on disk (distinguishable by job id, disambiguated by
-        # the manifest) — never neither, never a half-written file.
-        if self.overwrite and os.path.isdir(self.path):
-            for entry in os.listdir(self.path):
-                if not entry.startswith("letter="):
-                    continue
-                d = os.path.join(self.path, entry)
-                for part in os.listdir(d):
-                    if part.startswith("part-") and self.job_id not in part:
-                        os.remove(os.path.join(d, part))
-                if not os.listdir(d):
-                    os.rmdir(d)
-        shutil.rmtree(self.staging, ignore_errors=True)
-
-    def abort(self, messages):
-        shutil.rmtree(self.staging, ignore_errors=True)
-
-
-class LetterFilesStreamWriter(DataSourceStreamWriter):
-    """Streaming face of the same sink — per-MICROBATCH two-phase commit.
-
-    ``write()`` stages exactly like the batch writer (a task doesn't know
-    its epoch); ``commit(messages, batchId)`` assigns the final names WITH
-    the epoch embedded (``letter=<c>/epoch-<batchId>-part-<task>.txt``).
-    That naming is the idempotence contract: after a failure, Structured
-    Streaming replays the same batchId from the checkpointed offsets, the
-    re-publish ``os.replace``s onto the SAME names, and the sink holds
-    exactly one copy per (epoch, task) — the file-name-by-epoch trick
-    every exactly-once file sink (including Spark's own FileStreamSink
-    manifest) is built on. Append output mode only (enforced in
-    streamWriter): complete/update would need epoch supersession the
-    per-epoch file layout deliberately doesn't express — failing loudly
-    beats silently accreting cumulative snapshots. Microbatch epochs
-    commit sequentially, so once ``commit(batchId)`` has renamed its
-    files, anything still under staging is a dead attempt (a failed or
-    zombie-speculative task of this or an earlier epoch) — commit sweeps
-    staging empty, bounding the leak a long-running query would
-    otherwise accumulate."""
-
-    def __init__(self, options):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("letter_files requires .option('path', <dir>)")
-        self.staging = os.path.join(self.path, "_staging")
-
-    def write(self, iterator):
-        return _stage_rows(self.staging, iterator)
-
-    def commit(self, messages, batchId: int):
-        for m in messages:
-            if m is None:
-                continue
-            for staged, letter, pid in m.pairs:
-                final = os.path.join(
-                    self.path,
-                    f"letter={letter}",
-                    f"epoch-{batchId:010d}-part-{pid:05d}.txt",
-                )
-                os.makedirs(os.path.dirname(final), exist_ok=True)
-                os.replace(staged, final)
-        # epochs are sequential: every file still staged belongs to a dead
-        # attempt — sweep so a long-lived query can't grow staging forever
-        shutil.rmtree(self.staging, ignore_errors=True)
-
-    def abort(self, messages, batchId: int):
-        for m in messages:
-            if m is None:
-                continue
-            for staged, _letter, _pid in m.pairs:
-                if os.path.exists(staged):
-                    os.remove(staged)
-
-
-class LetterFilesDataSource(DataSource):
-    @classmethod
-    def name(cls):
-        return LETTER_FORMAT_NAME
-
-    def schema(self):
-        return "letter string, line string"
-
-    def writer(self, schema, overwrite: bool):
-        return LetterFilesWriter(self.options, overwrite)
-
-    def streamWriter(self, schema, overwrite: bool):
-        if overwrite:
-            # complete/update output modes truncate the sink each epoch;
-            # this layout is append-only by design — refuse loudly rather
-            # than accrete cumulative snapshots that double-count on read
-            raise ValueError(
-                "letter_files streaming sink supports append output mode only"
-            )
-        return LetterFilesStreamWriter(self.options)
-
-
 def register(spark) -> None:
     spark.dataSource.register(ManifestDataSource)
-    spark.dataSource.register(LetterFilesDataSource)

@@ -31,7 +31,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from mapreduce_model_spark.operators.inverted_index import word_doc_pairs
+from mapreduce_model_spark.operators.inverted_index import index_from_pairs, word_doc_pairs
 
 
 def start_streaming_index(
@@ -50,8 +50,6 @@ def start_streaming_index(
         pairs = word_doc_pairs(batch_df)
         sess = batch_df.sparkSession
         if os.path.exists(pairs_path):
-            from pyspark.sql import functions as F  # noqa: F401
-
             seen = sess.read.parquet(pairs_path)
             pairs = pairs.join(seen, ["word", "doc_id"], "left_anti")
         pairs.write.mode("append").parquet(pairs_path)
@@ -105,16 +103,7 @@ def drain_streaming_index(query, n_files: int, timeout_s: float = 120.0) -> None
 
 def current_index(spark: SparkSession, pairs_path: str) -> DataFrame:
     """Materialize the presentation index (letter, word, docs, n_docs)
-    from the maintained pair table — same derivation as batch
-    ``invert``, so streaming and batch results are comparable row-for-row."""
-    from pyspark.sql import functions as F
-
-    pairs = spark.read.parquet(pairs_path)
-    return (
-        pairs.groupBy("word")
-        .agg(F.sort_array(F.collect_set("doc_id")).alias("docs"))
-        .withColumn("letter", F.substring("word", 1, 1))
-        .withColumn("n_docs", F.size("docs"))
-        .select("letter", "word", "docs", "n_docs")
-        .orderBy(F.col("letter").asc(), F.col("n_docs").desc(), F.col("word").asc())
-    )
+    from the maintained pair table — the same ``index_from_pairs`` as
+    batch ``invert``, so streaming and batch results are comparable
+    row-for-row."""
+    return index_from_pairs(spark.read.parquet(pairs_path))

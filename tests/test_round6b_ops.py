@@ -8,6 +8,7 @@ with numpy's covariance).
 """
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from mapreduce_model_spark.registry import QUERIES
@@ -139,13 +140,19 @@ def test_semantic_dedup_keep_contract(spark, sf_dir):
         assert first["sem_score"] is None and first["is_kept"], first
 
 
-def test_quality_classifier_matches_numpy_gd(spark, sf_dir):
+@pytest.mark.parametrize("gate", [None, 0], ids=["local-finish", "distributed"])
+def test_quality_classifier_matches_numpy_gd(spark, sf_dir, monkeypatch, gate):
     """Defense in depth behind the unrolled-CTE oracle: rebuild the exact
     features and run the same 10 GD steps in numpy; per-doc probabilities
-    must agree to the rounding grain."""
+    must agree to the rounding grain — on both sides of the local-finish
+    gate (gate 0 forces the distributed GD loop)."""
     import hashlib
 
+    from mapreduce_model_spark import queries_text
     from mapreduce_model_spark.queries_text import _QC_B, _QC_ITERS, _QC_LR
+
+    if gate is not None:
+        monkeypatch.setattr(queries_text, "_QC_LOCAL_DOCS", gate)
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").collect()
     import re
@@ -249,10 +256,16 @@ def _py_bpe(spark, sf_dir):
     return expected, segs, wc
 
 
-def test_bpe_train_matches_python_recompute(spark, sf_dir):
+@pytest.mark.parametrize("gate", [None, 0], ids=["local-finish", "distributed"])
+def test_bpe_train_matches_python_recompute(spark, sf_dir, monkeypatch, gate):
     """The whole greedy training trajectory equals the reference python
     BPE; and the winning-pair count sequence is non-increasing (merges
-    only ever shrink pair mass)."""
+    only ever shrink pair mass) — on both sides of the local-finish gate
+    (gate 0 forces the distributed merge loop)."""
+    from mapreduce_model_spark import queries_text
+
+    if gate is not None:
+        monkeypatch.setattr(queries_text, "_BPE_LOCAL_VOCAB", gate)
     expected, _, _ = _py_bpe(spark, sf_dir)
     got = sorted(
         QUERIES["bpe_train"](spark, sf_dir).collect(), key=lambda r: r["step"]
@@ -467,6 +480,28 @@ def test_lexical_topk_matches_python_recompute(spark, sf_dir):
         exp_d, exp_cos = expected[r["query_id"]][r["rank"] - 1]
         assert r["doc_id"] == exp_d, (r, expected[r["query_id"]])
         assert abs(r["cosine"] - exp_cos) < 1e-4
+
+
+def test_ivfpq_recall_faces_keep_their_own_truth(spark, sf_dir, tmp_path):
+    """ivfpq_recall_report queries ``vec_id < 20``; ivfpq_recall_sampled
+    queries the 20 lowest ids. On a corpus with id gaps these are
+    different query sets, so the sampled face run after the report must
+    still score 20 queries × K truth pairs, not reuse the report's
+    memoized truth (10 queries here)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mapreduce_model_spark.queries_similarity import _IVFPQR_K, _IVFPQR_NQ
+
+    emb = pq.read_table(f"{sf_dir}/embeddings.parquet")
+    ids = pa.array([2 * v for v in emb.column("vec_id").to_pylist()], pa.int64())
+    pq.write_table(emb.set_column(0, "vec_id", ids), str(tmp_path / "embeddings.parquet"))
+    gappy = str(tmp_path)
+
+    report = QUERIES["ivfpq_recall_report"](spark, gappy).collect()
+    assert {r["n_truth"] for r in report} == {_IVFPQR_NQ // 2 * _IVFPQR_K}
+    sampled = QUERIES["ivfpq_recall_sampled"](spark, gappy).collect()
+    assert {r["n_truth"] for r in sampled} == {_IVFPQR_NQ * _IVFPQR_K}
 
 
 def test_similarity_ann_ivfpq_contract(spark, sf_dir):

@@ -120,126 +120,6 @@ def test_decile_truth_consistent_with_float_threshold(spark, sf_dir):
     assert a == b
 
 
-def _read_letter_dirs(out: str) -> dict[str, list[str]]:
-    import os
-
-    got: dict[str, list[str]] = {}
-    if not os.path.isdir(out):
-        return got
-    for entry in sorted(os.listdir(out)):
-        if not entry.startswith("letter="):
-            continue
-        letter = entry.split("=", 1)[1]
-        lines: list[str] = []
-        d = os.path.join(out, entry)
-        parts = (p for p in os.listdir(d) if p.startswith(("part-", "epoch-")))
-        for part in sorted(parts):
-            with open(os.path.join(d, part), encoding="utf-8") as fh:
-                lines.extend(fh.read().splitlines())
-        got[letter] = lines
-    return got
-
-
-def test_letter_files_datasource_matches_builtin_sink(spark, tmp_path):
-    """The v2 write path (letter_files DataSource, two-phase staged
-    commit) must publish byte-identical per-letter content, in-file order
-    included, to the built-in partitioned text sink — same index, same
-    layout contract (A15). Also: no _staging residue after commit, and
-    mode('overwrite') replaces prior contents instead of accreting."""
-    from mapreduce_model_spark.operators.inverted_index import (
-        format_output,
-        invert,
-        write_letter_files,
-    )
-    from mapreduce_model_spark.sources.manifest import read_corpus
-    from mapreduce_model_spark.sources.pyds import register
-
-    register(spark)
-    index = invert(read_corpus(spark, "/root/reference/checker/test_small.txt"))
-    builtin_dir, ds_dir = str(tmp_path / "builtin"), str(tmp_path / "ds")
-    write_letter_files(index, builtin_dir)
-
-    ordered = format_output(
-        index.repartition("letter").sortWithinPartitions(
-            "letter", F.col("n_docs").desc(), F.col("word").asc()
-        )
-    )
-    # write twice in overwrite mode: the second publish must fully replace
-    # the first (otherwise part files accrete and lines double)
-    for _ in range(2):
-        ordered.write.format("letter_files").mode("overwrite").save(ds_dir)
-
-    got, want = _read_letter_dirs(ds_dir), _read_letter_dirs(builtin_dir)
-    assert got == want and got, "v2 sink diverged from the built-in sink"
-    import os
-
-    assert not os.path.exists(os.path.join(ds_dir, "_staging"))
-
-
-def test_letter_files_stream_writer_end_to_end(spark, tmp_path):
-    """The reference's pipeline as pluggable v2 streaming END TO END:
-    manifest_corpus streams the corpus in (one doc per microbatch),
-    word_doc_pairs runs per batch, and the letter_files STREAM writer
-    publishes per-epoch files. The union of all epochs' lines must equal
-    the batch-computed (word, doc) pairs, and ≥3 epochs must exist (one
-    per admitted document — proof the per-epoch commit path ran
-    repeatedly, not one big batch)."""
-    import os
-    import time
-
-    from mapreduce_model_spark.operators.inverted_index import word_doc_pairs
-    from mapreduce_model_spark.sources.manifest import read_corpus
-    from mapreduce_model_spark.sources.pyds import register
-
-    manifest = "/root/reference/checker/test_small.txt"
-    register(spark)
-    out = str(tmp_path / "stream_out")
-
-    stream = (
-        spark.readStream.format("manifest_corpus")
-        .option("path", manifest)
-        .option("filesPerBatch", "1")
-        .load()
-    )
-    lines = word_doc_pairs(stream).select(
-        F.substring("word", 1, 1).alias("letter"),
-        F.concat_ws(":", "word", F.col("doc_id").cast("string")).alias("line"),
-    )
-    q = (
-        lines.writeStream.format("letter_files")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        want = {
-            f"{r.word}:{r.doc_id}"
-            for r in word_doc_pairs(read_corpus(spark, manifest)).collect()
-        }
-        deadline = time.time() + 120
-        got: set[str] = set()
-        while time.time() < deadline:
-            got = {
-                ln
-                for lns in _read_letter_dirs(out).values()
-                for ln in lns
-            }
-            if got == want:
-                break
-            time.sleep(0.5)
-        assert got == want
-        epochs = {
-            p.split("-")[1]
-            for d in os.listdir(out)
-            if d.startswith("letter=")
-            for p in os.listdir(os.path.join(out, d))
-            if p.startswith("epoch-")
-        }
-        assert len(epochs) >= 3, f"expected ≥3 epochs, saw {sorted(epochs)}"
-    finally:
-        q.stop()
-
-
 def test_ngram_udtf_matches_jvm_on_nonascii_whitespace(spark, sf_dir):
     """The UDTF's Python tokenizer must agree with the JVM words_array on
     NON-ASCII whitespace: Python's \\s is Unicode-aware (splits U+00A0),

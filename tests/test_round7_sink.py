@@ -1,37 +1,30 @@
-"""Round-7 crash-safety pins for the letter_files two-phase-commit sink
-(sources/pyds.py) — the UNHAPPY paths the round-trip tests don't reach:
-a task abort between stage and publish, an epoch replayed after a crash,
-and the overwrite crash window where two complete job file sets coexist
-(disambiguated by the new _SUCCESS commit manifest).
+"""Crash-safety pins for the letter sink (``write_letter_files``): the
+UNHAPPY paths the round-trip tests don't reach — a failed Spark job, a
+publish stopped between its rename and delete phases, and the exact parse
+of the job-id field that decides which part files are live.
 
-Unit-level on the writer objects on purpose: a crash "between phases" is a
-precise instant no end-to-end Spark run can stop at deterministically, but
-the writer protocol is plain Python — staging and commit messages are
-constructed exactly as _stage_rows builds them, and every assertion is on
-the real on-disk layout readers see.
+Crashes at a precise instant of the publish are injected by
+making one step of it raise; every assertion is on the real on-disk layout
+readers see.
 """
 
 import json
 import os
-import uuid
 
-from mapreduce_model_spark.sources.pyds import (
-    LetterFilesStreamWriter,
-    LetterFilesWriter,
-    _StagedFiles,
+import pytest
+from pyspark.sql import functions as F
+
+from mapreduce_model_spark.operators import inverted_index
+from mapreduce_model_spark.operators.inverted_index import (
+    invert,
     published_part_files,
+    write_letter_files,
 )
 
 
-def _stage(out: str, letter: str, lines: list[str], pid: int = 0) -> _StagedFiles:
-    """Stage one task's output exactly like _stage_rows: a per-attempt
-    uuid-named file under <out>/_staging plus the commit-message triple."""
-    staging = os.path.join(out, "_staging")
-    os.makedirs(staging, exist_ok=True)
-    staged = os.path.join(staging, f"{uuid.uuid4().hex}-{letter}.txt")
-    with open(staged, "w", encoding="utf-8") as fh:
-        fh.write("".join(ln + "\n" for ln in lines))
-    return _StagedFiles(pairs=[(staged, letter, pid)])
+def _index(spark, texts: list[str]):
+    docs = spark.createDataFrame(list(enumerate(texts, 1)), "doc_id long, text string")
+    return invert(docs)
 
 
 def _visible(out: str) -> dict[str, list[str]]:
@@ -44,148 +37,105 @@ def _visible(out: str) -> dict[str, list[str]]:
     return got
 
 
-def _raw_parts(out: str) -> list[str]:
-    parts = []
-    for entry in sorted(os.listdir(out)):
-        if entry.startswith("letter="):
-            parts += sorted(os.listdir(os.path.join(out, entry)))
-    return parts
+def _tree(out: str) -> dict[str, bytes]:
+    """Every file outside ``_staging`` with its bytes."""
+    snap = {}
+    for root, dirs, files in os.walk(out):
+        dirs[:] = [d for d in dirs if d != "_staging"]
+        for name in files:
+            p = os.path.join(root, name)
+            with open(p, "rb") as fh:
+                snap[os.path.relpath(p, out)] = fh.read()
+    return snap
 
 
-def test_stream_epoch_abort_then_retry_lands_exactly_once(tmp_path):
-    """Inject a failure between stage and publish within an epoch: nothing
-    may be visible (staged-only output is invisible by construction, and
-    abort removes the residue); the RETRIED epoch must land its files
-    exactly once; a checkpoint REPLAY of the same epoch must republish
-    onto the same names — one copy per (epoch, task), byte-stable."""
-    out = str(tmp_path / "stream")
-    w = LetterFilesStreamWriter({"path": out})
-
-    # epoch 0, attempt 1: staged, then the job dies before commit()
-    m1 = _stage(out, "a", ["apple:1", "ant:2"])
-    assert not [e for e in os.listdir(out) if e.startswith("letter=")]
-    w.abort([m1], 0)
-    assert not os.path.exists(m1.pairs[0][0]), "abort left staged residue"
-
-    # epoch 0 retried: fresh attempt, commit publishes exactly once
-    m2 = _stage(out, "a", ["apple:1", "ant:2"])
-    w.commit([m2], 0)
-    assert _visible(out) == {"a": ["apple:1", "ant:2"]}
-    assert _raw_parts(out) == ["epoch-0000000000-part-00000.txt"]
-    assert not os.listdir(os.path.join(out, "_staging")) if os.path.isdir(
-        os.path.join(out, "_staging")
-    ) else True
-
-    # epoch 0 REPLAYED after a post-commit crash (checkpointed offsets
-    # re-run the same batchId): republish lands on the SAME name
-    m3 = _stage(out, "a", ["apple:1", "ant:2"])
-    w.commit([m3], 0)
-    assert _raw_parts(out) == ["epoch-0000000000-part-00000.txt"]
-    assert _visible(out) == {"a": ["apple:1", "ant:2"]}
+def _live_job(out: str) -> str:
+    with open(os.path.join(out, "_SUCCESS"), encoding="utf-8") as fh:
+        return json.load(fh)["job_id"]
 
 
-def test_batch_job_abort_publishes_nothing(tmp_path):
-    """A failed batch JOB publishes nothing: abort() discards staging and
-    no letter= directory ever appears."""
-    out = str(tmp_path / "batch")
-    w = LetterFilesWriter({"path": out}, overwrite=True)
-    m = _stage(out, "b", ["bear:3"])
-    w.abort([m])
-    assert not os.path.isdir(os.path.join(out, "_staging"))
-    assert not os.path.isdir(out) or not [
-        e for e in os.listdir(out) if e.startswith("letter=")
-    ]
+def test_batch_job_abort_publishes_nothing(spark, tmp_path):
+    """A failed write JOB publishes nothing: the previous index stays
+    byte-identical on disk, and the next successful write sweeps any
+    staging residue a dead job left."""
+    out = str(tmp_path / "idx")
+    write_letter_files(_index(spark, ["apple ant", "bear apple"]), out)
+    before = _tree(out)
+    assert _visible(out) == {"a": ["apple:[1 2]", "ant:[1]"], "b": ["bear:[2]"]}
 
-
-def test_overwrite_crash_window_reads_one_dataset(tmp_path):
-    """The overwrite crash window: job B crashes after publishing its part
-    files but BEFORE flipping the manifest — both complete file sets are
-    on disk, and manifest-aware readers must still see exactly job A's
-    dataset. After B is retried to completion, exactly B's dataset — and
-    zombie files from any dead job id stay invisible."""
-    out = str(tmp_path / "ow")
-
-    wa = LetterFilesWriter({"path": out}, overwrite=True)
-    wa.commit([_stage(out, "a", ["apple:1"])])
-    assert _visible(out) == {"a": ["apple:1"]}
-    manifest = json.load(open(os.path.join(out, "_SUCCESS")))
-    assert manifest["job_ids"] == [wa.job_id]
-
-    # job B: publish phase only (the exact crash instant — files renamed
-    # into the final layout with B's job id, manifest never flipped)
-    wb = LetterFilesWriter({"path": out}, overwrite=True)
-    staged = _stage(out, "a", ["avocado:9"]).pairs[0][0]
-    final_b = os.path.join(out, "letter=a", f"part-00000-{wb.job_id}.txt")
-    os.replace(staged, final_b)
-    assert len(_raw_parts(out)) == 2, "both job file sets should coexist"
-    assert _visible(out) == {"a": ["apple:1"]}, (
-        "reader must keep seeing job A until the manifest flips"
+    bad = _index(spark, ["cat"]).withColumn(
+        "word",
+        F.when(F.col("n_docs") > 0, F.raise_error(F.lit("boom"))).otherwise(F.col("word")),
     )
+    with pytest.raises(Exception, match="boom"):
+        write_letter_files(bad, out)
+    assert _tree(out) == before
+    # a process killed mid-job leaves its staged parts behind
+    dead = os.path.join(out, "_staging", "deadbeef0000", "letter=c")
+    os.makedirs(dead)
+    with open(os.path.join(dead, "part-00000-x.c000.txt"), "w") as fh:
+        fh.write("cow:[7]\n")
+    assert _visible(out) == {"a": ["apple:[1 2]", "ant:[1]"], "b": ["bear:[2]"]}
 
-    # job B retried end-to-end: manifest flips, A (and B's dead attempt)
-    # retired, reader sees exactly the new dataset
-    wb2 = LetterFilesWriter({"path": out}, overwrite=True)
-    wb2.commit([_stage(out, "a", ["avocado:9"])])
-    assert _visible(out) == {"a": ["avocado:9"]}
-    assert _raw_parts(out) == [f"part-00000-{wb2.job_id}.txt"]
-
-    # a zombie from a dead job id reappearing (e.g. a delayed NFS rename)
-    # stays invisible to manifest-aware readers
-    zombie = os.path.join(out, "letter=a", "part-00007-deadbeef0000.txt")
-    with open(zombie, "w", encoding="utf-8") as fh:
-        fh.write("zombie:0\n")
-    assert _visible(out) == {"a": ["avocado:9"]}
-
-
-def test_append_manifest_accretes_job_ids(tmp_path):
-    """mode('append'): each job ADDS its id to the live set — the reader's
-    view is the union of all committed jobs, and ids of a pre-manifest
-    sink are recovered from the part names."""
-    out = str(tmp_path / "ap")
-    w1 = LetterFilesWriter({"path": out}, overwrite=False)
-    w1.commit([_stage(out, "c", ["cat:1"])])
-    # simulate a pre-manifest sink: drop the manifest, append again
-    os.remove(os.path.join(out, "_SUCCESS"))
-    w2 = LetterFilesWriter({"path": out}, overwrite=False)
-    w2.commit([_stage(out, "c", ["cow:2"], pid=1)])
-    manifest = json.load(open(os.path.join(out, "_SUCCESS")))
-    assert manifest["job_ids"] == sorted([w1.job_id, w2.job_id])
-    assert _visible(out) == {"c": ["cat:1", "cow:2"]}
+    write_letter_files(_index(spark, ["cat"]), out)
+    assert _visible(out) == {"c": ["cat:[1]"]}
+    assert not os.path.exists(os.path.join(out, "_staging"))
 
 
-def test_concurrent_appends_union_job_ids(tmp_path):
-    """Two appends racing at commit: each constructs its writer (and reads
-    the manifest) before the other commits. The second commit must union
-    the ids recoverable from published part names, not just the manifest
-    it read — otherwise the first job's committed files silently drop out
-    of the manifest-aware view (ADVICE r7)."""
-    out = str(tmp_path / "race")
-    w1 = LetterFilesWriter({"path": out}, overwrite=False)
-    w2 = LetterFilesWriter({"path": out}, overwrite=False)
-    # w1 frozen mid-commit: part file published, manifest not yet written
-    # (the instant a racing w2 commit can observe)
-    s1 = _stage(out, "d", ["dog:1"]).pairs[0][0]
-    final_1 = os.path.join(out, "letter=d", f"part-00000-{w1.job_id}.txt")
-    os.makedirs(os.path.dirname(final_1), exist_ok=True)
-    os.replace(s1, final_1)
-    w2.commit([_stage(out, "d", ["deer:2"], pid=1)])
-    manifest = json.load(open(os.path.join(out, "_SUCCESS")))
-    assert manifest["job_ids"] == sorted([w1.job_id, w2.job_id])
-    assert _visible(out) == {"d": ["dog:1", "deer:2"]}
+def test_overwrite_crash_window_reads_one_dataset(spark, tmp_path, monkeypatch):
+    """A publish stopped between rename and delete: both jobs' complete
+    part sets coexist on disk, and published_part_files still reads
+    exactly one of them — the old index before ``_SUCCESS`` flips, the
+    new one after. The next completed write retires both."""
+    out = str(tmp_path / "ow")
+    write_letter_files(_index(spark, ["apple"]), out)
+    job_a = _live_job(out)
+
+    class Crash(Exception):
+        pass
+
+    def crash(*_a, **_k):
+        raise Crash
+
+    # stopped after the renames, before the manifest flip
+    idx_b, idx_c = _index(spark, ["avocado"]), _index(spark, ["apricot"])
+    with monkeypatch.context() as m:
+        m.setattr(inverted_index.json, "dump", crash)
+        with pytest.raises(Crash):
+            write_letter_files(idx_b, out)
+    assert len(os.listdir(os.path.join(out, "letter=a"))) == 2
+    assert _live_job(out) == job_a
+    assert _visible(out) == {"a": ["apple:[1]"]}
+
+    # stopped after the manifest flip, before the delete phase
+    with monkeypatch.context() as m:
+        m.setattr(inverted_index.os, "remove", crash)
+        with pytest.raises(Crash):
+            write_letter_files(idx_c, out)
+    assert len(os.listdir(os.path.join(out, "letter=a"))) == 3
+    assert _live_job(out) != job_a
+    assert _visible(out) == {"a": ["apricot:[1]"]}
+
+    write_letter_files(_index(spark, ["axe"]), out)
+    assert _visible(out) == {"a": ["axe:[1]"]}
+    assert os.listdir(os.path.join(out, "letter=a")) == [
+        f"part-00000-{_live_job(out)}.txt"
+    ]
+    assert not os.path.exists(os.path.join(out, "_staging"))
 
 
-def test_published_parts_job_id_parsed_exactly(tmp_path):
-    """The reader matches the job-id FIELD of part-<pid>-<job>.txt, not a
-    substring: a live job id appearing inside another file's pid or a
-    longer dead id must not make that file visible (ADVICE r7)."""
+def test_published_parts_job_id_parsed_exactly(spark, tmp_path):
+    """The reader matches the job-id FIELD of part-<seq>-<job>.txt, not a
+    substring: a live job id appearing inside a longer dead id or a
+    malformed name must not make that file visible."""
     out = str(tmp_path / "exact")
-    w = LetterFilesWriter({"path": out}, overwrite=True)
-    w.commit([_stage(out, "e", ["elk:3"])])
+    write_letter_files(_index(spark, ["elk"]), out)
+    job = _live_job(out)
     d = os.path.join(out, "letter=e")
     # dead job whose id CONTAINS the live id as a substring
-    with open(os.path.join(d, f"part-00009-zz{w.job_id}.txt"), "w") as fh:
-        fh.write("eel:9\n")
+    with open(os.path.join(d, f"part-00009-zz{job}.txt"), "w") as fh:
+        fh.write("eel:[9]\n")
     # malformed name (extra dash field) carrying the live id
-    with open(os.path.join(d, f"part-00008-{w.job_id}-x.txt"), "w") as fh:
-        fh.write("emu:8\n")
-    assert _visible(out) == {"e": ["elk:3"]}
+    with open(os.path.join(d, f"part-00008-{job}-x.txt"), "w") as fh:
+        fh.write("emu:[8]\n")
+    assert _visible(out) == {"e": ["elk:[1]"]}

@@ -16,9 +16,12 @@ from mapreduce_model_spark.registry import table
 
 def test_letter_file_sink_round_trip(spark, sf_dir, tmp_path):
     """write_letter_files emits letter=<c>/ dirs whose concatenated lines
-    equal format_output, with per-letter (n_docs DESC, word ASC) order."""
-    idx = invert(table(spark, sf_dir, "documents").limit(300))
+    equal format_output, with per-letter (n_docs DESC, word ASC) order. A
+    second write replaces the first, leaving no .crc files or _staging."""
+    docs = table(spark, sf_dir, "documents")
     out = str(tmp_path / "letters")
+    write_letter_files(invert(docs.limit(300)), out)
+    idx = invert(docs.limit(120))
     write_letter_files(idx, out)
 
     expected: dict[str, list[str]] = {}
@@ -37,6 +40,9 @@ def test_letter_file_sink_round_trip(spark, sf_dir, tmp_path):
     assert set(got) == set(expected)
     for letter in expected:
         assert got[letter] == expected[letter], f"letter {letter}"
+    assert not glob.glob(os.path.join(out, "**", "*.crc"), recursive=True)
+    assert not glob.glob(os.path.join(out, "**", ".*.crc"), recursive=True)
+    assert not os.path.exists(os.path.join(out, "_staging"))
 
 
 def test_partitioned_parquet_round_trip(spark, sf_dir, tmp_path):

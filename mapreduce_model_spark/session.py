@@ -34,6 +34,10 @@ def get_spark(
       the reference's static equal-range reduce split (main.cc:112-118).
     - UTC session timezone so timestamp semantics match the DuckDB oracle.
     - Arrow on so any Pandas-UDF path is vectorized (never row-at-a-time).
+    - File listing on the driver: above the default 32 paths Spark lists
+      files with a distributed job on every ``spark.read`` call. The
+      manifest reader has already ``os.path.exists``-checked each path on
+      the driver, so the threshold sits above any path count read here.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
@@ -56,6 +60,8 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.sources.parallelPartitionDiscovery.parallelism", str(cpus))
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "4096")
+        # not fs.file.impl=RawLocalFileSystem: RocksDB state stores cast to LocalFileSystem
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -8,18 +8,21 @@ the same file are two documents. A missing listed file is a hard error
 (main.cc:66-70; manifest itself main.cc:182-186).
 
 Spark mapping: the manifest is tiny driver-side metadata (a file list), the
-corpus is the big data. We read all listed files in one distributed
-``spark.read.text`` scan and attach ids by joining ``input_file_name()``
-against a broadcast path→id map built from manifest order. ``doc_id`` must be
-the manifest ordinal — never a path hash (SURVEY.md §1.1).
+corpus is the big data. We read all listed files in one ``spark.read.text``
+scan and attach ids with a map lookup on ``input_file_name()``: the
+path→ids map is a plan literal built from manifest order, so attaching ids
+costs no join, no broadcast and no Spark job. ``doc_id`` must be the
+manifest ordinal — never a path hash (SURVEY.md §1.1).
 
-Scale: one scan over N files; the path→id map is O(N) strings broadcast to
-executors — fine up to tens of millions of files; beyond that, materialize
-the manifest as a small parquet dim and broadcast-join on path.
+Scale: one scan over N files; the literal holds O(N) entries and travels
+with the plan, which is fine for manifests of thousands of files. The
+file listing itself runs on the driver (``session.get_spark`` sets the
+parallel-discovery threshold), which has already checked every path.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import posixpath
 
@@ -69,18 +72,29 @@ def read_paths(spark: SparkSession, paths: list[str]) -> DataFrame:
     """Ordered path list → ``DataFrame[doc_id, text]`` (1-based positional
     ids). The programmatic front door for callers whose file lists don't
     come from a whitespace-tokenized manifest (which cannot represent
-    paths containing spaces — reference ``operator>>`` semantics)."""
-    id_rows = [(os.path.abspath(p), i + 1) for i, p in enumerate(paths)]
-    path_to_id = spark.createDataFrame(id_rows, "path: string, doc_id: int")
+    paths containing spaces — reference ``operator>>`` semantics).
+
+    Each row's ids come from a literal ``map<path, array<int>>`` holding
+    every manifest position of its file; ``explode`` of that array turns
+    one line into one row per position."""
+    ids: dict[str, list[int]] = {}
+    for i, p in enumerate(paths, start=1):
+        ids.setdefault(os.path.abspath(p), []).append(i)
+    # One JSON string literal, constant-folded into a map literal at
+    # planning: a single plan node whatever the manifest length (one
+    # create_map child per path costs seconds of Py4J calls at ~3000 paths).
+    path_to_ids = F.from_json(F.lit(json.dumps(ids)), "map<string, array<int>>")
     # Read each distinct file ONCE — a path listed twice is two doc ids
-    # (main.cc:79 positional identity), and the path→id join below fans
-    # each line out to every id holding that path; passing the duplicate
-    # to spark.read.text as well would double the lines per id.
+    # (main.cc:79 positional identity), and the explode below fans each
+    # line out to every id holding that path; passing the duplicate to
+    # spark.read.text as well would double the lines per id.
     distinct_paths = list(dict.fromkeys(paths))
     # input_file_name() is a URI: percent-encoded (space → %20) but with
     # literal '+'. url_decode is form-decoding ('+' → ' '), so protect
     # literal plus as %2B first — yields the exact filesystem path.
     uri_path = F.regexp_replace(F.input_file_name(), "^file:(//)?", "")
     decoded = F.url_decode(F.regexp_replace(uri_path, r"\+", "%2B"))
-    text = spark.read.text(distinct_paths).withColumn("path", decoded)
-    return text.join(F.broadcast(path_to_id), "path").select("doc_id", F.col("value").alias("text"))
+    return spark.read.text(distinct_paths).select(
+        F.explode(F.element_at(path_to_ids, decoded)).alias("doc_id"),
+        F.col("value").alias("text"),
+    )

@@ -2,7 +2,7 @@
 manifest corpus format.
 
 ``sources.manifest`` reads the corpus with ``spark.read.text`` + a
-broadcast path→id join. This module exposes the SAME format as a
+literal path→ids map lookup. This module exposes the SAME format as a
 first-class pluggable source instead:
 
     spark.dataSource.register(ManifestDataSource)

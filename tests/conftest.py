@@ -1,3 +1,5 @@
+import random
+
 import pytest
 
 from mapreduce_model_spark import get_spark
@@ -15,3 +17,26 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def generated_corpus(tmp_path):
+    """A 40-file reference-format corpus: more than the 32 paths above which
+    Spark's default lists files with a distributed job, one file listed twice
+    (positions 3 and 41 — two documents), mixed case, punctuation, digits and
+    multi-line files. Returns ``(manifest path, {doc_id: text})``."""
+    rng = random.Random(7)
+    vocab = ["alpha", "Beta", "GAMMA", "delta!", "don't", "x-ray", "Zeta,", "eta.",
+             "2024", "theta", "iota?", "Kappa", "lambda", "mu", "(nu)", "xi;"]
+    corpus = tmp_path / "corpus"
+    corpus.mkdir()
+    paths = []
+    for i in range(40):
+        lines = [" ".join(rng.choices(vocab, k=rng.randint(1, 12))) for _ in range(rng.randint(1, 4))]
+        f = corpus / f"doc{i:02d}.txt"
+        f.write_text("\n".join(lines) + "\n")
+        paths.append(f)
+    paths.append(paths[2])
+    manifest = tmp_path / "manifest.txt"
+    manifest.write_text(f"{len(paths)}\n" + "\n".join(str(p) for p in paths) + "\n")
+    return str(manifest), {i: p.read_text() for i, p in enumerate(paths, start=1)}

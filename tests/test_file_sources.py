@@ -120,6 +120,36 @@ def test_manifest_datasource_matches_manifest_reader(spark):
     assert len(via_ds) > 0
 
 
+def test_manifest_datasource_matches_manifest_reader_generated(spark, generated_corpus):
+    """Generated-corpus sibling of the parity test above (more than 32 files,
+    one file listed twice): the manifest_corpus DataSource and read_corpus
+    carry the same tokens per document, and both indexes equal the
+    pure-Python model's."""
+    from mapreduce_model_spark.operators.inverted_index import invert
+    from mapreduce_model_spark.sources.manifest import read_corpus
+    from mapreduce_model_spark.sources.pyds import register
+    from tests.pymodel import inverted_index
+
+    manifest, docs = generated_corpus
+    register(spark)
+    ds = spark.read.format("manifest_corpus").option("path", manifest).load()
+    text = read_corpus(spark, manifest)
+
+    def tokens(df):
+        by_doc = {}
+        for r in df.collect():
+            by_doc.setdefault(r.doc_id, []).extend(r.text.split())
+        return {d: sorted(t) for d, t in by_doc.items()}
+
+    expected_tokens = {d: sorted(t.split()) for d, t in docs.items()}
+    assert tokens(ds) == expected_tokens
+    assert tokens(text) == expected_tokens
+    expected = sorted((w[0], w, tuple(ids)) for w, ids in inverted_index(docs).items())
+    assert any(3 in ids and 41 in ids for _, _, ids in expected)
+    for df in (ds, text):
+        assert sorted((r.letter, r.word, tuple(r.docs)) for r in invert(df).collect()) == expected
+
+
 def test_manifest_datasource_missing_file_fails(spark, tmp_path):
     from mapreduce_model_spark.sources.pyds import register
 
@@ -198,6 +228,35 @@ def test_manifest_datasource_streams_incrementally(spark, tmp_path):
         assert n_batches >= 3, f"expected ≥3 microbatches, saw {n_batches}"
     finally:
         q.stop()
+
+
+def test_manifest_datasource_streams_incrementally_generated(spark, generated_corpus, tmp_path):
+    """Generated-corpus sibling of the streaming test above: 41 manifest
+    entries at filesPerBatch=16 arrive over 3 microbatches, and the streamed
+    documents equal the batch read and the files on disk."""
+    from mapreduce_model_spark.sources.pyds import register
+    from mapreduce_model_spark.streaming.index import drain_streaming_index
+
+    manifest, docs = generated_corpus
+    register(spark)
+    q = (
+        spark.readStream.format("manifest_corpus")
+        .option("path", manifest)
+        .option("filesPerBatch", "16")
+        .load()
+        .writeStream.format("memory")
+        .queryName("manifest_stream_generated")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    drain_streaming_index(q, n_files=len(docs))
+    got = {(r.doc_id, r.text) for r in spark.table("manifest_stream_generated").collect()}
+    batch = {
+        (r.doc_id, r.text)
+        for r in spark.read.format("manifest_corpus").option("path", manifest).load().collect()
+    }
+    assert got == batch == set(docs.items())
+    assert 1 + q.lastProgress["batchId"] >= 3
 
 
 def test_xml_roundtrip(spark, sample, tmp_path):

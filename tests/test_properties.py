@@ -132,6 +132,48 @@ def test_read_corpus_duplicate_manifest_entries(spark, tmp_path):
         assert sorted(by_doc[i]) == ["one two", "three"]
 
 
+def _jobs_in_group(spark, group, action):
+    """Spark job ids ``action()`` launches, counted on its own job group once
+    the listener bus has delivered every job-start event."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_read_corpus_fixed_cost(spark, generated_corpus, tmp_path):
+    """The manifest scan's fixed per-job cost stays in the JVM on a corpus
+    past the 32-path parallel-listing default: the id map is a plan literal
+    (no Python rows, no broadcast, no Python evaluation), building and
+    explaining the index plan launches no Spark job (the file listing runs
+    on the driver), and the whole paper's job runs in at most 3."""
+    from mapreduce_model_spark.operators.inverted_index import invert, write_letter_files
+    from mapreduce_model_spark.sources.manifest import read_corpus
+
+    manifest, _ = generated_corpus
+    plan = read_corpus(spark, manifest)._jdf.queryExecution().executedPlan().toString()
+    for node in ("ExistingRDD", "BroadcastExchange", "EvalPython", "PythonUDF"):
+        assert node not in plan, f"{node} in the read_corpus plan:\n{plan}"
+
+    jobs = _jobs_in_group(
+        spark, "read-corpus-plan", lambda: invert(read_corpus(spark, manifest)).explain()
+    )
+    assert jobs == [], f"planning launched Spark jobs {jobs}"
+
+    out = str(tmp_path / "letters")
+    jobs = _jobs_in_group(
+        spark,
+        "read-corpus-write",
+        lambda: write_letter_files(invert(read_corpus(spark, manifest)), out),
+    )
+    assert 1 <= len(jobs) <= 3, f"the index job ran {len(jobs)} Spark jobs"
+
+
 def test_except_set_semantics_with_duplicates(spark):
     """EXCEPT (set semantics): a left row with ANY right match disappears
     even when the left holds it more times than the right."""

@@ -578,6 +578,43 @@ def test_streaming_inverted_index_matches_batch(spark, tmp_path):
     assert spark.read.parquet(pairs).count() == n_before
 
 
+def test_streaming_inverted_index_matches_batch_generated(spark, generated_corpus, tmp_path):
+    """Generated-corpus sibling of the test above (41 manifest entries, one
+    file listed twice, 16 files per microbatch): the streamed index equals
+    the batch index and the pure-Python model, and a checkpointed restart
+    adds no pairs."""
+    from mapreduce_model_spark.operators.inverted_index import invert
+    from mapreduce_model_spark.sources.manifest import read_corpus
+    from mapreduce_model_spark.sources.pyds import register
+    from mapreduce_model_spark.streaming.index import (
+        current_index,
+        drain_streaming_index,
+        start_streaming_index,
+    )
+    from tests.pymodel import inverted_index
+
+    manifest, docs = generated_corpus
+    register(spark)
+    pairs = str(tmp_path / "pairs")
+    ckpt = str(tmp_path / "ckpt")
+
+    q = start_streaming_index(spark, manifest, pairs, ckpt, files_per_batch=16)
+    drain_streaming_index(q, n_files=len(docs))
+
+    def rows(index):
+        return sorted((r.letter, r.word, tuple(r.docs), r.n_docs) for r in index.collect())
+
+    model = sorted(
+        (w[0], w, tuple(ids), len(ids)) for w, ids in inverted_index(docs).items()
+    )
+    assert rows(current_index(spark, pairs)) == rows(invert(read_corpus(spark, manifest))) == model
+
+    n_before = spark.read.parquet(pairs).count()
+    q2 = start_streaming_index(spark, manifest, pairs, ckpt, files_per_batch=16)
+    drain_streaming_index(q2, n_files=len(docs))
+    assert spark.read.parquet(pairs).count() == n_before
+
+
 def test_stream_dedup_parity(spark, sf_dir):
     """Two readStream sources over the same events file unioned (simulated
     at-least-once redelivery) then watermarked dropDuplicatesWithinWatermark:

@@ -194,9 +194,9 @@ def oph_signatures_array(
     shingle_hashes: DataFrame | None = None,
 ) -> DataFrame:
     """:func:`oph_signatures` with the k bin columns packed into one
-    ``sig`` array — the (id, sig) shape lsh_near_dup_pairs,
-    band_keys_expr, and build_band_index consume, so the OPH sketch
-    drops into every consumer of the classic-signature frame."""
+    ``sig`` array — the (id, sig) shape lsh_near_dup_pairs and
+    band_keys_expr consume, so the OPH sketch drops into every consumer
+    of the classic-signature frame."""
     sig = oph_signatures(df, text_col, id_col, k, shingle_k, shingle_hashes)
     return sig.select(
         F.col(id_col), F.array(*[f"h{i}" for i in range(k)]).alias("sig")

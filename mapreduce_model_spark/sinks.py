@@ -1,4 +1,5 @@
-"""Output maintenance — sized writes and small-file compaction.
+"""Output maintenance — sized writes, small-file compaction and the
+replay-safe microbatch sink.
 
 At 100 TB the write problem is file count, not bytes: a 700k-partition shuffle
 written naively produces 700k files per table, and downstream scans drown
@@ -10,6 +11,7 @@ ingest/ETL job needs.
 from __future__ import annotations
 
 import math
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -154,3 +156,18 @@ def write_observed(
     observed = df.observe(obs, *aggs)
     observed.write.mode(mode).format(fmt).save(path)
     return dict(obs.get)
+
+
+def write_batch(df: DataFrame, table: str, batch_id: int) -> None:
+    """The foreachBatch sinks' one write: ``df`` replaces the directory
+    ``<table>/batch_id=<batch_id>`` (parquet).
+
+    Replay contract: Spark re-runs a microbatch under the same
+    ``batch_id`` when its output may have landed but its checkpoint commit
+    did not, so overwriting that batch's own directory makes the sink
+    exactly-once without reading anything back. One table belongs to one
+    checkpoint. Read the table whole (``spark.read.parquet(table)`` or any
+    parquet dataset reader; Spark adds a ``batch_id`` partition column),
+    or as it stood when batch ``n`` started with ``batch_id < n``.
+    """
+    df.write.mode("overwrite").parquet(os.path.join(table, f"batch_id={batch_id}"))

@@ -64,9 +64,12 @@ class ManifestCorpusReader(DataSourceReader):
 class ManifestStreamReader(DataSourceStreamReader):
     """Streaming face of the same format: the manifest is a feed, each
     microbatch admits the next ``filesPerBatch`` documents. The offset is
-    the count of manifest entries consumed — exactly-once by construction
-    (replaying [start, end) re-reads the same positional slice, the way
-    Kafka offsets or file-stream indices work). Planning and offset
+    the count of manifest entries consumed — exactly-once by construction:
+    replaying [start, end) re-reads the same positional slice (the way
+    Kafka offsets or file-stream indices work), so a replayed batch holds
+    the same doc ids, and batches cover disjoint ranges because the
+    admission cursor never falls behind the position Spark has planned
+    (``partitions`` catches it up on restart). Planning and offset
     tracking stay on the driver; document bytes are only ever read on
     executors, one file per partition task, so ingest bandwidth scales
     with the cluster, not the driver."""
@@ -91,6 +94,10 @@ class ManifestStreamReader(DataSourceStreamReader):
         return {"index": self._served}
 
     def partitions(self, start, end):
+        # a restarted reader starts at 0, and Spark's first call re-plans
+        # the last committed or replayed batch before any latestOffset:
+        # resume admission from there, never behind it
+        self._served = max(self._served, end["index"])
         return [
             _FilePartition(i + 1, self._paths[i])
             for i in range(start["index"], end["index"])

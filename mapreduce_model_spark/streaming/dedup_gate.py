@@ -27,14 +27,12 @@ Design:
   (< shingle_k words) cannot near-dup and are admitted unconditionally.
   Exactness lives downstream: quarantined candidates go through the exact
   verifier (dedup_ngram_jaccard) in batch.
-- **Idempotent replay**: a re-run microbatch anti-joins against the
-  admitted table (on doc_id) and the index (on band_key) before appending,
-  so checkpoint replays converge — same discipline as streaming/index.py.
-
-At 100 TB: the index is an append-only parquet table bucketed/sorted by
-band_key; the per-batch probe is a delta-sized broadcast against it (a
-microbatch is small by definition), and the admitted append is blind.
-Nothing in the loop is corpus-sized.
+- **Sink contract**: the three tables belong to one checkpoint and hold
+  one directory per ``batch_id`` (``sinks.write_batch``); a replay of a
+  batch replaces its own directories. Batch ``n`` reads only the index
+  prefix ``batch_id < n`` — never its own outputs — so a replay sees the
+  same index and makes the same split. Admitted docs share no band with
+  that prefix by definition, so their keys append without a check.
 
 Heritage: the incremental face of SURVEY §2's dedup_near row; the batch
 twin is queries_dedup.dedup_near_minhash.
@@ -47,45 +45,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mapreduce_model_spark.operators.dedup import (
-    band_keys_expr,
-    minhash_sig_expr,
-    minhash_signatures,
-)
+from mapreduce_model_spark.operators.dedup import band_keys_expr, minhash_sig_expr
+from mapreduce_model_spark.sinks import write_batch
 
-__all__ = ["build_band_index", "start_dedup_gate"]
-
-
-def build_band_index(
-    docs: DataFrame,
-    k: int = 32,
-    bands: int = 8,
-    rows: int = 4,
-    shingle_k: int = 3,
-    sig_fn=None,
-) -> DataFrame:
-    """Distinct band keys of an existing corpus — the gate's day-0 state,
-    built with the BATCH signature path (codegen'd explode+groupBy).
-
-    ``sig_fn`` must produce the (doc_id, sig array) frame and MUST match
-    the sketch the gate will run with (``sig_expr_fn``): band keys are
-    md5 of signature values, so a classic-MinHash index matched against
-    an OPH-keyed gate (or vice versa) joins NOTHING and silently admits
-    every near-dup. Default classic ``minhash_signatures``; pass
-    ``operators.dedup.oph_signatures_array`` for an OPH gate."""
-    sig = (sig_fn or minhash_signatures)(docs, k=k, shingle_k=shingle_k)
-    return (
-        sig.select(F.explode(band_keys_expr("sig", bands, rows)).alias("band_key"))
-        .distinct()
-    )
-
-
-def _read_or_empty(spark: SparkSession, path: str, schema) -> DataFrame:
-    """``schema``: DDL string or StructType — used only until the first
-    append creates the table."""
-    if os.path.exists(path):
-        return spark.read.parquet(path)
-    return spark.createDataFrame([], schema)
+__all__ = ["start_dedup_gate"]
 
 
 def start_dedup_gate(
@@ -109,7 +72,8 @@ def start_dedup_gate(
     band with the index), ``quarantine_path`` (near-dup candidates, with
     the count of matched bands as triage signal), and ``index_path`` (the
     self-maintaining band-key state). Safe to re-run with the same
-    checkpoint — replays converge (see module docstring).
+    checkpoint: a replayed batch replaces its own output (see module
+    docstring).
 
     ``sig_expr_fn`` swaps the per-row sketch (default classic
     ``minhash_sig_expr``; pass ``operators.dedup.oph_sig_expr`` to run
@@ -118,7 +82,7 @@ def start_dedup_gate(
     """
     make_sig = sig_expr_fn or minhash_sig_expr
 
-    def _apply(batch: DataFrame, _batch_id: int) -> None:
+    def _apply(batch: DataFrame, batch_id: int) -> None:
         sig = batch.withColumn(
             "_sig", make_sig(text_col, k=k, shingle_k=shingle_k)
         )
@@ -129,7 +93,11 @@ def start_dedup_gate(
         # narrow sig is the expensive expression — compute it once
         keyed = keyed.localCheckpoint(eager=True)
 
-        index = _read_or_empty(spark, index_path, "band_key string")
+        index = (
+            spark.read.schema("band_key string, batch_id long")
+            .parquet(index_path)
+            .where(F.col("batch_id") < batch_id)
+        )
         hits = (
             keyed.join(index, "band_key")
             .groupBy(id_col)
@@ -137,25 +105,17 @@ def start_dedup_gate(
         )
 
         admitted = batch.join(hits, id_col, "left_anti")
-        quarantined = batch.join(hits, id_col, "inner")
-
-        # idempotent appends: drop rows a replayed batch already wrote
-        prior = _read_or_empty(spark, admitted_path, batch.schema)
-        admitted = admitted.join(prior.select(id_col), id_col, "left_anti")
-        prior_q = _read_or_empty(spark, quarantine_path, quarantined.schema)
-        quarantined = quarantined.join(prior_q.select(id_col), id_col, "left_anti")
-
-        admitted.write.mode("append").parquet(admitted_path)
-        quarantined.write.mode("append").parquet(quarantine_path)
-
+        write_batch(admitted, admitted_path, batch_id)
+        write_batch(batch.join(hits, id_col, "inner"), quarantine_path, batch_id)
         new_keys = (
             keyed.join(admitted.select(id_col), id_col, "left_semi")
             .select("band_key")
             .distinct()
-            .join(index, "band_key", "left_anti")
         )
-        new_keys.write.mode("append").parquet(index_path)
+        write_batch(new_keys, index_path, batch_id)
 
+    # an empty index table, so batch 0 reads it like any later batch
+    os.makedirs(index_path, exist_ok=True)
     (
         stream_docs.writeStream.foreachBatch(_apply)
         .option("checkpointLocation", checkpoint_dir)

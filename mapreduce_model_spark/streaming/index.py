@@ -4,34 +4,28 @@ The reference re-runs its whole pipeline when the corpus grows
 (main.cc:199-257 — batch-only by construction). Here the SAME logical
 plan (word_doc_pairs → group → postings) runs over the streaming face of
 the manifest source (sources/pyds.py): new documents arrive in
-microbatches, and each batch's pairs are merged into a maintained
-postings table via foreachBatch — index maintenance cost is
-delta-sized, not corpus-sized.
+microbatches, and each batch's pairs are added to a maintained pair
+table via foreachBatch — index maintenance cost is delta-sized, not
+corpus-sized.
 
-Merge strategy: the running state is the DISTINCT (word, doc_id) pair
-set (exactly the reference's global ``std::set``, main.cc:17) stored as
-a parquet table partition-pruned on nothing (it is already the minimal
-state — dedup happened). Each microbatch unions its new pairs in with
-an anti-join (only unseen pairs append), so replays are idempotent —
-the (word, doc_id) pair is the natural idempotency key. The presentation
-aggregate (sorted postings arrays) is derived on demand from the pair
-table; keeping raw pairs instead of arrays keeps the merge an append,
-never a read-modify-write of array cells.
-
-At 100 TB: the pair table is append-only parquet (object-store
-friendly), the anti-join broadcasts the delta (a microbatch is small by
-definition), and the derived index is either recomputed per consumer
-query or maintained as a second incremental rollup (rollup_incremental
-pattern).
+Sink contract: the running state is the (word, doc_id) pair table,
+one table per checkpoint, one directory per ``batch_id``
+(``sinks.write_batch``). Each microbatch writes its pairs to its own
+directory and a replay of the same ``batch_id`` replaces it, so the
+table is exactly-once without the batch reading the table back. Batches
+never share a pair: doc ids are manifest positions and each batch covers
+a disjoint offset range (sources/pyds.py). The presentation aggregate
+(sorted postings arrays) is derived on demand from the pair table;
+keeping raw pairs instead of arrays keeps the merge a write, never a
+read-modify-write of array cells.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
 from mapreduce_model_spark.operators.inverted_index import index_from_pairs, word_doc_pairs
+from mapreduce_model_spark.sinks import write_batch
 
 
 def start_streaming_index(
@@ -47,12 +41,7 @@ def start_streaming_index(
     """
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        pairs = word_doc_pairs(batch_df)
-        sess = batch_df.sparkSession
-        if os.path.exists(pairs_path):
-            seen = sess.read.parquet(pairs_path)
-            pairs = pairs.join(seen, ["word", "doc_id"], "left_anti")
-        pairs.write.mode("append").parquet(pairs_path)
+        write_batch(word_doc_pairs(batch_df), pairs_path, batch_id)
 
     stream = (
         spark.readStream.format("manifest_corpus")
@@ -75,9 +64,9 @@ def start_streaming_index(
 def drain_streaming_index(query, n_files: int, timeout_s: float = 120.0) -> None:
     """Run ``query`` until its committed end offset reaches ``n_files``
     (the manifest length — offsets ARE manifest positions), then stop it.
-    Offset-watching, not batch-counting: an already-caught-up restart
-    reports the final offset in its first progress event and returns
-    immediately."""
+    Offset-watching, not batch-counting: a restart over a fully consumed
+    manifest runs no batch and returns at its first progress event, which
+    reports the final offset."""
     import ast
     import json
     import time

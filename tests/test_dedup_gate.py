@@ -1,6 +1,6 @@
 """Streaming near-dup admission gate (streaming/dedup_gate.py): band-key
 parity with the batch pair join, cross-batch flagging, the documented
-within-batch contract, and re-run idempotence."""
+within-batch contract, and re-run and lost-commit replay idempotence."""
 
 import pyspark.sql.functions as F
 
@@ -99,24 +99,49 @@ def test_gate_admits_then_flags_cross_batch(spark, tmp_path):
     assert quar[20] == 8
 
 
+def _gate_tables(spark, tmp_path):
+    """Each output table as a sorted multiset of rows."""
+    return {
+        name: sorted(map(tuple, spark.read.parquet(str(tmp_path / name)).collect()))
+        for name in ("admitted", "quarantine", "index")
+    }
+
+
 def test_gate_rerun_is_idempotent(spark, tmp_path):
+    """A re-drain with nothing new and a replay of a batch whose write
+    landed but whose checkpoint commit was lost both leave every table as
+    it was; the replay must not match the batch against its own bands."""
     _run_gate(spark, tmp_path, [(1, _LONG_A), (2, _LONG_B)])
-    before_adm = spark.read.parquet(str(tmp_path / "admitted")).count()
-    before_idx = spark.read.parquet(str(tmp_path / "index")).count()
+    before = _gate_tables(spark, tmp_path)
+    assert {r[0] for r in before["admitted"]} == {1, 2}
+    assert before["quarantine"] == []
+
+    def redrain():
+        stream = spark.readStream.schema(_SCHEMA).option(
+            "basePath", str(tmp_path / "src")
+        ).parquet(str(tmp_path / "src" / "*"))
+        start_dedup_gate(
+            stream,
+            spark,
+            index_path=str(tmp_path / "index"),
+            admitted_path=str(tmp_path / "admitted"),
+            quarantine_path=str(tmp_path / "quarantine"),
+            checkpoint_dir=str(tmp_path / "ckpt"),
+        )
+
     # re-drain with the same checkpoint and no new files: no growth
-    stream = spark.readStream.schema(_SCHEMA).option(
-        "basePath", str(tmp_path / "src")
-    ).parquet(str(tmp_path / "src" / "*"))
-    start_dedup_gate(
-        stream,
-        spark,
-        index_path=str(tmp_path / "index"),
-        admitted_path=str(tmp_path / "admitted"),
-        quarantine_path=str(tmp_path / "quarantine"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-    )
-    assert spark.read.parquet(str(tmp_path / "admitted")).count() == before_adm
-    assert spark.read.parquet(str(tmp_path / "index")).count() == before_idx
+    redrain()
+    assert _gate_tables(spark, tmp_path) == before
+
+    # lose the last commit: Spark replays that batch on the next drain
+    commits = tmp_path / "ckpt" / "commits"
+    last = max(int(p.name) for p in commits.iterdir() if p.name.isdigit())
+    (commits / str(last)).unlink()
+    (commits / f".{last}.crc").unlink()
+    redrain()
+    after = _gate_tables(spark, tmp_path)
+    assert after == before
+    assert not {r[0] for r in after["admitted"]} & {r[0] for r in after["quarantine"]}
 
 
 def test_gate_catches_within_batch_contract_followup(spark, tmp_path):

@@ -259,6 +259,25 @@ def test_manifest_datasource_streams_incrementally_generated(spark, generated_co
     assert 1 + q.lastProgress["batchId"] >= 3
 
 
+def test_manifest_stream_reader_resumes_at_planned_offset(generated_corpus):
+    """A restarted reader's first call re-plans the last batch; admission
+    must resume there, not re-serve the manifest from 0. A fresh reader
+    still advances filesPerBatch at a time."""
+    from mapreduce_model_spark.sources.pyds import ManifestStreamReader
+
+    manifest, docs = generated_corpus
+    opts = {"path": manifest, "filesPerBatch": "16"}
+    restarted = ManifestStreamReader(opts)
+    assert restarted.partitions({"index": 41}, {"index": 41}) == []
+    assert restarted.latestOffset() == {"index": 41}
+
+    fresh = ManifestStreamReader(opts)
+    assert fresh.initialOffset() == {"index": 0}
+    assert [fresh.latestOffset()["index"] for _ in range(4)] == [16, 32, 41, 41]
+    assert [p.doc_id for p in fresh.partitions({"index": 16}, {"index": 32})] == list(range(17, 33))
+    assert len(docs) == 41
+
+
 def test_xml_roundtrip(spark, sample, tmp_path):
     from mapreduce_model_spark.sources.files import read_xml, write_xml
 

@@ -2,6 +2,8 @@
 same windows as the batch path, and watermark+append must emit exactly the
 finalized windows. Plus the applyInPandasWithState custom operator."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -541,8 +543,7 @@ def test_streaming_inverted_index_matches_batch(spark, tmp_path):
     """The reference's job as an incremental stream: documents arriving
     one-per-microbatch through the manifest stream source must build
     exactly the index the batch pipeline builds — and a checkpointed
-    restart over the same manifest must not duplicate pairs (idempotent
-    merge on the (word, doc_id) key)."""
+    restart over the same manifest must not duplicate pairs."""
     from mapreduce_model_spark.operators.inverted_index import invert
     from mapreduce_model_spark.sources.manifest import read_corpus
     from mapreduce_model_spark.sources.pyds import register
@@ -581,8 +582,9 @@ def test_streaming_inverted_index_matches_batch(spark, tmp_path):
 def test_streaming_inverted_index_matches_batch_generated(spark, generated_corpus, tmp_path):
     """Generated-corpus sibling of the test above (41 manifest entries, one
     file listed twice, 16 files per microbatch): the streamed index equals
-    the batch index and the pure-Python model, and a checkpointed restart
-    adds no pairs."""
+    the batch index and the pure-Python model; a checkpointed restart over
+    the consumed manifest reads no rows and adds no pairs, and a replay of
+    a batch whose commit was lost leaves the pair table as it was."""
     from mapreduce_model_spark.operators.inverted_index import invert
     from mapreduce_model_spark.sources.manifest import read_corpus
     from mapreduce_model_spark.sources.pyds import register
@@ -609,10 +611,25 @@ def test_streaming_inverted_index_matches_batch_generated(spark, generated_corpu
     )
     assert rows(current_index(spark, pairs)) == rows(invert(read_corpus(spark, manifest))) == model
 
-    n_before = spark.read.parquet(pairs).count()
+    def pair_rows():
+        return sorted(map(tuple, spark.read.parquet(pairs).collect()))
+
+    before = pair_rows()
     q2 = start_streaming_index(spark, manifest, pairs, ckpt, files_per_batch=16)
     drain_streaming_index(q2, n_files=len(docs))
-    assert spark.read.parquet(pairs).count() == n_before
+    assert sum(p["numInputRows"] for p in q2.recentProgress) == 0
+    assert pair_rows() == before
+
+    # lose the last commit: the restart replays that batch over its own
+    # directory
+    commits = os.path.join(ckpt, "commits")
+    last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    os.remove(os.path.join(commits, str(last)))
+    os.remove(os.path.join(commits, f".{last}.crc"))
+    q3 = start_streaming_index(spark, manifest, pairs, ckpt, files_per_batch=16)
+    drain_streaming_index(q3, n_files=len(docs))
+    assert sum(p["numInputRows"] for p in q3.recentProgress) > 0
+    assert pair_rows() == before
 
 
 def test_stream_dedup_parity(spark, sf_dir):

@@ -12,12 +12,19 @@ yielding ``doc_id: long, text: string`` with the reference's 1-based
 positional ids (main.cc:79) and hard errors on missing files
 (main.cc:66-70,182-186).
 
-Planning runs on the driver (read the tiny manifest, one InputPartition
-per listed file — the reference's unit of map work, main.cc:50-59);
-reading runs on executors, one file per partition task. This is the
-pattern for wrapping ANY non-Spark-native format (proprietary archives,
-tar shards, API pages) as a parallel scan; Spark handles scheduling,
-retries, and downstream shuffle exactly as for built-in sources.
+The batch face plans on the driver (read the tiny manifest, one
+InputPartition per listed file — the reference's unit of map work,
+main.cc:50-59) and reads on executors, one file per partition task. This
+is the pattern for wrapping ANY non-Spark-native format (proprietary
+archives, tar shards, API pages) as a parallel scan; Spark handles
+scheduling, retries, and downstream shuffle exactly as for built-in
+sources.
+
+The stream face is a ``SimpleDataSourceStreamReader``: each trigger reads
+its at most ``filesPerBatch`` documents once, in the driver-side stream
+runner, and hands them to the JVM as Arrow, so a warm microbatch runs no
+Python read task. Only a replayed batch whose prefetched rows are gone
+reads on an executor (``readBetweenOffsets``).
 """
 
 from __future__ import annotations
@@ -25,11 +32,16 @@ from __future__ import annotations
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
-    DataSourceStreamReader,
     InputPartition,
+    SimpleDataSourceStreamReader,
 )
 
 FORMAT_NAME = "manifest_corpus"
+
+
+def _read_text(path: str) -> str:
+    with open(path, encoding="utf-8", errors="replace") as fh:
+        return fh.read()
 
 
 class _FilePartition(InputPartition):
@@ -53,26 +65,22 @@ class ManifestCorpusReader(DataSourceReader):
         return [_FilePartition(i + 1, p) for i, p in enumerate(paths)]
 
     def read(self, partition: _FilePartition):
-        with open(partition.path, encoding="utf-8", errors="replace") as fh:
-            text = fh.read()
         # one row per document; tokenization downstream treats newlines as
         # whitespace (main.cc:73), so whole-file text is equivalent to the
         # reference's token stream
-        yield (partition.doc_id, text)
+        yield (partition.doc_id, _read_text(partition.path))
 
 
-class ManifestStreamReader(DataSourceStreamReader):
+class ManifestStreamReader(SimpleDataSourceStreamReader):
     """Streaming face of the same format: the manifest is a feed, each
     microbatch admits the next ``filesPerBatch`` documents. The offset is
-    the count of manifest entries consumed — exactly-once by construction:
-    replaying [start, end) re-reads the same positional slice (the way
-    Kafka offsets or file-stream indices work), so a replayed batch holds
-    the same doc ids, and batches cover disjoint ranges because the
-    admission cursor never falls behind the position Spark has planned
-    (``partitions`` catches it up on restart). Planning and offset
-    tracking stay on the driver; document bytes are only ever read on
-    executors, one file per partition task, so ingest bandwidth scales
-    with the cluster, not the driver."""
+    the count of manifest entries consumed and ``read`` is a pure function
+    of it, so a replayed [start, end) holds the same doc ids (the way Kafka
+    offsets work), batches cover disjoint ranges, and the reader keeps no
+    cursor: Spark's wrapper resumes from the last planned batch on restart.
+    ``read`` runs on the driver, holding at most ``filesPerBatch``
+    documents per trigger; ``readBetweenOffsets`` runs on an executor when
+    a replayed batch's prefetched rows are gone."""
 
     def __init__(self, options):
         self.manifest_path = options.get("path")
@@ -82,33 +90,20 @@ class ManifestStreamReader(DataSourceStreamReader):
         from mapreduce_model_spark.sources.manifest import read_manifest
 
         self._paths = read_manifest(self.manifest_path)
-        self._served = 0
 
     def initialOffset(self):
         return {"index": 0}
 
-    def latestOffset(self):
-        # admission control: advance at most files_per_batch per trigger so
-        # a huge backlog becomes bounded microbatches, not one giant batch
-        self._served = min(len(self._paths), self._served + self.files_per_batch)
-        return {"index": self._served}
+    def read(self, start):
+        end = {"index": min(len(self._paths), start["index"] + self.files_per_batch)}
+        return self.readBetweenOffsets(start, end), end
 
-    def partitions(self, start, end):
-        # a restarted reader starts at 0, and Spark's first call re-plans
-        # the last committed or replayed batch before any latestOffset:
-        # resume admission from there, never behind it
-        self._served = max(self._served, end["index"])
-        return [
-            _FilePartition(i + 1, self._paths[i])
-            for i in range(start["index"], end["index"])
-        ]
-
-    def read(self, partition: _FilePartition):
-        with open(partition.path, encoding="utf-8", errors="replace") as fh:
-            yield (partition.doc_id, fh.read())
-
-    def commit(self, end):
-        pass
+    def readBetweenOffsets(self, start, end):
+        # a list iterator, not a generator: Spark's wrapper copies the
+        # iterators it caches when it serves a batch
+        return iter(
+            [(i + 1, _read_text(self._paths[i])) for i in range(start["index"], end["index"])]
+        )
 
 
 class ManifestDataSource(DataSource):
@@ -122,7 +117,7 @@ class ManifestDataSource(DataSource):
     def reader(self, schema):
         return ManifestCorpusReader(self.options)
 
-    def streamReader(self, schema):
+    def simpleStreamReader(self, schema):
         return ManifestStreamReader(self.options)
 
 

@@ -162,6 +162,30 @@ def test_manifest_datasource_missing_file_fails(spark, tmp_path):
         spark.read.format("manifest_corpus").option("path", str(bad)).load().collect()
 
 
+def test_manifest_datasource_stream_missing_file_fails(spark, tmp_path):
+    """The stream face keeps the batch face's hard error (main.cc:66-70):
+    a manifest listing a missing file fails the query."""
+    from mapreduce_model_spark.sources.pyds import register
+
+    bad = tmp_path / "bad_manifest.txt"
+    bad.write_text("1\n/nonexistent/file.txt\n")
+    register(spark)
+    q = (
+        spark.readStream.format("manifest_corpus")
+        .option("path", str(bad))
+        .load()
+        .writeStream.format("memory")
+        .queryName("manifest_stream_missing")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    try:
+        with pytest.raises(Exception, match="missing on disk"):
+            q.awaitTermination(120)
+    finally:
+        q.stop()
+
+
 def test_orc_roundtrip_and_pushdown(spark, sample, tmp_path):
     from mapreduce_model_spark.sources.files import read_orc, write_orc
 
@@ -260,22 +284,26 @@ def test_manifest_datasource_streams_incrementally_generated(spark, generated_co
 
 
 def test_manifest_stream_reader_resumes_at_planned_offset(generated_corpus):
-    """A restarted reader's first call re-plans the last batch; admission
-    must resume there, not re-serve the manifest from 0. A fresh reader
-    still advances filesPerBatch at a time."""
+    """The stream reader keeps no cursor: ``read`` at a restarted query's
+    planned offset serves only what lies past it, a fresh reader advances
+    filesPerBatch at a time, and ``readBetweenOffsets`` (the replay path)
+    re-reads exactly the planned slice."""
     from mapreduce_model_spark.sources.pyds import ManifestStreamReader
 
     manifest, docs = generated_corpus
+    assert len(docs) == 41
     opts = {"path": manifest, "filesPerBatch": "16"}
     restarted = ManifestStreamReader(opts)
-    assert restarted.partitions({"index": 41}, {"index": 41}) == []
-    assert restarted.latestOffset() == {"index": 41}
+    rows, end = restarted.read({"index": 41})
+    assert list(rows) == [] and end == {"index": 41}
 
     fresh = ManifestStreamReader(opts)
     assert fresh.initialOffset() == {"index": 0}
-    assert [fresh.latestOffset()["index"] for _ in range(4)] == [16, 32, 41, 41]
-    assert [p.doc_id for p in fresh.partitions({"index": 16}, {"index": 32})] == list(range(17, 33))
-    assert len(docs) == 41
+    rows, end = fresh.read({"index": 0})
+    assert list(rows) == [(i, docs[i]) for i in range(1, 17)] and end == {"index": 16}
+    assert fresh.read({"index": 32})[1] == {"index": 41}
+    replay = fresh.readBetweenOffsets({"index": 16}, {"index": 32})
+    assert [doc_id for doc_id, _ in replay] == list(range(17, 33))
 
 
 def test_xml_roundtrip(spark, sample, tmp_path):

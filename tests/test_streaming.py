@@ -2,6 +2,7 @@
 same windows as the batch path, and watermark+append must emit exactly the
 finalized windows. Plus the applyInPandasWithState custom operator."""
 
+import ast
 import os
 
 import pytest
@@ -584,7 +585,8 @@ def test_streaming_inverted_index_matches_batch_generated(spark, generated_corpu
     file listed twice, 16 files per microbatch): the streamed index equals
     the batch index and the pure-Python model; a checkpointed restart over
     the consumed manifest reads no rows and adds no pairs, and a replay of
-    a batch whose commit was lost leaves the pair table as it was."""
+    a batch whose commit was lost reads its whole offset range again and
+    leaves the pair table as it was."""
     from mapreduce_model_spark.operators.inverted_index import invert
     from mapreduce_model_spark.sources.manifest import read_corpus
     from mapreduce_model_spark.sources.pyds import register
@@ -628,7 +630,12 @@ def test_streaming_inverted_index_matches_batch_generated(spark, generated_corpu
     os.remove(os.path.join(commits, f".{last}.crc"))
     q3 = start_streaming_index(spark, manifest, pairs, ckpt, files_per_batch=16)
     drain_streaming_index(q3, n_files=len(docs))
-    assert sum(p["numInputRows"] for p in q3.recentProgress) > 0
+    # the replay has no prefetched rows, so it reads its whole offset range
+    # through readBetweenOffsets on an executor
+    (replayed,) = [p for p in q3.recentProgress if p["batchId"] == last]
+    source = replayed["sources"][0]
+    start, end = (ast.literal_eval(source[k])["index"] for k in ("startOffset", "endOffset"))
+    assert replayed["numInputRows"] == end - start > 0
     assert pair_rows() == before
 
 

@@ -4,13 +4,14 @@ Reproduces the observable semantics of ``/root/reference/src/main.cc`` as one
 declarative DataFrame chain (no threads, no mutexes — Catalyst/Tungsten pick
 the physical plan):
 
-- tokenize on whitespace runs        (main.cc:73,   ``operator>>``)
-- ASCII lowercase                    (main.cc:75,   ``::tolower``)
-- strip every char outside ``[a-z]`` (main.cc:33-42, ``remove_non_letters``)
-- drop empty words — in the reference they are bucketed under ``'\\0'`` and
-  never written since only ``a..z`` files are emitted (main.cc:89 vs 132-137)
-- distinct (word, doc_id) pairs — set semantics discard term frequency
-  (main.cc:62-63, 78-79): a boolean index, not TF
+- one input row is one document (main.cc:62-80 maps one whole file)
+- tokenize, normalize and drop empty words with ``functions.text.words_array``:
+  whitespace runs (main.cc:73, ``operator>>``), ASCII lowercase (main.cc:75),
+  strip every char outside ``[a-z]`` (main.cc:33-42); empty words are
+  bucketed under ``'\\0'`` in the reference and never written, since only
+  ``a..z`` files are emitted (main.cc:89 vs 132-137)
+- distinct (word, doc_id) pairs — ``array_distinct`` per document is the
+  per-file ``std::set`` (main.cc:62-63, 78-79): a boolean index, not TF
 - postings list = ascending distinct doc ids (main.cc:120-127, sort :143)
 - bucket by first letter             (main.cc:132-141)
 - within a letter: postings-length DESC, then word ASC (main.cc:148-156)
@@ -18,11 +19,11 @@ the physical plan):
 
 Scale notes (100 TB corpus): the single shuffle is on ``word``. Hot stopwords
 (``the`` appears in ~every doc — see reference golden test_out/t.txt) make
-``word`` skewed, but the per-file distinct (map-side partial aggregate, free
-under ``dropDuplicates``) bounds any word's pair count at n_docs, and AQE skew
-handling splits oversized post-shuffle partitions. ``collect_set`` postings
-for a true stopword are O(n_docs) — at 100 TB emit ``n_docs`` via count and
-keep postings only below a doc-frequency cap, or store postings as bucketed
+``word`` skewed, but the per-document ``array_distinct`` (narrow, before the
+shuffle) bounds any word's pair count at n_docs, and AQE skew handling splits
+oversized post-shuffle partitions. ``collect_set`` postings for a true
+stopword are O(n_docs) — at 100 TB emit ``n_docs`` via count and keep
+postings only below a doc-frequency cap, or store postings as bucketed
 parquet instead of in-memory arrays. No driver-side collects anywhere.
 """
 
@@ -33,14 +34,12 @@ import os
 import shutil
 import uuid
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from mapreduce_model_spark.functions.partitioning import spread_for_fanout
+from mapreduce_model_spark.functions.text import words_array
 
 __all__ = [
-    "normalize_token",
-    "tokenize",
     "word_doc_pairs",
     "postings",
     "index_from_pairs",
@@ -52,65 +51,24 @@ __all__ = [
 ]
 
 
-def normalize_token(col: Column) -> Column:
-    """lowercase then strip ``[^a-z]`` — main.cc:75 then main.cc:33-42.
-
-    Order matters: the reference lowers first, then removes non-letters, so
-    ``"Don't"`` → ``dont``, ``"2024"`` → ``""``.
-    """
-    return F.regexp_replace(F.lower(col), "[^a-z]", "")
-
-
-def tokenize(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """``(doc_id, text)`` → one row per raw whitespace-delimited token.
-
-    ``split`` on ``\\s+`` mirrors C++ ``operator>>`` (main.cc:73): any run of
-    whitespace separates tokens; a leading run yields one empty token which
-    normalization would keep as ``""`` — dropped later like every empty word.
-    Narrow op: stays inside whole-stage codegen, no shuffle — but the
-    explode multiplies rows ~|tokens|×, so an under-partitioned scan is
-    spread first (no-op on many-split corpora).
-    """
-    docs = spread_for_fanout(docs, id_col)
-    return docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.split(F.col(text_col), r"\s+")).alias("token"),
-    )
-
-
 def word_doc_pairs(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Distinct normalized ``(word, doc_id)`` pairs — the map-phase output.
 
-    Matches the reference's per-file ``std::set`` dedup + global merged
-    ``std::set`` (main.cc:62-63, 17, 78-96). ``dropDuplicates`` gives the
-    same set semantics with a map-side partial aggregate (the per-file
-    combine, main.cc:62-63) for free.
-
-    ``distinct=False`` skips the dedup exchange for consumers whose own
-    aggregation already has set semantics (``invert``'s ``collect_set``) —
-    one shuffle of the pair stream instead of two.
-    """
-    return _word_doc_pairs(docs, text_col, id_col, distinct=True)
-
-
-def _word_doc_pairs(
-    docs: DataFrame, text_col: str, id_col: str, distinct: bool
-) -> DataFrame:
-    pairs = (
-        tokenize(docs, text_col, id_col)
-        .select(normalize_token(F.col("token")).alias("word"), "doc_id")
-        .filter(F.length("word") > 0)  # main.cc:89 vs 132-137 — '' never output
+    One input row is one document, so each row's ``array_distinct`` of its
+    ``words_array`` is the reference's per-file ``std::set`` (main.cc:62-63,
+    78-80): the pairs come out distinct with no exchange."""
+    return docs.select(
+        F.explode(F.array_distinct(words_array(F.col(text_col)))).alias("word"),
+        F.col(id_col).alias("doc_id"),
     )
-    return pairs.dropDuplicates(["word", "doc_id"]) if distinct else pairs
 
 
 def postings(pairs: DataFrame) -> DataFrame:
     """``(word, doc_id)`` pairs → ``(word, docs)``, ``docs`` = ascending
-    distinct doc ids (main.cc:120-127, 143). ``collect_set`` IS the set
-    semantics (main.cc:62-63), so duplicate pairs are harmless and its
-    map-side partial is the per-file combine; ``sort_array`` replaces the
-    reference's explicit post-sort (its insertion order is
-    nondeterministic too). One word-keyed exchange."""
+    distinct doc ids (main.cc:120-127, 143). ``collect_set`` is the merged
+    global set (main.cc:17, 96), so a duplicate pair would be harmless;
+    ``sort_array`` replaces the reference's explicit post-sort (its
+    insertion order is nondeterministic too). One word-keyed exchange."""
     return pairs.groupBy("word").agg(F.sort_array(F.collect_set("doc_id")).alias("docs"))
 
 
@@ -133,13 +91,10 @@ def index_from_pairs(pairs: DataFrame) -> DataFrame:
 
 
 def invert(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Full index: ``(letter, word, docs, n_docs)`` — see ``index_from_pairs``.
-
-    ``distinct=False``: ``postings``' ``collect_set`` already dedups, so
-    skipping the separate ``dropDuplicates`` exchange leaves one
-    hash-partition shuffle on ``word`` and halves the shuffled pair volume.
-    """
-    return index_from_pairs(_word_doc_pairs(docs, text_col, id_col, distinct=False))
+    """Full index: ``(letter, word, docs, n_docs)`` over one row per
+    document — see ``index_from_pairs``. The pairs are narrow, so the one
+    hash-partition shuffle is ``postings``' exchange on ``word``."""
+    return index_from_pairs(word_doc_pairs(docs, text_col, id_col))
 
 
 def invert_df_capped(
@@ -167,7 +122,7 @@ def invert_df_capped(
     carry docs = ''."""
     # pairs feeds BOTH phases (df count + postings collect) and cnt feeds
     # both the under-cap filter and the final join — persist so the
-    # tokenize/normalize/dedup pipeline runs once, not three times
+    # tokenize/normalize pipeline runs once, not three times
     # (cache lifecycle: registry.py docstring)
     pairs = word_doc_pairs(docs, text_col, id_col).persist()
     cnt = pairs.groupBy("word").agg(F.count(F.lit(1)).alias("n_docs")).persist()

@@ -40,7 +40,9 @@ FORMAT_NAME = "manifest_corpus"
 
 
 def _read_text(path: str) -> str:
-    with open(path, encoding="utf-8", errors="replace") as fh:
+    # newline="" keeps line endings as on disk: the same text as
+    # read_corpus's spark.read.text(wholetext=True) row
+    with open(path, encoding="utf-8", errors="replace", newline="") as fh:
         return fh.read()
 
 

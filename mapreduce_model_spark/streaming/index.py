@@ -14,7 +14,10 @@ one table per checkpoint, one directory per ``batch_id``
 directory and a replay of the same ``batch_id`` replaces it, so the
 table is exactly-once without the batch reading the table back. Batches
 never share a pair: doc ids are manifest positions and each batch covers
-a disjoint offset range (sources/pyds.py). The presentation aggregate
+a disjoint offset range (sources/pyds.py). Within a batch, each row is
+one whole document, so ``word_doc_pairs``' per-row ``array_distinct``
+already yields distinct pairs: a microbatch is a narrow
+scan → tokenize → write with no exchange. The presentation aggregate
 (sorted postings arrays) is derived on demand from the pair table;
 keeping raw pairs instead of arrays keeps the merge a write, never a
 read-modify-write of array cells.

@@ -123,8 +123,8 @@ def test_manifest_datasource_matches_manifest_reader(spark):
 def test_manifest_datasource_matches_manifest_reader_generated(spark, generated_corpus):
     """Generated-corpus sibling of the parity test above (more than 32 files,
     one file listed twice): the manifest_corpus DataSource and read_corpus
-    carry the same tokens per document, and both indexes equal the
-    pure-Python model's."""
+    carry the same one ``(doc_id, text)`` row per document, and both
+    indexes equal the pure-Python model's."""
     from mapreduce_model_spark.operators.inverted_index import invert
     from mapreduce_model_spark.sources.manifest import read_corpus
     from mapreduce_model_spark.sources.pyds import register
@@ -135,15 +135,8 @@ def test_manifest_datasource_matches_manifest_reader_generated(spark, generated_
     ds = spark.read.format("manifest_corpus").option("path", manifest).load()
     text = read_corpus(spark, manifest)
 
-    def tokens(df):
-        by_doc = {}
-        for r in df.collect():
-            by_doc.setdefault(r.doc_id, []).extend(r.text.split())
-        return {d: sorted(t) for d, t in by_doc.items()}
-
-    expected_tokens = {d: sorted(t.split()) for d, t in docs.items()}
-    assert tokens(ds) == expected_tokens
-    assert tokens(text) == expected_tokens
+    # one row per document on both faces: equal (doc_id, text) multisets
+    assert sorted(map(tuple, ds.collect())) == sorted(map(tuple, text.collect())) == sorted(docs.items())
     expected = sorted((w[0], w, tuple(ids)) for w, ids in inverted_index(docs).items())
     assert any(3 in ids and 41 in ids for _, _, ids in expected)
     for df in (ds, text):

@@ -7,10 +7,10 @@ The 3-document micro-corpus and expected excerpts come from FIXTURES.md §3
 import pytest
 from pyspark.sql import functions as F
 
+from mapreduce_model_spark.functions.text import words_array
 from mapreduce_model_spark.operators.inverted_index import (
     format_output,
     invert,
-    normalize_token,
     word_doc_pairs,
 )
 from tests.pymodel import inverted_index as py_invert
@@ -30,13 +30,18 @@ def micro_docs(spark):
     )
 
 
-def test_normalize_token_semantics(spark):
-    """main.cc:75 then 33-42: lower first, then strip non-letters."""
+def test_words_array_semantics(spark):
+    """main.cc:73, 75 then 33-42: split on whitespace runs, lower first,
+    then strip non-letters; empty words are dropped, and leading or
+    trailing tabs and newlines yield no word."""
     rows = spark.createDataFrame(
-        [("Don't",), ("end.",), ("2024",), ("The",), ("bl!ue",), ("---",)],
-        "token: string",
-    ).select(normalize_token(F.col("token")).alias("w")).collect()
-    assert [r.w for r in rows] == ["dont", "end", "", "the", "blue", ""]
+        [("Don't",), ("end.",), ("2024",), ("The",), ("bl!ue",), ("---",),
+         ("\t\nDon't  end.\n\t",)],
+        "text: string",
+    ).select(words_array("text").alias("w")).collect()
+    assert [r.w for r in rows] == [
+        ["dont"], ["end"], [], ["the"], ["blue"], [], ["dont", "end"],
+    ]
 
 
 def test_word_doc_pairs_distinct(spark, micro_docs):

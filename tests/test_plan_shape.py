@@ -93,11 +93,15 @@ def test_no_query_uses_cartesian_product(spark):
 
 
 def test_inverted_index_single_wide_shuffle(spark):
-    """distinct + groupBy('word') must collapse onto one hash exchange of
-    the pair stream (plus the presentation sort) — two data shuffles of the
-    full pair set would double network cost at scale."""
+    """The distinct pairs are narrow (one row per document, per-row
+    array_distinct), so the pairs query has no exchange and the index has
+    one hash exchange of the pair stream, postings' on ``word`` (plus the
+    presentation sort) — two data shuffles of the full pair set would
+    double network cost at scale."""
     p = plan(spark, "inverted_index")
-    assert p.count("hashpartitioning") <= 2, p
+    assert "Exchange" not in p, p
+    p = plan(spark, "inverted_index_agg")
+    assert p.count("hashpartitioning") == 1, p
 
 
 def test_partition_pruning_on_partitioned_write(spark, tmp_path):

@@ -93,8 +93,9 @@ def test_read_manifest_errors(tmp_path):
 def test_read_paths_special_chars_and_duplicates(spark, tmp_path):
     """Paths with spaces/plus survive the input_file_name URI round trip
     (a manifest cannot express space paths — operator>> tokenization — so
-    this exercises the programmatic read_paths front door), and a path
-    listed twice is two documents, each with the lines ONCE."""
+    this exercises the programmatic read_paths front door), and each
+    manifest position is exactly one row holding its file's whole text: a
+    path listed twice is two documents, each with the text ONCE."""
     d = tmp_path / "corpus dir"
     d.mkdir()
     (d / "my doc.txt").write_text("alpha beta\ngamma\n")
@@ -105,31 +106,52 @@ def test_read_paths_special_chars_and_duplicates(spark, tmp_path):
         spark,
         [str(d / "my doc.txt"), str(d / "a+b.txt"), str(d / "my doc.txt")],
     ).collect()
-    by_doc = {}
-    for r in rows:
-        by_doc.setdefault(r.doc_id, []).append(r.text)
-    assert sorted(by_doc) == [1, 2, 3]
-    assert sorted(by_doc[1]) == ["alpha beta", "gamma"]  # once, not doubled
-    assert by_doc[2] == ["delta"]
-    assert sorted(by_doc[3]) == ["alpha beta", "gamma"]  # dup entry = own doc
+    assert sorted((r.doc_id, r.text) for r in rows) == [
+        (1, "alpha beta\ngamma\n"),  # once, not doubled
+        (2, "delta\n"),
+        (3, "alpha beta\ngamma\n"),  # dup entry = own doc
+    ]
 
 
 def test_read_corpus_duplicate_manifest_entries(spark, tmp_path):
-    """Manifest path: duplicate entries are distinct documents with the
-    file's lines exactly once each (no read-twice doubling)."""
+    """Manifest path: duplicate entries are distinct documents, one row
+    each holding the file's exact text once (no read-twice doubling, line
+    endings as on disk) — from read_corpus and the manifest_corpus
+    DataSource alike."""
     f = tmp_path / "doc.txt"
-    f.write_text("one two\nthree\n")
+    f.write_bytes(b"one two\r\nthree\n")
     manifest = tmp_path / "m.txt"
     manifest.write_text(f"2\n{f}\n{f}\n")
     from mapreduce_model_spark.sources.manifest import read_corpus
+    from mapreduce_model_spark.sources.pyds import register
 
-    rows = read_corpus(spark, str(manifest)).collect()
-    by_doc = {}
-    for r in rows:
-        by_doc.setdefault(r.doc_id, []).append(r.text)
-    assert sorted(by_doc) == [1, 2]
-    for i in (1, 2):
-        assert sorted(by_doc[i]) == ["one two", "three"]
+    register(spark)
+    ds = spark.read.format("manifest_corpus").option("path", str(manifest)).load()
+    for df in (read_corpus(spark, str(manifest)), ds):
+        assert sorted((r.doc_id, r.text) for r in df.collect()) == [
+            (1, "one two\r\nthree\n"),
+            (2, "one two\r\nthree\n"),
+        ]
+
+
+def test_word_doc_pairs_narrow_generated(spark, generated_corpus):
+    """One row is one document, so the per-file word set is a narrow
+    per-row array_distinct: over a 1-partition frame (a microbatch's shape)
+    the pairs plan has no Exchange, and its rows are already distinct and
+    equal the pure-Python model's pairs."""
+    from collections import Counter
+
+    from mapreduce_model_spark.operators.inverted_index import word_doc_pairs
+    from mapreduce_model_spark.sources.manifest import read_corpus
+    from tests.pymodel import inverted_index
+
+    manifest, docs = generated_corpus
+    pairs = word_doc_pairs(read_corpus(spark, manifest).coalesce(1))
+    got = Counter((r.word, r.doc_id) for r in pairs.collect())
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
+    assert max(got.values()) == 1
+    assert set(got) == {(w, d) for w, ids in inverted_index(docs).items() for d in ids}
 
 
 def _jobs_in_group(spark, group, action):

@@ -617,6 +617,8 @@ def test_streaming_inverted_index_matches_batch_generated(spark, generated_corpu
         return sorted(map(tuple, spark.read.parquet(pairs).collect()))
 
     before = pair_rows()
+    # the narrow per-document pairs are already distinct
+    assert len(before) == len({(r[0], r[1]) for r in before})
     q2 = start_streaming_index(spark, manifest, pairs, ckpt, files_per_batch=16)
     drain_streaming_index(q2, n_files=len(docs))
     assert sum(p["numInputRows"] for p in q2.recentProgress) == 0

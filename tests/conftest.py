@@ -1,3 +1,4 @@
+import os
 import random
 
 import pytest
@@ -5,6 +6,12 @@ import pytest
 from mapreduce_model_spark import get_spark
 
 SF_DIR = "/root/testdata/sf0.001"
+# Committed copy of the reference checker's small corpus: manifest
+# test_small.txt, documents test_in_small/ and goldens test_out_small/
+# (FIXTURES.md §3).
+REFERENCE_SMALL = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "fixtures", "reference_small"
+)
 
 
 @pytest.fixture(scope="session")

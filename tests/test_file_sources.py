@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 
 from mapreduce_model_spark.registry import table
 from mapreduce_model_spark.sources.files import CORRUPT_COL, read_csv, read_jsonl
+from tests.conftest import REFERENCE_SMALL
 
 DDL = "l_orderkey bigint, l_linenumber int, l_quantity double, l_returnflag string"
 
@@ -104,7 +105,7 @@ def test_manifest_datasource_matches_manifest_reader(spark):
     from mapreduce_model_spark.sources.manifest import read_corpus
     from mapreduce_model_spark.sources.pyds import register
 
-    manifest = "/root/reference/checker/test_small.txt"
+    manifest = f"{REFERENCE_SMALL}/test_small.txt"
     register(spark)
     ds = spark.read.format("manifest_corpus").option("path", manifest).load()
     assert ds.schema.simpleString() == "struct<doc_id:bigint,text:string>"
@@ -208,7 +209,7 @@ def test_manifest_datasource_streams_incrementally(spark, tmp_path):
 
     from mapreduce_model_spark.sources.pyds import register
 
-    manifest = "/root/reference/checker/test_small.txt"
+    manifest = f"{REFERENCE_SMALL}/test_small.txt"
     register(spark)
 
     stream = (
@@ -226,6 +227,8 @@ def test_manifest_datasource_streams_incrementally(spark, tmp_path):
     try:
         deadline = time.time() + 120
         while time.time() < deadline:
+            if q.exception() is not None:
+                raise q.exception()
             if spark.table("manifest_stream").count() >= 3:
                 break
             time.sleep(0.5)

@@ -17,6 +17,7 @@ from mapreduce_model_spark.streaming.windows import (
     stream_events,
     tumbling_agg,
 )
+from tests.conftest import REFERENCE_SMALL
 
 
 def _rows(df, cols):
@@ -554,7 +555,7 @@ def test_streaming_inverted_index_matches_batch(spark, tmp_path):
         start_streaming_index,
     )
 
-    manifest = "/root/reference/checker/test_small.txt"
+    manifest = f"{REFERENCE_SMALL}/test_small.txt"
     register(spark)
     pairs = str(tmp_path / "pairs")
     ckpt = str(tmp_path / "ckpt")

@@ -6,6 +6,9 @@ until round 8 the port proved goldens at one config plus one CLI run.
 
     python tools/parity_matrix.py [manifest golden_dir]
 
+With no arguments it checks the committed small corpus
+(tests/fixtures/reference_small: test_small.txt, test_out_small/).
+
 Runs all nine configs in ONE process (the session is stopped and rebuilt
 per config — a fresh SparkContext applies the new master/shuffle conf, and
 the test asserts both took effect, so config bleed between iterations
@@ -66,15 +69,13 @@ def run_config(m: int, r: int, manifest: str, golden_dir: str) -> list[str]:
 
 
 def main() -> int:
+    from tests.conftest import REFERENCE_SMALL
+
     manifest = (
-        sys.argv[1]
-        if len(sys.argv) > 1
-        else "/root/reference/checker/test_small.txt"
+        sys.argv[1] if len(sys.argv) > 1 else f"{REFERENCE_SMALL}/test_small.txt"
     )
     golden_dir = (
-        sys.argv[2]
-        if len(sys.argv) > 2
-        else "/root/reference/checker/test_out_small"
+        sys.argv[2] if len(sys.argv) > 2 else f"{REFERENCE_SMALL}/test_out_small"
     )
     t0 = time.time()
     fails = 0

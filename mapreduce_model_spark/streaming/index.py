@@ -69,13 +69,18 @@ def drain_streaming_index(query, n_files: int, timeout_s: float = 120.0) -> None
     (the manifest length — offsets ARE manifest positions), then stop it.
     Offset-watching, not batch-counting: a restart over a fully consumed
     manifest runs no batch and returns at its first progress event, which
-    reports the final offset."""
+    reports the final offset. A failed query raises its exception at once
+    (a manifest entry missing on disk, say) instead of waiting out
+    ``timeout_s``."""
     import ast
     import json
     import time
 
     deadline = time.time() + timeout_s
     while time.time() < deadline:
+        err = query.exception()
+        if err is not None:
+            raise err
         p = query.lastProgress
         if p is not None and p["sources"]:
             end = p["sources"][0]["endOffset"]

@@ -581,6 +581,27 @@ def test_streaming_inverted_index_matches_batch(spark, tmp_path):
     assert spark.read.parquet(pairs).count() == n_before
 
 
+def test_drain_raises_when_the_stream_fails(spark, tmp_path):
+    """A manifest entry missing on disk fails the query; draining it
+    raises that failure at once instead of polling out its timeout."""
+    import time
+
+    from mapreduce_model_spark.sources.pyds import register
+    from mapreduce_model_spark.streaming.index import drain_streaming_index, start_streaming_index
+
+    manifest = tmp_path / "manifest.txt"
+    manifest.write_text(f"2\n{REFERENCE_SMALL}/test_in_small/1.txt\n{tmp_path}/missing.txt\n")
+    register(spark)
+    q = start_streaming_index(spark, str(manifest), str(tmp_path / "pairs"), str(tmp_path / "ckpt"))
+    t0 = time.monotonic()
+    try:
+        with pytest.raises(Exception, match="missing on disk"):
+            drain_streaming_index(q, n_files=2)
+    finally:
+        q.stop()
+    assert time.monotonic() - t0 < 60
+
+
 def test_streaming_inverted_index_matches_batch_generated(spark, generated_corpus, tmp_path):
     """Generated-corpus sibling of the test above (41 manifest entries, one
     file listed twice, 16 files per microbatch): the streamed index equals

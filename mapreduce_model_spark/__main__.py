@@ -13,29 +13,33 @@ is where the reference writes.
 
 from __future__ import annotations
 
-import glob
 import os
 import string
 import sys
 import tempfile
 
-from mapreduce_model_spark.operators.inverted_index import invert, write_letter_files
+from mapreduce_model_spark.operators.inverted_index import (
+    invert,
+    published_part_files,
+    write_letter_files,
+)
 from mapreduce_model_spark.session import get_spark
 from mapreduce_model_spark.sources.manifest import read_corpus
 
 
 def _materialize_letter_files(scratch: str, out_dir: str) -> None:
-    """Flatten the distributed ``letter=<c>/part-*.txt`` layout into the
-    reference's literal ``<c>.txt`` files — all 26, empty included
+    """Flatten the sink's published ``letter=<c>/part-*.txt`` layout into
+    the reference's literal ``<c>.txt`` files — all 26, empty included
     (main.cc:136-138 opens every letter's file unconditionally). Each letter
     is one shuffle partition, so its directory holds one ordered part file;
     the loop is a driver-side rename, not a data pass."""
+    parts = published_part_files(scratch)
     for letter in string.ascii_lowercase:
-        parts = sorted(glob.glob(os.path.join(scratch, f"letter={letter}", "part-*")))
         with open(os.path.join(out_dir, f"{letter}.txt"), "w") as out:
             for p in parts:
-                with open(p) as fh:
-                    out.write(fh.read())
+                if os.path.basename(os.path.dirname(p)) == f"letter={letter}":
+                    with open(p) as fh:
+                        out.write(fh.read())
 
 
 def main(argv: list[str]) -> int:

@@ -33,12 +33,20 @@ SIG_SQL = (
 )
 
 
+def tokens_sql() -> str:
+    """DuckDB twin of ``functions.text.tokens_array("text")``: split the
+    trimmed text on runs of the C locale's six whitespace bytes
+    (main.cc:73). Spelled out because RE2's ``\\s`` lacks ``\\v``, which
+    Java's ``\\s`` and C ``isspace`` both hold."""
+    return r"regexp_split_to_array(trim(text), '[ \t\n\v\f\r]+')"
+
+
 def words_sql(var: str = "t") -> str:
-    """DuckDB twin of ``functions.text.words_array("text")``: whitespace
-    split, lowercase, strip ``[^a-z]``, drop empty words — the one oracle
+    """DuckDB twin of ``functions.text.words_array("text")``: ``tokens_sql``,
+    lowercase, strip non-letters, drop empty words — the one oracle
     words-array expression. ``var`` names the lambda parameter."""
-    return rf"""list_filter(
-               list_transform(regexp_split_to_array(trim(text), '\s+'),
+    return f"""list_filter(
+               list_transform({tokens_sql()},
                               {var} -> regexp_replace(lower({var}), '[^a-z]', '', 'g')),
                w -> length(w) > 0)"""
 

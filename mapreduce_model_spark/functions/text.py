@@ -30,7 +30,8 @@ BPE_TOKEN_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
 def tokens_array(text: Column | str) -> Column:
     """Whitespace tokens (A3). ``split`` on ``\\s+`` after trim: no empty
-    leading token, same as DuckDB ``regexp_split_to_array(trim(x), '\\s+')``."""
+    leading token. Java's ``\\s`` is C ``isspace``'s six bytes (main.cc:73);
+    the DuckDB twin is ``functions.dedup_sql.tokens_sql``."""
     c = F.col(text) if isinstance(text, str) else text
     return F.split(F.trim(c), r"\s+")
 

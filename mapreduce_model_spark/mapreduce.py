@@ -27,7 +27,7 @@ from __future__ import annotations
 from collections.abc import Callable, Iterable
 from typing import Any, TypeVar
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 K = TypeVar("K")
 V = TypeVar("V")
@@ -66,33 +66,3 @@ def map_reduce(
     )
     return grouped.map(lambda kv: (kv[0], reduce_fn(kv[0], list(kv[1]))))
 
-
-def inverted_index_mapreduce(spark: SparkSession, docs: DataFrame):
-    """The reference's exact job expressed through this layer (A2-A15 as
-    user map/reduce code): mapper re-implements tokenize→normalize→per-doc
-    dedup (main.cc:61-83), reducer sorts the postings (main.cc:143).
-
-    Demonstration of the A20 contract; the production path is
-    ``operators.inverted_index.invert`` (declarative, codegen, salted
-    variant available).
-    """
-    import re
-
-    def mapper(row):
-        words = set()
-        for tok in row.text.split():
-            w = re.sub(r"[^a-z]", "", tok.lower())
-            if w:
-                words.add(w)
-        return [(w, {row.doc_id}) for w in words]
-
-    def combiner(a: set, b: set) -> set:
-        return a | b
-
-    def reducer(word: str, postings: list[set]) -> list[int]:
-        out: set[int] = set()
-        for p in postings:
-            out |= p
-        return sorted(out)
-
-    return map_reduce(docs, mapper, reducer, combine_fn=combiner)

@@ -1407,7 +1407,7 @@ def ngram_cols_udtf(spark, sf_dir):
     (n=3 ⇒ columns pos, w1..w3), the Spark 4 dynamic-schema face of the
     table-function surface (doc_chunks_udtf covers the static-schema
     face). The eval reproduces the reference tokenizer rule (whitespace
-    split, lower, strip [^a-z], drop empties — main.cc:33-42,73-75)
+    split, lower, strip non-letters, drop empties — main.cc:33-42,73-75)
     row-at-a-time in Python, and the oracle reproduces it in SQL, so the
     hash check pins the Python/JVM/DuckDB tokenizer triple-parity. The
     split uses the explicit ASCII class [ \\t\\n\\x0b\\x0c\\r] — Python's

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from mapreduce_model_spark.functions.dedup_sql import words_sql
 from mapreduce_model_spark.operators.inverted_index import (
     invert,
     invert_df_capped,
@@ -20,13 +21,10 @@ from mapreduce_model_spark.operators.inverted_index import (
 from mapreduce_model_spark.operators.skew import salted_collect_set
 from mapreduce_model_spark.registry import query, table
 
-_WORDS_CTE = r"""
-WITH toks AS (
-    SELECT doc_id, unnest(regexp_split_to_array(text, '\s+')) AS tok
+_WORDS_CTE = f"""
+WITH words AS (
+    SELECT doc_id, unnest({words_sql()}) AS word
     FROM documents
-), words AS (
-    SELECT doc_id, regexp_replace(lower(tok), '[^a-z]', '', 'g') AS word
-    FROM toks
 )
 """
 
@@ -37,7 +35,6 @@ WITH toks AS (
     + """
 SELECT DISTINCT word, doc_id
 FROM words
-WHERE length(word) > 0
 """,
 )
 def inverted_index(spark, sf_dir):
@@ -53,7 +50,6 @@ SELECT substr(word, 1, 1) AS letter,
        array_to_string(list_sort(list(DISTINCT doc_id)), ' ') AS docs,
        count(DISTINCT doc_id) AS n_docs
 FROM words
-WHERE length(word) > 0
 GROUP BY word
 """,
 )
@@ -80,7 +76,7 @@ _DF_CAP = 380
     "inverted_index_dfcap",
     oracle=_WORDS_CTE
     + f"""
-, wd AS (SELECT DISTINCT word, doc_id FROM words WHERE length(word) > 0),
+, wd AS (SELECT DISTINCT word, doc_id FROM words),
 cnt AS (SELECT word, CAST(count(*) AS BIGINT) AS n_docs FROM wd GROUP BY word)
 SELECT substr(cnt.word, 1, 1) AS letter,
        cnt.word AS word,
@@ -115,7 +111,6 @@ SELECT substr(word, 1, 1) AS letter,
        array_to_string(list_sort(list(DISTINCT doc_id)), ' ') AS docs,
        count(DISTINCT doc_id) AS n_docs
 FROM words
-WHERE length(word) > 0
 GROUP BY word
 """,
 )

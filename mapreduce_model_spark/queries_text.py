@@ -2,8 +2,9 @@
 scoring, fingerprinting, TF-IDF (SURVEY.md §2 Table B + north-star ops).
 
 All built-in expressions (no Python UDFs): at 100 TB the text hot path stays
-inside whole-stage codegen. The DuckDB oracles mirror the same tokenization
-CTE (trim → split \\s+ → lower → strip [^a-z] → drop empties) so both engines
+inside whole-stage codegen. The DuckDB oracles tokenize with the twins in
+``functions.dedup_sql`` (``tokens_sql``, ``words_sql``: trim → split on C
+whitespace → lower → strip non-letters → drop empties) so both engines
 compute over identical word multisets (reference semantics A3-A5).
 """
 
@@ -12,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from mapreduce_model_spark.functions.dedup_sql import words_sql
+from mapreduce_model_spark.functions.dedup_sql import tokens_sql, words_sql
 from mapreduce_model_spark.functions.partitioning import spread_for_fanout
 from mapreduce_model_spark.functions.rounding import rnd
 from mapreduce_model_spark.functions.text import (
@@ -26,10 +27,10 @@ from mapreduce_model_spark.functions.text import (
 from mapreduce_model_spark.registry import query, table
 
 # DuckDB twin of tokens_array / words_array.
-_WBASE = rf"""
+_WBASE = f"""
 WITH wbase AS (
     SELECT doc_id, text, lang,
-           regexp_split_to_array(trim(text), '\s+') AS toks,
+           {tokens_sql()} AS toks,
            {words_sql()} AS words
     FROM documents
 )
@@ -81,7 +82,7 @@ def text_stats(spark, sf_dir):
     "token_count",
     oracle=rf"""
 SELECT doc_id,
-       len(regexp_split_to_array(trim(text), '\s+'))        AS n_ws_tokens,
+       len({tokens_sql()})                                  AS n_ws_tokens,
        len(regexp_extract_all(text, '{BPE_TOKEN_RE}'))      AS n_bpe_tokens,
        length(text)                                         AS n_chars_calc
 FROM documents

@@ -16,7 +16,10 @@ archive on its own (``-XX:+AutoCreateSharedArchive`` is JDK 19+), so
   ``<key>.jsa`` (~150 MB). The key hashes the ``java`` that ``spark-class``
   runs (``$JAVA_HOME/bin/java``, else ``java`` on ``PATH``) and the names,
   sizes and mtimes of ``<spark_home>/jars``; promoting a new key deletes
-  the other archives.
+  the other archives. The cache is made with mode 0700 and used only if
+  it is a real directory (not a symlink) owned by this user and writable
+  by no one else: on a shared ``/tmp``, another user must not choose the
+  archive the JVM maps.
 - With ``<key>.jsa`` present the driver loads it (``-Xshare:auto``: a
   truncated, stale or foreign archive just means a start without it).
 - Without it, the first session claims ``<key>.lock`` and its JVM dumps
@@ -48,6 +51,7 @@ import glob
 import hashlib
 import os
 import shutil
+import stat
 import subprocess
 import tempfile
 
@@ -142,8 +146,8 @@ class ClassArchive:
     def open(cls, driver_memory: str) -> ClassArchive | None:
         """Pick this start's JVM options and point ``SPARK_CONF_DIR`` at the
         cache's empty conf directory. None: start as without an archive (a
-        real conf directory, no ``java``, an unusable cache, a live dumper,
-        a dump that just failed)."""
+        real conf directory, no ``java``, an unusable or foreign cache, a
+        live dumper, a dump that just failed)."""
         home = _find_spark_home()
         conf = os.environ.get("SPARK_CONF_DIR") or os.path.join(home, "conf")
         if os.path.isdir(conf) and not all(n.endswith(".template") for n in os.listdir(conf)):
@@ -152,6 +156,10 @@ class ClassArchive:
         cache = os.path.join(tempfile.gettempdir(), "spark-graft-cds")
         empty_conf = os.path.join(cache, "conf")
         try:
+            os.makedirs(cache, mode=0o700, exist_ok=True)
+            st = os.lstat(cache)
+            if not stat.S_ISDIR(st.st_mode) or st.st_uid != os.getuid() or st.st_mode & 0o022:
+                return None
             os.makedirs(empty_conf, exist_ok=True)
             if java is None or os.listdir(empty_conf):
                 return None

@@ -1,26 +1,15 @@
-"""Custom Python DataSource (Spark 4 DataSource API) for the reference's
-manifest corpus format.
-
-``sources.manifest`` reads the corpus with ``spark.read.text`` + a
-literal path→ids map lookup. This module exposes the SAME format as a
-first-class pluggable source instead:
+"""Custom Python DataSource (Spark 4 DataSource API) streaming the
+reference's manifest corpus format:
 
     spark.dataSource.register(ManifestDataSource)
-    spark.read.format("manifest_corpus").option("path", manifest).load()
+    spark.readStream.format("manifest_corpus").option("path", manifest).load()
 
-yielding ``doc_id: long, text: string`` with the reference's 1-based
+yields ``doc_id: long, text: string`` with the reference's 1-based
 positional ids (main.cc:79) and hard errors on missing files
-(main.cc:66-70,182-186).
+(main.cc:66-70,182-186). The batch read of the same format is
+``sources.manifest.read_corpus``.
 
-The batch face plans on the driver (read the tiny manifest, one
-InputPartition per listed file — the reference's unit of map work,
-main.cc:50-59) and reads on executors, one file per partition task. This
-is the pattern for wrapping ANY non-Spark-native format (proprietary
-archives, tar shards, API pages) as a parallel scan; Spark handles
-scheduling, retries, and downstream shuffle exactly as for built-in
-sources.
-
-The stream face is a ``SimpleDataSourceStreamReader``: each trigger reads
+The stream is a ``SimpleDataSourceStreamReader``: each trigger reads
 its at most ``filesPerBatch`` documents once, in the driver-side stream
 runner, and hands them to the JVM as Arrow, so a warm microbatch runs no
 Python read task. Only a replayed batch whose prefetched rows are gone
@@ -29,12 +18,7 @@ reads on an executor (``readBetweenOffsets``).
 
 from __future__ import annotations
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    InputPartition,
-    SimpleDataSourceStreamReader,
-)
+from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 
 FORMAT_NAME = "manifest_corpus"
 
@@ -44,33 +28,6 @@ def _read_text(path: str) -> str:
     # read_corpus's spark.read.text(wholetext=True) row
     with open(path, encoding="utf-8", errors="replace", newline="") as fh:
         return fh.read()
-
-
-class _FilePartition(InputPartition):
-    def __init__(self, doc_id: int, path: str):
-        self.doc_id = doc_id
-        self.path = path
-
-
-class ManifestCorpusReader(DataSourceReader):
-    def __init__(self, options):
-        self.manifest_path = options.get("path")
-        if not self.manifest_path:
-            raise ValueError("manifest_corpus requires .option('path', <manifest>)")
-
-    def partitions(self):
-        # driver-side planning: parse count + N paths, resolve, hard-error
-        # on missing files — exactly read_manifest's contract
-        from mapreduce_model_spark.sources.manifest import read_manifest
-
-        paths = read_manifest(self.manifest_path)
-        return [_FilePartition(i + 1, p) for i, p in enumerate(paths)]
-
-    def read(self, partition: _FilePartition):
-        # one row per document; tokenization downstream treats newlines as
-        # whitespace (main.cc:73), so whole-file text is equivalent to the
-        # reference's token stream
-        yield (partition.doc_id, _read_text(partition.path))
 
 
 class ManifestStreamReader(SimpleDataSourceStreamReader):
@@ -115,9 +72,6 @@ class ManifestDataSource(DataSource):
 
     def schema(self):
         return "doc_id long, text string"
-
-    def reader(self, schema):
-        return ManifestCorpusReader(self.options)
 
     def simpleStreamReader(self, schema):
         return ManifestStreamReader(self.options)

@@ -30,20 +30,26 @@ def sf_dir():
 def generated_corpus(tmp_path):
     """A 40-file reference-format corpus: more than the 32 paths above which
     Spark's default lists files with a distributed job, one file listed twice
-    (positions 3 and 41 — two documents), mixed case, punctuation, digits and
-    multi-line files. Returns ``(manifest path, {doc_id: text})``."""
+    (positions 3 and 41 — two documents), mixed case, punctuation, digits,
+    multi-line files, and a few spaces swapped for ``\\v`` (C whitespace,
+    main.cc:73), NBSP or ``\\x1c`` (not whitespace to C, so they join two
+    words). Returns ``(manifest path, {doc_id: text})``."""
     rng = random.Random(7)
     vocab = ["alpha", "Beta", "GAMMA", "delta!", "don't", "x-ray", "Zeta,", "eta.",
              "2024", "theta", "iota?", "Kappa", "lambda", "mu", "(nu)", "xi;"]
+    odd_spaces = {4: "\v", 9: "\xa0", 14: "\x1c", 19: "\v", 24: "\xa0", 29: "\x1c"}
     corpus = tmp_path / "corpus"
     corpus.mkdir()
     paths = []
     for i in range(40):
         lines = [" ".join(rng.choices(vocab, k=rng.randint(1, 12))) for _ in range(rng.randint(1, 4))]
+        text = "\n".join(lines) + "\n"
+        if i in odd_spaces:
+            text = text.replace(" ", odd_spaces[i], 2)
         f = corpus / f"doc{i:02d}.txt"
-        f.write_text("\n".join(lines) + "\n")
+        f.write_text(text, encoding="utf-8")
         paths.append(f)
     paths.append(paths[2])
     manifest = tmp_path / "manifest.txt"
     manifest.write_text(f"{len(paths)}\n" + "\n".join(str(p) for p in paths) + "\n")
-    return str(manifest), {i: p.read_text() for i, p in enumerate(paths, start=1)}
+    return str(manifest), {i: p.read_text(encoding="utf-8") for i, p in enumerate(paths, start=1)}

@@ -1,6 +1,6 @@
 """Pure-Python executable model of the reference semantics (main.cc:33-172).
 
-~20 lines, used as a property oracle in tests: independent of both Spark and
+~25 lines, used as a property oracle in tests: independent of both Spark and
 DuckDB, simple enough to verify by eye against SURVEY.md §1.6.
 """
 
@@ -8,6 +8,9 @@ from __future__ import annotations
 
 import re
 
+# C-locale isspace: `fin >> word` splits on these six bytes only (main.cc:73),
+# where str.split() also breaks on NBSP, \x1c-\x1f and other Unicode spaces
+_C_SPACE = re.compile(r"[ \t\n\v\f\r]+")
 _NON_LETTER = re.compile(r"[^a-z]")
 
 
@@ -16,14 +19,17 @@ def normalize(token: str) -> str:
     return _NON_LETTER.sub("", token.lower())
 
 
+def words(text: str) -> list[str]:
+    """The document's words in order: split, normalize, empty words dropped."""
+    return [w for w in map(normalize, _C_SPACE.split(text)) if w]
+
+
 def inverted_index(docs: dict[int, str]) -> dict[str, list[int]]:
-    """word -> ascending distinct doc ids; empty words dropped."""
+    """word -> ascending distinct doc ids."""
     postings: dict[str, set[int]] = {}
     for doc_id, text in docs.items():
-        for token in text.split():
-            word = normalize(token)
-            if word:
-                postings.setdefault(word, set()).add(doc_id)
+        for word in words(text):
+            postings.setdefault(word, set()).add(doc_id)
     return {w: sorted(ids) for w, ids in postings.items()}
 
 

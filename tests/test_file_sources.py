@@ -97,72 +97,16 @@ def test_parquet_schema_evolution_merge(spark, tmp_path):
     assert rows == {1: ("a", None), 2: ("b", 9.5)}
 
 
-def test_manifest_datasource_matches_manifest_reader(spark):
-    """The custom Python DataSource (manifest_corpus) must produce the same
-    (doc_id, tokenized-text) corpus as the spark.read.text path — and the
-    same inverted index downstream (sources/pyds.py)."""
-    from mapreduce_model_spark.operators.inverted_index import invert
-    from mapreduce_model_spark.sources.manifest import read_corpus
-    from mapreduce_model_spark.sources.pyds import register
-
-    manifest = f"{REFERENCE_SMALL}/test_small.txt"
-    register(spark)
-    ds = spark.read.format("manifest_corpus").option("path", manifest).load()
-    assert ds.schema.simpleString() == "struct<doc_id:bigint,text:string>"
-
-    via_ds = sorted(
-        (r.letter, r.word, tuple(r.docs)) for r in invert(ds).collect()
-    )
-    via_text = sorted(
-        (r.letter, r.word, tuple(r.docs))
-        for r in invert(read_corpus(spark, manifest)).collect()
-    )
-    assert via_ds == via_text
-    assert len(via_ds) > 0
-
-
-def test_manifest_datasource_matches_manifest_reader_generated(spark, generated_corpus):
-    """Generated-corpus sibling of the parity test above (more than 32 files,
-    one file listed twice): the manifest_corpus DataSource and read_corpus
-    carry the same one ``(doc_id, text)`` row per document, and both
-    indexes equal the pure-Python model's."""
-    from mapreduce_model_spark.operators.inverted_index import invert
-    from mapreduce_model_spark.sources.manifest import read_corpus
-    from mapreduce_model_spark.sources.pyds import register
-    from tests.pymodel import inverted_index
-
-    manifest, docs = generated_corpus
-    register(spark)
-    ds = spark.read.format("manifest_corpus").option("path", manifest).load()
-    text = read_corpus(spark, manifest)
-
-    # one row per document on both faces: equal (doc_id, text) multisets
-    assert sorted(map(tuple, ds.collect())) == sorted(map(tuple, text.collect())) == sorted(docs.items())
-    expected = sorted((w[0], w, tuple(ids)) for w, ids in inverted_index(docs).items())
-    assert any(3 in ids and 41 in ids for _, _, ids in expected)
-    for df in (ds, text):
-        assert sorted((r.letter, r.word, tuple(r.docs)) for r in invert(df).collect()) == expected
-
-
-def test_manifest_datasource_missing_file_fails(spark, tmp_path):
-    from mapreduce_model_spark.sources.pyds import register
-
-    bad = tmp_path / "bad_manifest.txt"
-    bad.write_text("1\n/nonexistent/file.txt\n")
-    register(spark)
-    import pytest as _pytest
-
-    with _pytest.raises(Exception, match="missing on disk|FileNotFound"):
-        spark.read.format("manifest_corpus").option("path", str(bad)).load().collect()
-
-
 def test_manifest_datasource_stream_missing_file_fails(spark, tmp_path):
-    """The stream face keeps the batch face's hard error (main.cc:66-70):
-    a manifest listing a missing file fails the query."""
+    """A manifest listing a missing file is a hard error (main.cc:66-70):
+    the batch read_corpus raises, and the stream face fails the query."""
+    from mapreduce_model_spark.sources.manifest import read_corpus
     from mapreduce_model_spark.sources.pyds import register
 
     bad = tmp_path / "bad_manifest.txt"
     bad.write_text("1\n/nonexistent/file.txt\n")
+    with pytest.raises(FileNotFoundError, match="missing on disk"):
+        read_corpus(spark, str(bad))
     register(spark)
     q = (
         spark.readStream.format("manifest_corpus")
@@ -207,6 +151,7 @@ def test_manifest_datasource_streams_incrementally(spark, tmp_path):
     admission control), and the streamed rows must equal the batch read."""
     import time
 
+    from mapreduce_model_spark.sources.manifest import read_corpus
     from mapreduce_model_spark.sources.pyds import register
 
     manifest = f"{REFERENCE_SMALL}/test_small.txt"
@@ -218,6 +163,7 @@ def test_manifest_datasource_streams_incrementally(spark, tmp_path):
         .option("filesPerBatch", "1")
         .load()
     )
+    assert stream.schema.simpleString() == "struct<doc_id:bigint,text:string>"
     q = (
         stream.writeStream.format("memory")
         .queryName("manifest_stream")
@@ -236,13 +182,7 @@ def test_manifest_datasource_streams_incrementally(spark, tmp_path):
             (r.doc_id, r.text)
             for r in spark.table("manifest_stream").collect()
         }
-        batch = {
-            (r.doc_id, r.text)
-            for r in spark.read.format("manifest_corpus")
-            .option("path", manifest)
-            .load()
-            .collect()
-        }
+        batch = {(r.doc_id, r.text) for r in read_corpus(spark, manifest).collect()}
         assert got == batch and len(got) == 3
         n_batches = 1 + (q.lastProgress or {}).get("batchId", 0)
         assert n_batches >= 3, f"expected ≥3 microbatches, saw {n_batches}"
@@ -253,7 +193,7 @@ def test_manifest_datasource_streams_incrementally(spark, tmp_path):
 def test_manifest_datasource_streams_incrementally_generated(spark, generated_corpus, tmp_path):
     """Generated-corpus sibling of the streaming test above: 41 manifest
     entries at filesPerBatch=16 arrive over 3 microbatches, and the streamed
-    documents equal the batch read and the files on disk."""
+    documents equal the files on disk."""
     from mapreduce_model_spark.sources.pyds import register
     from mapreduce_model_spark.streaming.index import drain_streaming_index
 
@@ -271,11 +211,7 @@ def test_manifest_datasource_streams_incrementally_generated(spark, generated_co
     )
     drain_streaming_index(q, n_files=len(docs))
     got = {(r.doc_id, r.text) for r in spark.table("manifest_stream_generated").collect()}
-    batch = {
-        (r.doc_id, r.text)
-        for r in spark.read.format("manifest_corpus").option("path", manifest).load().collect()
-    }
-    assert got == batch == set(docs.items())
+    assert got == set(docs.items())
     assert 1 + q.lastProgress["batchId"] >= 3
 
 

@@ -7,6 +7,7 @@ The 3-document micro-corpus and expected excerpts come from FIXTURES.md §3
 import pytest
 from pyspark.sql import functions as F
 
+from mapreduce_model_spark.functions.dedup_sql import words_sql
 from mapreduce_model_spark.functions.text import words_array
 from mapreduce_model_spark.operators.inverted_index import (
     format_output,
@@ -15,6 +16,7 @@ from mapreduce_model_spark.operators.inverted_index import (
 )
 from tests.pymodel import inverted_index as py_invert
 from tests.pymodel import letter_file_rows
+from tests.pymodel import words as py_words
 
 MICRO_CORPUS = {
     1: "The bright sun shines in the blue sky as birds are singing today.",
@@ -31,17 +33,30 @@ def micro_docs(spark):
 
 
 def test_words_array_semantics(spark):
-    """main.cc:73, 75 then 33-42: split on whitespace runs, lower first,
+    """main.cc:73, 75 then 33-42: split on C whitespace runs, lower first,
     then strip non-letters; empty words are dropped, and leading or
-    trailing tabs and newlines yield no word."""
-    rows = spark.createDataFrame(
-        [("Don't",), ("end.",), ("2024",), ("The",), ("bl!ue",), ("---",),
-         ("\t\nDon't  end.\n\t",)],
-        "text: string",
-    ).select(words_array("text").alias("w")).collect()
-    assert [r.w for r in rows] == [
-        ["dont"], ["end"], [], ["the"], ["blue"], [], ["dont", "end"],
+    trailing tabs and newlines yield no word. ``\\v`` and ``\\f`` are C
+    whitespace; NBSP and ``\\x1c`` are not, so they join their neighbours.
+    Spark's ``words_array``, the DuckDB oracles' ``words_sql`` and the
+    Python model's ``words`` give the same lists."""
+    import duckdb
+
+    cases = [
+        ("Don't", ["dont"]), ("end.", ["end"]), ("2024", []), ("The", ["the"]),
+        ("bl!ue", ["blue"]), ("---", []), ("\t\nDon't  end.\n\t", ["dont", "end"]),
+        ("a\x0bb c", ["a", "b", "c"]), ("a\xa0b", ["ab"]), ("a\x1cb", ["ab"]),
+        ("x\fy\rz\tq", ["x", "y", "z", "q"]),
     ]
+    texts = [t for t, _ in cases]
+    expected = [w for _, w in cases]
+    rows = spark.createDataFrame([(t,) for t in texts], "text: string").select(
+        words_array("text").alias("w")
+    ).collect()
+    assert [r.w for r in rows] == expected
+    con = duckdb.connect()
+    sql = f"SELECT {words_sql()} FROM (SELECT ? AS text)"
+    assert [con.execute(sql, [t]).fetchone()[0] for t in texts] == expected
+    assert [py_words(t) for t in texts] == expected
 
 
 def test_word_doc_pairs_distinct(spark, micro_docs):

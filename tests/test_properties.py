@@ -117,41 +117,47 @@ def test_read_corpus_duplicate_manifest_entries(spark, tmp_path):
     """Manifest path: duplicate entries are distinct documents, one row
     each holding the file's exact text once (no read-twice doubling, line
     endings as on disk) — from read_corpus and the manifest_corpus
-    DataSource alike."""
+    stream reader alike."""
     f = tmp_path / "doc.txt"
     f.write_bytes(b"one two\r\nthree\n")
     manifest = tmp_path / "m.txt"
     manifest.write_text(f"2\n{f}\n{f}\n")
     from mapreduce_model_spark.sources.manifest import read_corpus
-    from mapreduce_model_spark.sources.pyds import register
+    from mapreduce_model_spark.sources.pyds import ManifestStreamReader
 
-    register(spark)
-    ds = spark.read.format("manifest_corpus").option("path", str(manifest)).load()
-    for df in (read_corpus(spark, str(manifest)), ds):
-        assert sorted((r.doc_id, r.text) for r in df.collect()) == [
-            (1, "one two\r\nthree\n"),
-            (2, "one two\r\nthree\n"),
-        ]
+    expected = [(1, "one two\r\nthree\n"), (2, "one two\r\nthree\n")]
+    assert sorted((r.doc_id, r.text) for r in read_corpus(spark, str(manifest)).collect()) == expected
+    rows, end = ManifestStreamReader({"path": str(manifest)}).read({"index": 0})
+    assert list(rows) == expected and end == {"index": 2}
 
 
 def test_word_doc_pairs_narrow_generated(spark, generated_corpus):
     """One row is one document, so the per-file word set is a narrow
     per-row array_distinct: over a 1-partition frame (a microbatch's shape)
     the pairs plan has no Exchange, and its rows are already distinct and
-    equal the pure-Python model's pairs."""
+    equal the pure-Python model's pairs. read_corpus holds one row per
+    manifest position (the file listed twice is documents 3 and 41), and
+    the index built on it equals the model's."""
     from collections import Counter
 
-    from mapreduce_model_spark.operators.inverted_index import word_doc_pairs
+    from mapreduce_model_spark.operators.inverted_index import invert, word_doc_pairs
     from mapreduce_model_spark.sources.manifest import read_corpus
     from tests.pymodel import inverted_index
 
     manifest, docs = generated_corpus
-    pairs = word_doc_pairs(read_corpus(spark, manifest).coalesce(1))
+    corpus = read_corpus(spark, manifest)
+    assert sorted(map(tuple, corpus.collect())) == sorted(docs.items())
+    model = inverted_index(docs)
+    assert any(3 in ids and 41 in ids for ids in model.values())
+    index = sorted((r.letter, r.word, tuple(r.docs)) for r in invert(corpus).collect())
+    assert index == sorted((w[0], w, tuple(ids)) for w, ids in model.items())
+
+    pairs = word_doc_pairs(corpus.coalesce(1))
     got = Counter((r.word, r.doc_id) for r in pairs.collect())
     plan = pairs._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan
     assert max(got.values()) == 1
-    assert set(got) == {(w, d) for w, ids in inverted_index(docs).items() for d in ids}
+    assert set(got) == {(w, d) for w, ids in model.items() for d in ids}
 
 
 def _jobs_in_group(spark, group, action):

@@ -4,7 +4,6 @@ reimplementations that share NO construction logic with the SQL oracles
 
 import hashlib
 import math
-import re
 
 import pyarrow.parquet as pq
 import pytest
@@ -14,6 +13,7 @@ from pyspark.sql import functions as F
 
 from mapreduce_model_spark.operators.skyline import pareto_frontier
 from mapreduce_model_spark.registry import QUERIES
+from tests.pymodel import words
 
 points = st.lists(
     st.tuples(st.integers(0, 50), st.integers(0, 50)), min_size=1, max_size=60
@@ -95,10 +95,6 @@ def test_morton_sql_matches_bit_interleave(spark, xy):
         assert r.z == _morton16(r.x, r.y), (r.x, r.y)
 
 
-def _words(text: str):
-    return [w for w in (re.sub("[^a-z]", "", t.lower()) for t in text.strip().split()) if w]
-
-
 def test_bigram_pmi_matches_python_recompute(spark, sf_dir):
     """PMI ranking equals a pure-Python recount over the same corpus
     (collections.Counter, math.log) — tokenization, min-support, and the
@@ -108,7 +104,7 @@ def test_bigram_pmi_matches_python_recompute(spark, sf_dir):
     tbl = pq.read_table(f"{sf_dir}/documents.parquet", columns=["text"])
     uni, bi = Counter(), Counter()
     for text in tbl["text"].to_pylist():
-        ws = _words(text)
+        ws = words(text)
         uni.update(ws)
         bi.update(f"{a} {b}" for a, b in zip(ws, ws[1:]))
     tu, tb = float(sum(uni.values())), float(sum(bi.values()))
@@ -140,7 +136,7 @@ def test_token_entropy_matches_python_recompute(spark, sf_dir):
     tbl = pq.read_table(f"{sf_dir}/documents.parquet", columns=["source", "text"])
     per = defaultdict(Counter)
     for src, text in zip(tbl["source"].to_pylist(), tbl["text"].to_pylist()):
-        per[src].update(_words(text))
+        per[src].update(words(text))
     got = {r.source: r for r in QUERIES["token_entropy"](spark, sf_dir).collect()}
     assert set(got) == set(per)
     for src, cnt in per.items():

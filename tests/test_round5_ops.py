@@ -398,7 +398,7 @@ def test_phrase_search_matches_string_find(spark):
     """Positional-join results must equal direct normalized-substring
     counting (adjacent-pair scan) per doc."""
     from mapreduce_model_spark.registry import table
-    import re
+    from tests.pymodel import words as py_words
 
     got = {
         r["doc_id"]: (r["n_occurrences"], r["first_pos"])
@@ -406,11 +406,7 @@ def test_phrase_search_matches_string_find(spark):
     }
     exp = {}
     for r in table(spark, SF, "documents").select("doc_id", "text").collect():
-        words = [
-            re.sub(r"[^a-z]", "", t.lower())
-            for t in r["text"].strip().split()
-        ]
-        words = [w for w in words if w]
+        words = py_words(r["text"])
         hits = [
             i
             for i in range(len(words) - 1)

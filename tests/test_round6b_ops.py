@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from mapreduce_model_spark.registry import QUERIES
+from tests.pymodel import words as py_words
 
 
 def test_dup_spans_contiguous_disjoint_maximal(spark, sf_dir):
@@ -155,14 +156,9 @@ def test_quality_classifier_matches_numpy_gd(spark, sf_dir, monkeypatch, gate):
         monkeypatch.setattr(queries_text, "_QC_LOCAL_DOCS", gate)
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").collect()
-    import re
-
     feats, ys, ids = [], [], []
     for r in docs:
-        words = [
-            re.sub(r"[^a-z]", "", t.lower()) for t in r["text"].strip().split()
-        ]
-        words = [w for w in words if w]
+        words = py_words(r["text"])
         if not words:
             continue
         x = np.zeros(_QC_B + 1)
@@ -216,7 +212,6 @@ def _py_bpe(spark, sf_dir):
     """Reference python BPE (greedy left-to-right merge on symbol lists —
     the same semantics the sentinel-space string rewrite implements):
     returns (merge trajectory, final word→symbols segmentation, counts)."""
-    import re
     from collections import Counter
 
     from mapreduce_model_spark.queries_text import _BPE_STEPS
@@ -224,10 +219,7 @@ def _py_bpe(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").collect()
     wc: Counter = Counter()
     for r in docs:
-        for t in r["text"].strip().split():
-            w = re.sub(r"[^a-z]", "", t.lower())
-            if w:
-                wc[w] += 1
+        wc.update(py_words(r["text"]))
     segs = {w: list(w) for w in wc}
 
     def merge(sym, pair):
@@ -444,7 +436,6 @@ def test_lexical_topk_matches_python_recompute(spark, sf_dir):
     rank order and id tie-breaks; self never appears."""
     import hashlib
     import math
-    import re
     from collections import Counter
 
     from mapreduce_model_spark.queries_text import _LEX_NQ, _LEX_TOPK
@@ -452,8 +443,7 @@ def test_lexical_topk_matches_python_recompute(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").collect()
     tfs = {}
     for r in docs:
-        words = [re.sub(r"[^a-z]", "", t.lower()) for t in r["text"].strip().split()]
-        words = [w for w in words if w]
+        words = py_words(r["text"])
         if words:
             c = Counter(
                 int(hashlib.md5(w.encode()).hexdigest()[:8], 16) for w in words

@@ -30,7 +30,7 @@ from mapreduce_model_spark.registry import QUERIES, table
 
 def _w(i: int) -> str:
     """Unique pure-letter token (digits would be stripped by the
-    reference tokenizer's [^a-z] rule and collide)."""
+    reference tokenizer's non-letter strip and collide)."""
     out = []
     i += 1
     while i:
@@ -124,7 +124,7 @@ def test_ngram_udtf_matches_jvm_on_nonascii_whitespace(spark, sf_dir):
     """The UDTF's Python tokenizer must agree with the JVM words_array on
     NON-ASCII whitespace: Python's \\s is Unicode-aware (splits U+00A0),
     Java's is not — the UDTF uses an explicit ASCII class so all engines
-    keep 'ab\\u00a0cd' as ONE token whose [^a-z] strip yields 'abcd'.
+    keep 'ab\\u00a0cd' as ONE token whose non-letter strip yields 'abcd'.
     Guards the advertised tokenizer triple-parity beyond ASCII corpora
     (the review finding that motivated the explicit class)."""
     from mapreduce_model_spark.functions.text import words_array

@@ -3,6 +3,7 @@ the fallbacks, and the conf-directory rule. Every test points the temp
 dir at its own ``tmp_path``, so none touches the suite's archive."""
 
 import os
+import stat
 import subprocess
 import sys
 import tempfile
@@ -92,7 +93,34 @@ def test_a_live_lock_holder_keeps_others_from_dumping(cache):
     assert held == f"{os.getpid()}\n"
     assert session.ClassArchive.open("8g") is None
     assert (cache / f"{_key()}.lock").read_text() == held
+    assert stat.S_IMODE(cache.stat().st_mode) == 0o700
     first.release()
+
+
+@pytest.mark.parametrize("shared", ["mode_777", "symlink"])
+def test_a_cache_others_can_write_is_not_used(cache, tmp_path, shared):
+    """A cache writable by another user (mode 0777, or a symlink to a
+    directory anyone may have made) could hold an archive they planted:
+    the start runs without an archive and writes nothing there."""
+    if shared == "mode_777":
+        cache.mkdir()
+        cache.chmod(0o777)
+        planted = cache
+    else:
+        planted = tmp_path / "elsewhere"
+        planted.mkdir(mode=0o700)
+        cache.symlink_to(planted)
+    assert session.ClassArchive.open("8g") is None
+    assert os.listdir(planted) == [] and "SPARK_CONF_DIR" not in os.environ
+
+
+def test_a_cache_owned_by_another_user_is_not_used(cache):
+    if os.getuid() != 0:
+        pytest.skip("making a directory owned by another user needs root")
+    cache.mkdir(mode=0o755)
+    os.chown(cache, 65534, 65534)
+    assert session.ClassArchive.open("8g") is None
+    assert os.listdir(cache) == [] and "SPARK_CONF_DIR" not in os.environ
 
 
 @pytest.mark.parametrize(

@@ -34,13 +34,11 @@ Env:
                       across the 200+ query suite). DEFAULT OFF: the r1-r6
                       records were measured without it, and flipping it
                       would silently shift every cross-round ratio.
-                      Interplay with the PQ training memo
-                      (queries_similarity._TRAIN_CACHE): clearCache()
-                      unpersists the memoized training frames, and the
-                      cache EVICTS such entries on next lookup (rebuilding
-                      and re-persisting once) — so with this flag each PQ
-                      family member re-pays its own training, i.e. you are
-                      measuring the r6-era unshared behavior by design.
+                      No query keeps a memo between calls; without this
+                      flag a later run can still read a frame an earlier
+                      one persisted, where Spark's CacheManager matches
+                      the plan (operator-internal persists, e.g. pq_fit's
+                      corpus view).
   BENCH_CHUNK         DEFAULT 30 (since r11 — the chunked record IS the
                       record of note; set 0 for the legacy single-session
                       mode). N > 0 → run the suite as sequential CHILD processes
@@ -59,9 +57,8 @@ Env:
                       if set); the LEGACY single-session record keeps its
                       default path/format so cross-round ratios stay
                       interpretable during the transition. Chunk boundary
-                      note: persisted-frame sharing (PQ training memo)
-                      only spans queries inside one chunk, so keep
-                      families within a chunk or read the family SUM.
+                      note: CacheManager reuse of persisted frames only
+                      spans queries inside one chunk.
 """
 
 from __future__ import annotations

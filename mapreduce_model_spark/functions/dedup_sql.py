@@ -6,7 +6,7 @@ between two registry-loaded modules deadlocks at import (registry._load()
 imports them in a fixed order, so whichever loads first is still
 partially-initialized when the other asks for its constants — caught in
 the r6 review as a live circular-import crash). This module imports only
-operators.dedup, never the registry.
+functions.text and operators.dedup, never the registry.
 
 The oracle SQL is generated from the same constants (permutation params,
 band geometry, thresholds) as the Spark plans — one source of truth.
@@ -14,6 +14,12 @@ band geometry, thresholds) as the Spark plans — one source of truth.
 
 from __future__ import annotations
 
+from mapreduce_model_spark.functions.text import (
+    ASCII_LOWER,
+    ASCII_UPPER,
+    C_SPACE,
+    NON_WORD,
+)
 from mapreduce_model_spark.operators.dedup import MERSENNE_P, perm_params
 
 K = 32
@@ -33,22 +39,25 @@ SIG_SQL = (
 )
 
 
-def tokens_sql() -> str:
-    """DuckDB twin of ``functions.text.tokens_array("text")``: split the
-    trimmed text on runs of the C locale's six whitespace bytes
-    (main.cc:73). Spelled out because RE2's ``\\s`` lacks ``\\v``, which
-    Java's ``\\s`` and C ``isspace`` both hold."""
-    return r"regexp_split_to_array(trim(text), '[ \t\n\v\f\r]+')"
+def tokens_sql(src: str = "text", var: str = "w") -> str:
+    """DuckDB twin of ``functions.text.tokens_array``: split ``src`` on runs
+    of ``C_SPACE`` (main.cc:73), empty tokens dropped. ``var`` names the
+    lambda parameter."""
+    return (
+        f"list_filter(regexp_split_to_array({src}, '{C_SPACE}+'), "
+        f"{var} -> {var} <> '')"
+    )
 
 
 def words_sql(var: str = "t") -> str:
-    """DuckDB twin of ``functions.text.words_array("text")``: ``tokens_sql``,
-    lowercase, strip non-letters, drop empty words — the one oracle
+    """DuckDB twin of ``functions.text.words_array("text")``: the same
+    ASCII lowercase and strip, then ``tokens_sql`` — the one oracle
     words-array expression. ``var`` names the lambda parameter."""
-    return f"""list_filter(
-               list_transform({tokens_sql()},
-                              {var} -> regexp_replace(lower({var}), '[^a-z]', '', 'g')),
-               w -> length(w) > 0)"""
+    letters = (
+        f"regexp_replace(translate(text, '{ASCII_UPPER}', '{ASCII_LOWER}'), "
+        f"'{NON_WORD}', '', 'g')"
+    )
+    return tokens_sql(letters, var)
 
 
 def shingle_cte(src: str = "documents", sfx: str = "") -> str:

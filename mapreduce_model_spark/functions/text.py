@@ -24,23 +24,41 @@ STOPWORDS = (
     "was this which not have has had but they you we he she"
 ).split()
 
-# BPE-ish token pattern: letter runs | digit runs | single non-space symbol.
-BPE_TOKEN_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
+# C ``isspace``: the six bytes ``fin >> word`` splits on (main.cc:73), one
+# class for Spark (Java regex) and DuckDB (RE2). Spelled out because RE2's
+# ``\s`` lacks ``\v``, and ``\x0B`` because Java's ``\v`` also matches
+# ``\x85``, U+2028 and U+2029.
+C_SPACE = r"[ \t\n\x0B\f\r]"
+_C_SPACE_CHARS = C_SPACE[1:-1]
+# C ``::tolower`` maps only A-Z (main.cc:75); Unicode ``lower`` also maps
+# the Kelvin sign to ``k`` and U+0130 to ``i``.
+ASCII_UPPER = "ABCDEFGHIJKLMNOPQRSTUVWXYZ"
+ASCII_LOWER = ASCII_UPPER.lower()
+# What ``normalize`` strips (main.cc:33-42): anything but [a-z], sparing
+# the separators the split after it needs.
+NON_WORD = f"[^a-z{_C_SPACE_CHARS}]"
+
+# A symbol: neither alphanumeric nor C whitespace.
+SYMBOL = f"[^A-Za-z0-9{_C_SPACE_CHARS}]"
+# BPE-ish token pattern: letter runs | digit runs | single symbol.
+BPE_TOKEN_RE = f"[A-Za-z]+|[0-9]+|{SYMBOL}"
 
 
 def tokens_array(text: Column | str) -> Column:
-    """Whitespace tokens (A3). ``split`` on ``\\s+`` after trim: no empty
-    leading token. Java's ``\\s`` is C ``isspace``'s six bytes (main.cc:73);
-    the DuckDB twin is ``functions.dedup_sql.tokens_sql``."""
+    """Whitespace tokens (A3): split on runs of ``C_SPACE``, empty tokens
+    dropped — what ``fin >> word`` reads (main.cc:73). The DuckDB twin is
+    ``functions.dedup_sql.tokens_sql``."""
     c = F.col(text) if isinstance(text, str) else text
-    return F.split(F.trim(c), r"\s+")
+    return F.array_remove(F.split(c, C_SPACE + "+"), "")
 
 
 def words_array(text: Column | str) -> Column:
-    """Normalized words (A4+A5): lowercase, strip [^a-z], drop empties."""
-    return F.filter(
-        F.transform(tokens_array(text), lambda t: F.regexp_replace(F.lower(t), "[^a-z]", "")),
-        lambda w: F.length(w) > 0,
+    """Normalized words (A3-A5): ASCII-lowercase, strip every character that
+    is neither [a-z] nor C whitespace, then split into non-empty tokens.
+    Built-in expressions only, so the scan stays in whole-stage codegen."""
+    c = F.col(text) if isinstance(text, str) else text
+    return tokens_array(
+        F.regexp_replace(F.translate(c, ASCII_UPPER, ASCII_LOWER), NON_WORD, "")
     )
 
 

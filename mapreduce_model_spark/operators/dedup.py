@@ -33,7 +33,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mapreduce_model_spark.functions.partitioning import spread_for_fanout
-from mapreduce_model_spark.functions.text import md5_int32, shingles, words_array
+from mapreduce_model_spark.functions.text import (
+    C_SPACE,
+    md5_int32,
+    shingles,
+    words_array,
+)
 
 MERSENNE_P = 2147483647  # 2^31 - 1
 
@@ -51,7 +56,7 @@ def perm_params(k: int, seed: int = 42) -> list[tuple[int, int]]:
 
 def normalize_text(col):
     """Canonical form for exact dedup: lowercase, collapse whitespace, trim."""
-    return F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))
+    return F.trim(F.regexp_replace(F.lower(col), C_SPACE + "+", " "))
 
 
 def dedup_exact(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -411,7 +416,6 @@ def ngram_jaccard_pairs(
     shingle_k: int = 3,
     threshold: float = 0.5,
     max_shingle_df: int = 50,
-    pairs: DataFrame | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard over pairs blocked by shared rare shingles.
 
@@ -419,13 +423,11 @@ def ngram_jaccard_pairs(
     *blocking only* (all shingles still count in the Jaccard), bounding the
     pair join. Output: (id_a, id_b, jaccard) for pairs ≥ threshold **that
     share at least one rare shingle** — the documented recall contract.
-    Pair engine: :func:`_blocked_pair_intersections`; ``pairs`` injects a
-    precomputed (shared, persisted) run of it.
+    Pair engine: :func:`_blocked_pair_intersections`.
     """
-    if pairs is None:
-        pairs = _blocked_pair_intersections(
-            df, text_col, id_col, shingle_k, max_shingle_df
-        )
+    pairs = _blocked_pair_intersections(
+        df, text_col, id_col, shingle_k, max_shingle_df
+    )
     return (
         pairs.withColumn(
             "jaccard",
@@ -443,7 +445,6 @@ def jaccard_decile_pairs(
     shingle_k: int = 3,
     max_shingle_df: int = 50,
     sets: DataFrame | None = None,
-    pairs: DataFrame | None = None,
 ) -> DataFrame:
     """Exact-Jaccard pairs ≥ 0.5 with an INTEGER-EXACT decile label:
     ``j_decile = (10·|A∩B|) div |A∪B|`` (5..10), pairs kept iff
@@ -454,13 +455,11 @@ def jaccard_decile_pairs(
     This is the ground-truth side of the LSH recall audit
     (``lsh_recall_report``); same rare-shingle blocking (recall contract)
     and pair engine as :func:`ngram_jaccard_pairs`. ``sets`` forwards a
-    shared persisted :func:`shingle_set_arrays` frame to the pair engine;
-    ``pairs`` injects a precomputed (shared, persisted) run of it whole.
+    shared persisted :func:`shingle_set_arrays` frame to the pair engine.
     """
-    if pairs is None:
-        pairs = _blocked_pair_intersections(
-            df, text_col, id_col, shingle_k, max_shingle_df, sets=sets
-        )
+    pairs = _blocked_pair_intersections(
+        df, text_col, id_col, shingle_k, max_shingle_df, sets=sets
+    )
     u = F.col("n_a").cast("long") + F.col("n_b") - F.col("n_inter")
     return (
         pairs.withColumn("u", u)
@@ -480,7 +479,6 @@ def containment_pairs(
     shingle_k: int = 3,
     threshold: float = 0.6,
     max_shingle_df: int = 50,
-    pairs: DataFrame | None = None,
 ) -> DataFrame:
     """Asymmetric shingle containment C(a→b) = |A∩B| / |A| over the same
     rare-shingle-blocked candidates as :func:`ngram_jaccard_pairs`.
@@ -491,13 +489,11 @@ def containment_pairs(
     wrapping / partial-scrape case a dedup pass built only on Jaccard keeps
     shipping twice. Pairs kept when either direction ≥ threshold; both
     directions reported so the CONTAINED side (the smaller doc) is
-    identifiable downstream. ``pairs`` injects a precomputed (shared,
-    persisted) pair-engine run.
+    identifiable downstream.
     """
-    if pairs is None:
-        pairs = _blocked_pair_intersections(
-            df, text_col, id_col, shingle_k, max_shingle_df
-        )
+    pairs = _blocked_pair_intersections(
+        df, text_col, id_col, shingle_k, max_shingle_df
+    )
     c_ab = F.col("n_inter") / F.col("n_a")
     c_ba = F.col("n_inter") / F.col("n_b")
     return (
@@ -576,7 +572,6 @@ def simhash_hamming_pairs(
     bits: int = 32,
     max_hamming: int = 3,
     max_block: int = 500,
-    sim: DataFrame | None = None,
 ) -> DataFrame:
     """Near-dup pairs from SimHash — the downstream pairing step
     :func:`simhash`'s docstring defers: ``(id_a, id_b, hamming)`` for all
@@ -588,13 +583,11 @@ def simhash_hamming_pairs(
     same-block candidates. ``max_block`` drops degenerate hot blocks (the
     LSH max_bucket argument) before the join. Every predicate is exact
     integer arithmetic (shifts, xor, popcount) — no float anywhere, fully
-    hash-checkable including the selection. ``sim`` injects a precomputed
-    (shared, persisted) :func:`simhash` frame."""
+    hash-checkable including the selection."""
     nb = max_hamming + 1
     width = bits // nb
     mask = (1 << width) - 1
-    h = simhash(df, text_col, id_col, bits) if sim is None else sim
-    blocks = h.select(
+    blocks = simhash(df, text_col, id_col, bits).select(
         id_col,
         "simhash",
         F.explode(

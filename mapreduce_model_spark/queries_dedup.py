@@ -46,6 +46,7 @@ from mapreduce_model_spark.functions.sampling import (
     sample_frame,
     sample_frame_fine,
 )
+from mapreduce_model_spark.functions.text import C_SPACE
 from mapreduce_model_spark.registry import query, table
 
 # Unsuffixed instances over the raw documents table — the shapes every
@@ -55,10 +56,10 @@ _SHX = "\nWITH " + shingle_cte() + "\n"
 
 @query(
     "dedup_exact",
-    oracle=r"""
+    oracle=f"""
 WITH h AS (
     SELECT doc_id,
-           md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS text_hash
+           md5(trim(regexp_replace(lower(text), '{C_SPACE}+', ' ', 'g'))) AS text_hash
     FROM documents
 ), ranked AS (
     SELECT doc_id, text_hash,
@@ -84,7 +85,9 @@ def q_minhash_sig(spark, sf_dir):
     """Per-doc MinHash signature (k=32, md5-derived — byte-identical in
     DuckDB, a fully checkable sketch). Joined to a comma string so the
     driver's value hash never touches an array column."""
-    sig = _mh_sig(spark, sf_dir)
+    sig = minhash_signatures(
+        table(spark, sf_dir, "documents"), k=K, shingle_k=SHINGLE_K
+    )
     return sig.select(
         "doc_id",
         F.array_join(F.transform("sig", lambda x: x.cast("string")), ",").alias("sig"),
@@ -103,73 +106,19 @@ FROM est WHERE est_jaccard >= {LSH_THRESHOLD}
 )
 def q_near_minhash(spark, sf_dir):
     """MinHash-LSH near-duplicate pairs (8 bands × 4 rows, est-J ≥ 0.5)."""
-    return _mh_pairs(spark, sf_dir)
+    return _mh_pairs(table(spark, sf_dir, "documents"))
 
 
-def _dedup_memo(spark, sf_dir, kind, build):
-    """Session-keyed memo of a persisted frame (the established
-    _TRAIN_CACHE pattern — queries_similarity._train_cache_lookup holds
-    the lifecycle rules: stopped sessions pruned, clearCache-evicted
-    entries rebuilt). The dedup family's repeated sub-pipelines live
-    here."""
-    from mapreduce_model_spark.queries_similarity import (
-        _TRAIN_CACHE,
-        _train_cache_lookup,
-    )
-
-    key, hit = _train_cache_lookup(spark, sf_dir, kind)
-    if hit is None:
-        _TRAIN_CACHE[key] = (build().persist(),)
-    return _TRAIN_CACHE[key][0]
-
-
-def _oph_sig(spark, sf_dir):
-    """Memoized one-permutation (OPH) wide signature frame (h0..h{k-1})
-    over the full corpus — consumed by the signature output face
-    (dedup_minhash_oph) and the OPH pair pipeline (dedup_near_oph)."""
-    return _dedup_memo(
-        spark,
-        sf_dir,
-        "oph_sig",
-        lambda: oph_signatures(
-            table(spark, sf_dir, "documents"), k=K, shingle_k=SHINGLE_K
-        ),
-    )
-
-
-def _mh_sig(spark, sf_dir):
-    """Memoized classic-MinHash signature frame over the full corpus —
-    consumed by the signature output face (dedup_minhash_sig) and the
-    pair build (_mh_pairs)."""
-    return _dedup_memo(
-        spark,
-        sf_dir,
-        "mh_sig",
-        lambda: minhash_signatures(
-            table(spark, sf_dir, "documents"), k=K, shingle_k=SHINGLE_K
-        ),
-    )
-
-
-def _mh_pairs(spark, sf_dir):
-    """The MinHash-LSH pair frame over the full document corpus at the
-    family constants, memoized per session. FIVE registered queries
-    consume this identical frame (dedup_near_minhash, dedup_clusters,
-    split_leakage, dedup_cross_source, dedup_cluster_quality); before
-    r12 each rebuilt the signature + banding + bucket self-join pipeline
-    from parquet. Exactly the sharing move the r6 verdict prescribed for
-    the PQ family and the r11 verdict prescribed for the recall family."""
-    return _dedup_memo(
-        spark,
-        sf_dir,
-        "mh_pairs",
-        lambda: lsh_near_dup_pairs(
-            _mh_sig(spark, sf_dir),
-            bands=BANDS,
-            rows=ROWS,
-            threshold=LSH_THRESHOLD,
-            max_bucket=MAX_BUCKET,
-        ),
+def _mh_pairs(docs):
+    """The MinHash-LSH pair frame at the family constants — the pair
+    build of dedup_near_minhash, dedup_clusters, split_leakage,
+    dedup_cross_source and dedup_cluster_quality."""
+    return lsh_near_dup_pairs(
+        minhash_signatures(docs, k=K, shingle_k=SHINGLE_K),
+        bands=BANDS,
+        rows=ROWS,
+        threshold=LSH_THRESHOLD,
+        max_bucket=MAX_BUCKET,
     )
 
 
@@ -192,7 +141,9 @@ def q_minhash_oph(spark, sf_dir):
     per-bin collision estimator (agreement ≈ Jaccard, pinned in tests).
     Fully hash-checked — every densified value is md5-derived arithmetic
     DuckDB reproduces bit-identically, empty-bin borrowing included."""
-    sig = _oph_sig(spark, sf_dir)
+    sig = oph_signatures(
+        table(spark, sf_dir, "documents"), k=K, shingle_k=SHINGLE_K
+    )
     return sig.select(
         "doc_id",
         F.concat_ws(
@@ -223,11 +174,8 @@ def q_near_oph(spark, sf_dir):
     operator and the shared banding_cte SQL tail. At 100 TB this is the
     configuration you'd actually run: OPH signatures upstream, identical
     candidate generation downstream."""
-    # pack the memoized wide OPH frame (shared with dedup_minhash_oph)
-    # into the (id, sig array) shape the pair operator consumes — the
-    # same select oph_signatures_array performs on a fresh build
-    sig_arr = _oph_sig(spark, sf_dir).select(
-        "doc_id", F.array(*[f"h{i}" for i in range(K)]).alias("sig")
+    sig_arr = oph_signatures_array(
+        table(spark, sf_dir, "documents"), k=K, shingle_k=SHINGLE_K
     )
     return lsh_near_dup_pairs(
         sig_arr, bands=BANDS, rows=ROWS, threshold=LSH_THRESHOLD, max_bucket=MAX_BUCKET
@@ -301,73 +249,7 @@ GROUP BY t.j_decile
     )
 
 
-def _shingle_sets(spark, sf_dir, docs, tag):
-    """Memoized per-doc shingle-hash SET arrays for a corpus ``tag`` —
-    the one tokenize+shingle+md5 pass every blocked-Jaccard / signature
-    pipeline derives from. ``tag`` names the corpus — "full", or the
-    sampler cap when sampling actually applied (at generated scales the
-    sampled corpora differ, so each gets its own entry and nothing is
-    shared across different doc relations)."""
-    from mapreduce_model_spark.operators.dedup import shingle_set_arrays
-
-    return _dedup_memo(
-        spark,
-        sf_dir,
-        f"shsets_{tag}",
-        lambda: shingle_set_arrays(docs, k=SHINGLE_K),
-    )
-
-
-def _blocked_pairs(spark, sf_dir, docs, tag):
-    """Memoized blocked-pair intersection frame
-    (id_a, id_b, n_inter, n_a, n_b) — the pre-threshold candidate engine
-    shared by dedup_ngram_jaccard, dedup_containment, and the
-    recall-audit truth (all run the IDENTICAL rare-shingle blocking at
-    the family constants; before r12 each rebuilt the self-join +
-    array_intersect pass from parquet)."""
-    from mapreduce_model_spark.operators.dedup import (
-        _blocked_pair_intersections,
-    )
-
-    sets = _shingle_sets(spark, sf_dir, docs, tag)
-    return _dedup_memo(
-        spark,
-        sf_dir,
-        f"bpairs_{tag}",
-        lambda: _blocked_pair_intersections(
-            docs, "text", "doc_id", SHINGLE_K, MAX_SHINGLE_DF, sets=sets
-        ),
-    )
-
-
-def _recall_shared(spark, sf_dir, docs, tag):
-    """(sets, truth) for the recall-audit family, memoized per
-    (session, sf_dir, corpus tag) — the r11 verdict's _TRAIN_CACHE ask:
-    all four recall faces (lsh/simhash × report/sampled) verify against
-    the SAME blocked exact-Jaccard ground truth, and whenever their doc
-    relation coincides (always at driver scales, where the sampled twins'
-    caps don't bind and sample_frame returns the corpus untouched) the
-    truth and the per-doc shingle-set arrays were being rebuilt once per
-    face. Same session-keyed lifecycle rules as the PQ training memo
-    (queries_similarity._train_cache_lookup): stopped sessions pruned,
-    clearCache-evicted entries rebuilt. The truth itself is the integer
-    decile tail over the memoized blocked-pair engine (_blocked_pairs)."""
-    sets = _shingle_sets(spark, sf_dir, docs, tag)
-    truth = _dedup_memo(
-        spark,
-        sf_dir,
-        f"truth_{tag}",
-        lambda: jaccard_decile_pairs(
-            docs,
-            shingle_k=SHINGLE_K,
-            max_shingle_df=MAX_SHINGLE_DF,
-            pairs=_blocked_pairs(spark, sf_dir, docs, tag),
-        ),
-    )
-    return sets, truth
-
-
-def _lsh_recall_frame(spark, sf_dir, docs, tag):
+def _lsh_recall_frame(docs):
     """Shared engine body of lsh_recall_report and its sampled twin —
     identical pipeline, parameterized only on the doc frame.
 
@@ -380,10 +262,14 @@ def _lsh_recall_frame(spark, sf_dir, docs, tag):
     by construction: both signature forms are set-based mins over the
     same distinct hashes (operators/dedup.py docstrings). This is NOT the
     rejected r-earlier experiment, which persisted the EXPLODED
-    |docs|×|shingles| row frame and lost to the cache write. sets + truth
-    additionally memoize across the family via _recall_shared."""
+    |docs|×|shingles| row frame and lost to the cache write."""
+    from mapreduce_model_spark.operators.dedup import shingle_set_arrays
 
-    sets, truth = _recall_shared(spark, sf_dir, docs, tag)
+    # read by the truth's pair engine and both signature pipelines
+    sets = shingle_set_arrays(docs, k=SHINGLE_K).persist()
+    truth = jaccard_decile_pairs(
+        docs, shingle_k=SHINGLE_K, max_shingle_df=MAX_SHINGLE_DF, sets=sets
+    )
     shx = sets.select("doc_id", F.explode("xs").alias("x"))
     mh = lsh_near_dup_pairs(
         minhash_signatures(docs, k=K, shingle_k=SHINGLE_K, shingle_hashes=shx),
@@ -448,9 +334,7 @@ def q_lsh_recall_report(spark, sf_dir):
     # codegen-fused tokenize+md5 scan stages it saves (same codegen-beats-
     # sharing economics as minhash_signatures' rejected narrow form). The
     # report deliberately costs the sum of its three audited parts.
-    return _lsh_recall_frame(
-        spark, sf_dir, table(spark, sf_dir, "documents"), "full"
-    )
+    return _lsh_recall_frame(table(spark, sf_dir, "documents"))
 
 
 @query(
@@ -474,12 +358,9 @@ def q_lsh_recall_sampled(spark, sf_dir):
     engines. At 100 TB the sampled audit IS the production audit; the
     parent is the exhaustive small-scale exemplar."""
     docs = table(spark, sf_dir, "documents")
-    sampled = sample_frame_fine(docs, "doc_id", cap=LSH_RECALL_SAMPLE_CAP)
-    # identity ⇔ the cap didn't bind ⇔ the corpus IS the parent's — share
-    # the parent's memoized sets/truth; a truly sampled corpus gets its
-    # own key
-    tag = "full" if sampled is docs else f"fine{LSH_RECALL_SAMPLE_CAP}"
-    return _lsh_recall_frame(spark, sf_dir, sampled, tag)
+    return _lsh_recall_frame(
+        sample_frame_fine(docs, "doc_id", cap=LSH_RECALL_SAMPLE_CAP)
+    )
 
 
 def _simhash_sql(src: str = "documents") -> str:
@@ -508,26 +389,12 @@ SELECT doc_id, CAST({bits} AS BIGINT) AS simhash FROM vs
 """
 
 
-def _simhash_frame(spark, sf_dir, docs, tag):
-    """Memoized TF-weighted SimHash frame for a corpus ``tag`` — consumed
-    by the hash output face (dedup_simhash), the pairing face
-    (dedup_simhash_pairs), and the recall faces' hamming gate."""
-    return _dedup_memo(
-        spark,
-        sf_dir,
-        f"simhash_{tag}",
-        lambda: simhash(docs, bits=SIMHASH_BITS),
-    )
-
-
 @query("dedup_simhash", oracle=_simhash_sql())
 def q_simhash(spark, sf_dir):
     """TF-weighted 32-bit SimHash per doc — no pair join, the cheapest
     near-dup signal at scale; hamming-distance pairing is done downstream
     (tests cover the property: identical docs → identical hash)."""
-    return _simhash_frame(
-        spark, sf_dir, table(spark, sf_dir, "documents"), "full"
-    )
+    return simhash(table(spark, sf_dir, "documents"), bits=SIMHASH_BITS)
 
 
 _SIMHASH_MAX_HAM, _SIMHASH_MAX_BLOCK = 3, 500
@@ -576,13 +443,11 @@ def q_simhash_pairs(spark, sf_dir):
     |docs|-sized, the join carries (id, 8-byte hash) only."""
     from mapreduce_model_spark.operators.dedup import simhash_hamming_pairs
 
-    docs = table(spark, sf_dir, "documents")
     return simhash_hamming_pairs(
-        docs,
+        table(spark, sf_dir, "documents"),
         bits=SIMHASH_BITS,
         max_hamming=_SIMHASH_MAX_HAM,
         max_block=_SIMHASH_MAX_BLOCK,
-        sim=_simhash_frame(spark, sf_dir, docs, "full"),
     )
 
 
@@ -628,21 +493,20 @@ GROUP BY t.j_decile
     )
 
 
-def _simhash_recall_frame(spark, sf_dir, docs, tag):
-    """Shared engine body of simhash_recall_report and its sampled twin.
-    The blocked exact-Jaccard truth comes from the family memo
-    (_recall_shared) — identical corpus ⇒ identical truth, so the four
-    recall faces pay the truth pair join once per session, not once
-    each."""
+def _simhash_recall_frame(docs):
+    """Shared engine body of simhash_recall_report and its sampled twin:
+    the blocked exact-Jaccard truth of lsh_recall_report against the
+    hamming ≤ 3 SimHash gate."""
     from mapreduce_model_spark.operators.dedup import simhash_hamming_pairs
 
-    _, truth = _recall_shared(spark, sf_dir, docs, tag)
+    truth = jaccard_decile_pairs(
+        docs, shingle_k=SHINGLE_K, max_shingle_df=MAX_SHINGLE_DF
+    )
     hits = simhash_hamming_pairs(
         docs,
         bits=SIMHASH_BITS,
         max_hamming=_SIMHASH_MAX_HAM,
         max_block=_SIMHASH_MAX_BLOCK,
-        sim=_simhash_frame(spark, sf_dir, docs, tag),
     ).select("id_a", "id_b", F.lit(1).alias("hit"))
     joined = truth.join(hits, ["id_a", "id_b"], "left")
     n = F.count(F.lit(1))
@@ -670,9 +534,7 @@ def q_simhash_recall_report(spark, sf_dir):
     Scale: same shapes as the parents — blocked truth join, pigeonhole
     block equi-join, recall join on pair-table rows; run over a sampled
     partition at 100 TB."""
-    return _simhash_recall_frame(
-        spark, sf_dir, table(spark, sf_dir, "documents"), "full"
-    )
+    return _simhash_recall_frame(table(spark, sf_dir, "documents"))
 
 
 @query(
@@ -693,9 +555,9 @@ def q_simhash_recall_sampled(spark, sf_dir):
     docs. Full corpus below the 64k cap, so sf0.01 results equal the
     parent's."""
     docs = table(spark, sf_dir, "documents")
-    sampled = sample_frame(docs, "doc_id", cap=RECALL_SAMPLE_CAP)
-    tag = "full" if sampled is docs else f"coarse{RECALL_SAMPLE_CAP}"
-    return _simhash_recall_frame(spark, sf_dir, sampled, tag)
+    return _simhash_recall_frame(
+        sample_frame(docs, "doc_id", cap=RECALL_SAMPLE_CAP)
+    )
 
 
 
@@ -725,7 +587,7 @@ def q_dedup_clusters(spark, sf_dir):
     from mapreduce_model_spark.operators.graph import dedup_survivors
 
     docs = table(spark, sf_dir, "documents")
-    pairs = _mh_pairs(spark, sf_dir).select("id_a", "id_b")
+    pairs = _mh_pairs(docs).select("id_a", "id_b")
     return dedup_survivors(docs, pairs)
 
 
@@ -760,15 +622,13 @@ FROM j WHERE jaccard >= {JACCARD_THRESHOLD}
 def q_ngram_jaccard(spark, sf_dir):
     """Exact 3-gram Jaccard pairs ≥ 0.5, blocked on shared rare shingles
     (df ≤ 50) — the exact-verification stage behind MinHash candidates.
-    The pre-threshold candidate engine is the memoized _blocked_pairs
-    frame shared with dedup_containment and the recall truth (r12)."""
-    docs = table(spark, sf_dir, "documents")
+    The pre-threshold candidate engine is the one dedup_containment and
+    the recall truth run."""
     return ngram_jaccard_pairs(
-        docs,
+        table(spark, sf_dir, "documents"),
         shingle_k=SHINGLE_K,
         threshold=JACCARD_THRESHOLD,
         max_shingle_df=MAX_SHINGLE_DF,
-        pairs=_blocked_pairs(spark, sf_dir, docs, "full"),
     )
 
 
@@ -809,17 +669,15 @@ FROM c WHERE greatest(c_ab, c_ba) >= {CONTAINMENT_THRESHOLD}
 def q_containment(spark, sf_dir):
     """Asymmetric shingle containment ≥ 0.6 in either direction — the
     doc-inside-doc (quote / partial-scrape) detector symmetric Jaccard
-    misses; same rare-shingle blocking as dedup_ngram_jaccard — and the
-    same memoized _blocked_pairs candidate engine (r12)."""
+    misses; same rare-shingle blocking and candidate engine as
+    dedup_ngram_jaccard."""
     from mapreduce_model_spark.operators.dedup import containment_pairs
 
-    docs = table(spark, sf_dir, "documents")
     return containment_pairs(
-        docs,
+        table(spark, sf_dir, "documents"),
         shingle_k=SHINGLE_K,
         threshold=CONTAINMENT_THRESHOLD,
         max_shingle_df=MAX_SHINGLE_DF,
-        pairs=_blocked_pairs(spark, sf_dir, docs, "full"),
     )
 
 
@@ -867,7 +725,7 @@ def q_split_leakage(spark, sf_dir):
         "doc_id",
         F.when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test").alias("split"),
     )
-    pairs = _mh_pairs(spark, sf_dir).select("id_a", "id_b")
+    pairs = _mh_pairs(docs).select("id_a", "id_b")
     sa = asg.select(F.col("doc_id").alias("id_a"), F.col("split").alias("split_a"))
     sb = asg.select(F.col("doc_id").alias("id_b"), F.col("split").alias("split_b"))
     lo, hi = F.least("split_a", "split_b"), F.greatest("split_a", "split_b")
@@ -907,7 +765,7 @@ def q_dedup_cross_source(spark, sf_dir):
     is, but stays a key join for the worst case) and a tiny
     |sources|² aggregate."""
     docs = table(spark, sf_dir, "documents").select("doc_id", "source")
-    pairs = _mh_pairs(spark, sf_dir).select("id_a", "id_b")
+    pairs = _mh_pairs(table(spark, sf_dir, "documents")).select("id_a", "id_b")
     da = docs.select(F.col("doc_id").alias("id_a"), F.col("source").alias("source_a"))
     db = docs.select(F.col("doc_id").alias("id_b"), F.col("source").alias("source_b"))
     return (
@@ -1270,7 +1128,7 @@ def q_dedup_cluster_quality(spark, sf_dir):
     from mapreduce_model_spark.operators.graph import connected_components
 
     docs = table(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    pairs = _mh_pairs(spark, sf_dir).select("id_a", "id_b")
+    pairs = _mh_pairs(table(spark, sf_dir, "documents")).select("id_a", "id_b")
     comp = connected_components(pairs)
     # lab feeds BOTH the winner election and the final join: persist, or the
     # entire upstream (MinHash-LSH pair generation + connected components)

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from mapreduce_model_spark.functions.dedup_sql import words_sql
 from mapreduce_model_spark.functions.rounding import rnd
-from mapreduce_model_spark.functions.text import md5_int32, sql_md5_int32
+from mapreduce_model_spark.functions.text import C_SPACE, md5_int32, sql_md5_int32
 from mapreduce_model_spark.registry import query, table
 
 # --- deterministic sampling / splits --------------------------------------
@@ -545,7 +545,7 @@ def merge_upsert_customers(spark, sf_dir):
 # Eval-set decontamination: src0 plays the held-out benchmark corpus.
 _EVAL_SOURCE = "src0"
 
-_NORM_SQL = r"trim(regexp_replace(lower(text), '\s+', ' ', 'g'))"
+_NORM_SQL = f"trim(regexp_replace(lower(text), '{C_SPACE}+', ' ', 'g'))"
 
 
 @query(

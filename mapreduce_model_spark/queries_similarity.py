@@ -1931,141 +1931,61 @@ FROM afin GROUP BY vid
 """
 
 
-# Memoized training runs shared across the PQ query family. embedding_pq and
-# similarity_pq_adc train the SAME (m=8, k=16, 3-iter) codebook over the raw
-# embeddings; similarity_ann_ivfpq and ivfpq_recall_report train the SAME
-# coarse + residual-PQ pair. Training is deterministic (lowest-id seeding,
-# algebraic argmin), so sharing one persisted run per (session, sf_dir)
-# changes no result bit — it removes the redundant whole-stage-codegen
-# compilation + Lloyd passes that made each family member re-pay the full
-# training floor (measured r6: embedding_pq 4.45 s + similarity_pq_adc
-# 4.65 s, each dominated by the identical training plan). Exactly the
-# "factor shared subexpressions into cached intermediate frames" move the
-# r6 verdict prescribed. Keyed by the live SparkSession object (identity)
-# so a restarted session can never serve another session's DataFrames; the
-# persisted frames follow the registry's documented never-unpersist policy.
-_TRAIN_CACHE: dict = {}
-
-
-def _session_dead(spark) -> bool:
-    try:
-        return spark.sparkContext._jsc is None
-    except Exception:
-        return True
-
-
-def _train_cache_lookup(spark, sf_dir: str, kind: str):
-    """Cache get with the two lifecycle rules ADVICE r7 asked for:
-
-    - entries of STOPPED sessions are pruned on every lookup — the session
-      object is the key, so a stale entry would otherwise pin the stopped
-      session (and its JVM gateway state) for process lifetime;
-    - a hit whose head frame is no longer persisted (someone ran
-      spark.catalog.clearCache(), e.g. bench.py's BENCH_CLEAR_CACHE=1) is
-      evicted instead of served: the unpersisted frame would re-execute
-      the full training lineage on EVERY downstream action while looking
-      memoized. Eviction makes the next build re-persist once.
-    """
-    for k in [k for k in _TRAIN_CACHE if _session_dead(k[0])]:
-        del _TRAIN_CACHE[k]
-    key = (spark, sf_dir, kind)
-    hit = _TRAIN_CACHE.get(key)
-    if hit is not None:
-        lvl = hit[0].storageLevel
-        if not (lvl.useMemory or lvl.useDisk):
-            del _TRAIN_CACHE[key]
-            hit = None
-    return key, hit
-
-
 def _pq_train(spark, sf_dir, sampled: bool = False):
-    """(codes_df persisted, cents) for pq_fit(embeddings, 8, 16, 3).
+    """(codes_df, cents) for pq_fit(embeddings, 8, 16, 3).
     ``sampled=True`` trains over the hash-sampled sub-corpus instead
-    (functions/sampling) — a separate memo key, shared by the *_sampled
-    PQ twins exactly as the parent run is shared by the parents."""
+    (functions/sampling) — the *_sampled PQ twins' build. Below the cap
+    sample_frame returns the corpus itself, so both builds coincide."""
     from mapreduce_model_spark.operators.similarity import pq_fit
 
-    key, hit = _train_cache_lookup(spark, sf_dir, "pq_s" if sampled else "pq")
-    if hit is None:
-        emb = table(spark, sf_dir, "embeddings")
-        if sampled:
-            s = sample_frame(emb, "vec_id")
-            if s is emb:
-                # the cap didn't bind ⇒ the sampled corpus IS the parent's
-                # ⇒ the builds are identical — alias the parent's memo
-                # entry instead of training the same index twice (r12)
-                res = _pq_train(spark, sf_dir, sampled=False)
-                _TRAIN_CACHE[key] = res
-                return res
-            emb = s
-        out, cents = pq_fit(
-            emb,
-            m=_PQ_M,
-            k=_PQ_K,
-            n_iter=_PQ_ITER,
-            return_codebook=True,
-        )
-        _TRAIN_CACHE[key] = (out.persist(), cents)
-    return _TRAIN_CACHE[key]
+    emb = table(spark, sf_dir, "embeddings")
+    if sampled:
+        emb = sample_frame(emb, "vec_id")
+    return pq_fit(emb, m=_PQ_M, k=_PQ_K, n_iter=_PQ_ITER, return_codebook=True)
 
 
 def _ivfpq_train(spark, sf_dir, sampled: bool = False):
-    """The IVF-PQ index build shared by similarity_ann_ivfpq and
+    """The IVF-PQ index build of similarity_ann_ivfpq and
     ivfpq_recall_report: an L2 coarse quantizer (1-subspace pq_fit run)
     assigns every vector a cell; each vector's RESIDUAL from its cell
     centroid is product-quantized (8×16, 2 iterations). Returns
-    (cand persisted — vec_id, codes, cell —, cc coarse centroids,
-    pcents residual codebooks). ``sampled=True`` builds the index over
-    the hash-sampled sub-corpus under its own memo key (the *_sampled
-    twins' shared build)."""
+    (cand — vec_id, codes, cell —, cc coarse centroids, pcents residual
+    codebooks). ``sampled=True`` builds the index over the hash-sampled
+    sub-corpus (the *_sampled twins' build)."""
     from mapreduce_model_spark.operators.similarity import pq_fit
 
-    key, hit = _train_cache_lookup(
-        spark, sf_dir, "ivfpq_s" if sampled else "ivfpq"
+    emb = table(spark, sf_dir, "embeddings")
+    if sampled:
+        emb = sample_frame(emb, "vec_id")
+    coarse_df, ccents = pq_fit(
+        emb, m=1, k=_IVFPQ_KC, n_iter=_IVFPQ_CI, return_codebook=True
     )
-    if hit is None:
-        emb = table(spark, sf_dir, "embeddings")
-        if sampled:
-            s = sample_frame(emb, "vec_id")
-            if s is emb:
-                # cap didn't bind — alias the parent's build (see _pq_train)
-                res = _ivfpq_train(spark, sf_dir, sampled=False)
-                _TRAIN_CACHE[key] = res
-                return res
-            emb = s
-        coarse_df, ccents = pq_fit(
-            emb, m=1, k=_IVFPQ_KC, n_iter=_IVFPQ_CI, return_codebook=True
-        )
-        cc = ccents[0]
+    cc = ccents[0]
 
-        ve = F.col("embedding").cast("array<double>")
-        cells = coarse_df.select("vec_id", F.element_at("codes", 1).alias("cell"))
-        celit = F.lit(cc)
-        ce = F.element_at(celit, F.col("cell") + 1)
-        resid = F.array(
-            *[
-                F.element_at(ve, p + 1) - F.element_at(ce, p + 1)
-                for p in range(_PQ_D)
-            ]
-        )
-        rdf = (
-            emb.join(cells, "vec_id")
-            .select("vec_id", "cell", resid.alias("vec"))
-            # read by the residual-PQ training loop (4 passes) and the final
-            # cell lookup — persist or the coarse plan re-executes each time
-            .persist()
-        )
-        codes_df, pcents = pq_fit(
-            rdf,
-            m=_PQ_M,
-            k=_PQ_K,
-            n_iter=_IVFPQ_PI,
-            vec_col="vec",
-            return_codebook=True,
-        )
-        cand = codes_df.join(rdf.select("vec_id", "cell"), "vec_id").persist()
-        _TRAIN_CACHE[key] = (cand, cc, pcents)
-    return _TRAIN_CACHE[key]
+    ve = F.col("embedding").cast("array<double>")
+    cells = coarse_df.select("vec_id", F.element_at("codes", 1).alias("cell"))
+    celit = F.lit(cc)
+    ce = F.element_at(celit, F.col("cell") + 1)
+    resid = F.array(
+        *[F.element_at(ve, p + 1) - F.element_at(ce, p + 1) for p in range(_PQ_D)]
+    )
+    rdf = (
+        emb.join(cells, "vec_id")
+        .select("vec_id", "cell", resid.alias("vec"))
+        # read by the residual-PQ training loop (4 passes) and the final
+        # cell lookup — persist or the coarse plan re-executes each time
+        .persist()
+    )
+    codes_df, pcents = pq_fit(
+        rdf,
+        m=_PQ_M,
+        k=_PQ_K,
+        n_iter=_IVFPQ_PI,
+        vec_col="vec",
+        return_codebook=True,
+    )
+    cand = codes_df.join(rdf.select("vec_id", "cell"), "vec_id")
+    return cand, cc, pcents
 
 
 @query("embedding_pq", oracle=_pq_oracle())
@@ -2086,7 +2006,7 @@ def embedding_pq(spark, sf_dir):
     algebraic min so each assign exchange carries one row per (vector,
     subspace), each update exchange carries 1024 map-side-combined
     partial means, and 1024 doubles reach the driver per iteration.
-    Training is the memoized run shared with similarity_pq_adc."""
+    Training is _pq_train, the build similarity_pq_adc also runs."""
     out, _ = _pq_train(spark, sf_dir)
     return out.select(
         "vec_id",
@@ -2109,7 +2029,7 @@ def embedding_pq_sampled(spark, sf_dir):
     (functions/sampling; see kmeans_sampled) — keeps the PQ code/MSE
     face hash-checked at gen-sf1, where the parent's per-subspace
     unrolled-Lloyd oracle exceeds the sweep's 900 s budget at 500k
-    vectors. Training is the memoized sampled run shared with
+    vectors. Training is _pq_train's sampled build, as in
     pq_adc_sampled. Full corpus below the 64k cap."""
     out, _ = _pq_train(spark, sf_dir, sampled=True)
     return out.select(
@@ -2176,7 +2096,7 @@ def similarity_pq_adc(spark, sf_dir):
     exchange is the per-query top-k window keyed by query_id. This is the
     memory-bound regime ADC exists for: at 100 TB of vectors the float
     corpus doesn't fit the cluster's RAM, the code table does.
-    Training is the memoized run shared with embedding_pq."""
+    Training is _pq_train, the build embedding_pq also runs."""
     emb = table(spark, sf_dir, "embeddings")
     codes_df, cents = _pq_train(spark, sf_dir)
     return _pq_adc_frame(spark, emb.filter(F.col("vec_id") < _PQ_NQ),
@@ -2502,7 +2422,7 @@ def similarity_ann_ivfpq(spark, sf_dir):
     wall time is whole-stage-codegen compilation of the wide unrolled
     expressions plus ~7 job launches, zero of it data-dependent; at real
     scale those fixed costs amortize to nothing while the per-row work
-    stays codegen. Index build is the memoized run shared with
+    stays codegen. Index build is _ivfpq_train, as in
     ivfpq_recall_report."""
     emb = table(spark, sf_dir, "embeddings")
     return _ivfpq_search_frame(
@@ -2525,7 +2445,7 @@ def ivfpq_sampled(spark, sf_dir):
     parent's composed coarse+residual unrolled-Lloyd oracle exceeds the
     sweep budget at 500k vectors (see kmeans_sampled). Queries are the
     lowest vec_ids IN the sample; below the 64k cap the twin equals the
-    parent exactly. Index build is the memoized sampled run shared with
+    parent exactly. Index build is _ivfpq_train's sampled build, as in
     ivfpq_recall_sampled."""
     emb = sample_frame(table(spark, sf_dir, "embeddings"), "vec_id")
     return _ivfpq_search_frame(
@@ -2725,7 +2645,7 @@ def ivfpq_recall_report(spark, sf_dir):
     because a candidate's score is nprobe-independent — only the
     candidate SET grows with nprobe (cell_rank ≤ nprobe).
 
-    Scale: index build is the memoized similarity_ann_ivfpq run; the
+    Scale: index build is similarity_ann_ivfpq's _ivfpq_train; the
     query side (20 × kc probe tables) broadcasts; the scored frame
     carries 8-byte codes; truth is the broadcast-queries brute pass (no
     corpus shuffle); the per-(query, nprobe) top-k windows are keyed, no
@@ -2734,11 +2654,9 @@ def ivfpq_recall_report(spark, sf_dir):
     emb = table(spark, sf_dir, "embeddings")
     return _ivfpq_recall_frame(
         spark,
-        sf_dir,
         emb,
         emb.filter(F.col("vec_id") < _IVFPQR_NQ),
         *_ivfpq_train(spark, sf_dir),
-        tag="report",
     )
 
 
@@ -2755,27 +2673,21 @@ def ivfpq_recall_sampled(spark, sf_dir):
     (truth, index, and query set all restricted to the SAME
     deterministic sample on both engines; see kmeans_sampled). Below
     the 64k cap, on gap-free 0-based ids, the twin equals the parent
-    exactly. Index build is the memoized sampled run shared with
+    exactly. Index build is _ivfpq_train's sampled build, as in
     ivfpq_sampled."""
     emb = sample_frame(table(spark, sf_dir, "embeddings"), "vec_id")
     return _ivfpq_recall_frame(
         spark,
-        sf_dir,
         emb,
         _lowest_ids_frame(emb, _IVFPQR_NQ),
         *_ivfpq_train(spark, sf_dir, sampled=True),
-        tag="sampled",
     )
 
 
-def _ivfpq_recall_frame(spark, sf_dir, emb, qemb, cand, cc, pcents, tag):
+def _ivfpq_recall_frame(spark, emb, qemb, cand, cc, pcents):
     """Shared engine tail of ivfpq_recall_report and its sampled twin:
     all-cells probe tables per query, nprobe-expanded top-k hits, and the
-    exact-L2 broadcast-queries truth over ``emb``, memoized per (session,
-    sf_dir, face ``tag``). The tag names the face's corpus AND query-set
-    form: the report's ``vec_id < NQ`` and the sampled face's lowest-NQ
-    ids coincide only on gap-free 0-based ids, so the two faces never
-    share a truth."""
+    exact-L2 broadcast-queries truth of ``qemb`` over ``emb``."""
     from mapreduce_model_spark.operators.similarity import dot, py_ldot as ldot
     from pyspark.sql import Window
 
@@ -2831,27 +2743,19 @@ def _ivfpq_recall_frame(spark, sf_dir, emb, qemb, cand, cc, pcents, tag):
     # exact-L2 truth: queries broadcast, corpus scanned once; the ranking
     # key drops the per-query constant q·q (argmin unchanged) — the SAME
     # reduced expression as the oracle's ORDER BY
-    def _build_truth():
-        qfr = qemb.select(F.col("vec_id").alias("query_id"), ve.alias("qv"))
-        cfr = emb.select("vec_id", ve.alias("cv"))
-        d = dot(F.col("cv"), F.col("cv")) - F.lit(2.0) * dot(
-            F.col("qv"), F.col("cv")
-        )
-        wt = Window.partitionBy("query_id").orderBy(F.col("d").asc(), "vec_id")
-        return (
-            F.broadcast(qfr)
-            .crossJoin(cfr)
-            .filter(F.col("vec_id") != F.col("query_id"))
-            .select("query_id", "vec_id", d.alias("d"))
-            .withColumn("rn", F.row_number().over(wt))
-            .filter(F.col("rn") <= _IVFPQR_K)
-            .select("query_id", "vec_id")
-        )
-
-    tkey, thit = _train_cache_lookup(spark, sf_dir, f"ivfpqtruth_{tag}")
-    if thit is None:
-        _TRAIN_CACHE[tkey] = (_build_truth().persist(),)
-    truth = _TRAIN_CACHE[tkey][0]
+    qfr = qemb.select(F.col("vec_id").alias("query_id"), ve.alias("qv"))
+    cfr = emb.select("vec_id", ve.alias("cv"))
+    d = dot(F.col("cv"), F.col("cv")) - F.lit(2.0) * dot(F.col("qv"), F.col("cv"))
+    wt = Window.partitionBy("query_id").orderBy(F.col("d").asc(), "vec_id")
+    truth = (
+        F.broadcast(qfr)
+        .crossJoin(cfr)
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .select("query_id", "vec_id", d.alias("d"))
+        .withColumn("rn", F.row_number().over(wt))
+        .filter(F.col("rn") <= _IVFPQR_K)
+        .select("query_id", "vec_id")
+    )
 
     # coverage side: one row per (query, candidate) with the rank of the
     # candidate's cell in the query's probe order — a true neighbor is

@@ -18,7 +18,9 @@ from mapreduce_model_spark.functions.partitioning import spread_for_fanout
 from mapreduce_model_spark.functions.rounding import rnd
 from mapreduce_model_spark.functions.text import (
     BPE_TOKEN_RE,
+    C_SPACE,
     STOPWORDS,
+    SYMBOL,
     md5_int32,
     shingles,
     tokens_array,
@@ -53,7 +55,7 @@ SELECT doc_id,
        CASE WHEN len(words) > 0 THEN
             round(1e-9 + CAST(len(list_filter(words, w -> w IN {_SQL_STOP})) AS DOUBLE)
                   / len(words), 4) END      AS stopword_ratio,
-       round(1e-9 + CAST(length(text) - length(regexp_replace(text, '[^A-Za-z0-9\\s]', '', 'g')) AS DOUBLE)
+       round(1e-9 + CAST(length(text) - length(regexp_replace(text, '{SYMBOL}', '', 'g')) AS DOUBLE)
              / length(text), 4)             AS punct_ratio
 FROM wbase
 """,
@@ -65,7 +67,7 @@ def text_stats(spark, sf_dir):
     stop_hits = F.size(F.filter(words, lambda w: w.isin(*STOPWORDS)))
     word_len_sum = F.aggregate(words, F.lit(0), lambda acc, w: acc + F.length(w))
     punct = F.length("text") - F.length(
-        F.regexp_replace("text", r"[^A-Za-z0-9\s]", "")
+        F.regexp_replace("text", SYMBOL, "")
     )
     return docs.select(
         "doc_id",
@@ -1966,11 +1968,11 @@ def quality_classifier(spark, sf_dir):
 
 @query(
     "text_normalize",
-    oracle=r"""
+    oracle=f"""
 WITH norm AS (
     SELECT doc_id,
            lower(trim(regexp_replace(regexp_replace(text, '[^ -~]', '', 'g'),
-                                     '\s+', ' ', 'g'))) AS norm
+                                     '{C_SPACE}+', ' ', 'g'))) AS norm
     FROM documents
 )
 SELECT doc_id,
@@ -1994,7 +1996,7 @@ def text_normalize(spark, sf_dir):
     norm = F.lower(
         F.trim(
             F.regexp_replace(
-                F.regexp_replace(F.col("text"), "[^ -~]", ""), r"\s+", " "
+                F.regexp_replace(F.col("text"), "[^ -~]", ""), C_SPACE + "+", " "
             )
         )
     )

@@ -31,13 +31,16 @@ def generated_corpus(tmp_path):
     """A 40-file reference-format corpus: more than the 32 paths above which
     Spark's default lists files with a distributed job, one file listed twice
     (positions 3 and 41 — two documents), mixed case, punctuation, digits,
-    multi-line files, and a few spaces swapped for ``\\v`` (C whitespace,
+    multi-line files, a few spaces swapped for ``\\v`` (C whitespace,
     main.cc:73), NBSP or ``\\x1c`` (not whitespace to C, so they join two
-    words). Returns ``(manifest path, {doc_id: text})``."""
+    words), and a few ``K`` or ``i`` swapped for the Kelvin sign or U+0130
+    (not letters to C ``::tolower``, main.cc:75). Returns
+    ``(manifest path, {doc_id: text})``."""
     rng = random.Random(7)
     vocab = ["alpha", "Beta", "GAMMA", "delta!", "don't", "x-ray", "Zeta,", "eta.",
              "2024", "theta", "iota?", "Kappa", "lambda", "mu", "(nu)", "xi;"]
     odd_spaces = {4: "\v", 9: "\xa0", 14: "\x1c", 19: "\v", 24: "\xa0", 29: "\x1c"}
+    odd_letters = {5: ("K", "\u212A"), 10: ("i", "\u0130"), 15: ("K", "\u212A"), 20: ("i", "\u0130")}
     corpus = tmp_path / "corpus"
     corpus.mkdir()
     paths = []
@@ -46,6 +49,8 @@ def generated_corpus(tmp_path):
         text = "\n".join(lines) + "\n"
         if i in odd_spaces:
             text = text.replace(" ", odd_spaces[i], 2)
+        if i in odd_letters:
+            text = text.replace(*odd_letters[i], 2)
         f = corpus / f"doc{i:02d}.txt"
         f.write_text(text, encoding="utf-8")
         paths.append(f)

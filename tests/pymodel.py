@@ -7,16 +7,20 @@ DuckDB, simple enough to verify by eye against SURVEY.md §1.6.
 from __future__ import annotations
 
 import re
+import string
 
 # C-locale isspace: `fin >> word` splits on these six bytes only (main.cc:73),
 # where str.split() also breaks on NBSP, \x1c-\x1f and other Unicode spaces
 _C_SPACE = re.compile(r"[ \t\n\v\f\r]+")
 _NON_LETTER = re.compile(r"[^a-z]")
+# C-locale ::tolower maps A-Z only (main.cc:75), where str.lower() also maps
+# the Kelvin sign to "k" and U+0130 to "i" plus a combining dot
+_ASCII_LOWER = str.maketrans(string.ascii_uppercase, string.ascii_lowercase)
 
 
 def normalize(token: str) -> str:
-    """lower (main.cc:75) then strip non-[a-z] (main.cc:33-42)."""
-    return _NON_LETTER.sub("", token.lower())
+    """lower A-Z (main.cc:75) then strip non-[a-z] (main.cc:33-42)."""
+    return _NON_LETTER.sub("", token.translate(_ASCII_LOWER))
 
 
 def words(text: str) -> list[str]:

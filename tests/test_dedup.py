@@ -194,3 +194,36 @@ def test_simhash_pairs_find_near_dups(spark, corpus):
     assert pairs[(1, 3)] == 0          # dup after normalization
     assert (1, 4) in pairs and pairs[(1, 4)] <= 3   # one-word mutation
     assert (1, 5) not in pairs and (4, 5) not in pairs
+
+
+def test_dedup_queries_follow_a_rewritten_table(spark, sf_dir, tmp_path):
+    """A registry query keeps nothing between calls: after
+    documents.parquet is rewritten to half its rows, the next call in the
+    same session reads the new table. Each face's row count is checked
+    against its DuckDB oracle over the same file."""
+    import duckdb
+    import pyarrow.parquet as pq
+
+    from mapreduce_model_spark.registry import ORACLE_SQL, QUERIES
+
+    names = ["dedup_minhash_sig", "dedup_minhash_oph", "dedup_simhash"]
+    path = tmp_path / "documents.parquet"
+    full = pq.read_table(f"{sf_dir}/documents.parquet")
+
+    def counts():
+        con = duckdb.connect()
+        con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{path}')")
+        got = {n: QUERIES[n](spark, str(tmp_path)).count() for n in names}
+        want = {
+            n: con.execute(f"SELECT count(*) FROM ({ORACLE_SQL[n]})").fetchone()[0]
+            for n in names
+        }
+        return got, want
+
+    pq.write_table(full, path)
+    before, want = counts()
+    assert before == want
+    pq.write_table(full.slice(0, full.num_rows // 2), path)
+    after, want = counts()
+    assert after == want
+    assert all(after[n] < before[n] for n in names), (before, after)

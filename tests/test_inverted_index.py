@@ -7,8 +7,8 @@ The 3-document micro-corpus and expected excerpts come from FIXTURES.md §3
 import pytest
 from pyspark.sql import functions as F
 
-from mapreduce_model_spark.functions.dedup_sql import words_sql
-from mapreduce_model_spark.functions.text import words_array
+from mapreduce_model_spark.functions.dedup_sql import tokens_sql, words_sql
+from mapreduce_model_spark.functions.text import BPE_TOKEN_RE, tokens_array, words_array
 from mapreduce_model_spark.operators.inverted_index import (
     format_output,
     invert,
@@ -37,15 +37,17 @@ def test_words_array_semantics(spark):
     then strip non-letters; empty words are dropped, and leading or
     trailing tabs and newlines yield no word. ``\\v`` and ``\\f`` are C
     whitespace; NBSP and ``\\x1c`` are not, so they join their neighbours.
-    Spark's ``words_array``, the DuckDB oracles' ``words_sql`` and the
-    Python model's ``words`` give the same lists."""
+    C ``::tolower`` maps only A-Z, so the Kelvin sign and U+0130 are not
+    letters (Unicode lowering makes them ``k`` and ``i``). Spark's
+    ``words_array``, the DuckDB oracles' ``words_sql`` and the Python
+    model's ``words`` give the same lists."""
     import duckdb
 
     cases = [
         ("Don't", ["dont"]), ("end.", ["end"]), ("2024", []), ("The", ["the"]),
         ("bl!ue", ["blue"]), ("---", []), ("\t\nDon't  end.\n\t", ["dont", "end"]),
         ("a\x0bb c", ["a", "b", "c"]), ("a\xa0b", ["ab"]), ("a\x1cb", ["ab"]),
-        ("x\fy\rz\tq", ["x", "y", "z", "q"]),
+        ("x\fy\rz\tq", ["x", "y", "z", "q"]), ("\u212Aey \u0130t", ["ey", "t"]),
     ]
     texts = [t for t, _ in cases]
     expected = [w for _, w in cases]
@@ -58,6 +60,32 @@ def test_words_array_semantics(spark):
     assert [con.execute(sql, [t]).fetchone()[0] for t in texts] == expected
     assert [py_words(t) for t in texts] == expected
 
+
+def test_token_classes_agree_across_engines(spark):
+    """Whitespace tokens are what ``fin >> word`` reads (main.cc:73): a
+    tab-edged text gives no empty edge token, and ``\\v`` separates like
+    a space — in Spark's ``tokens_array`` and the BPE token pattern, and
+    in their DuckDB twins (RE2's ``\\s`` lacks ``\\v``)."""
+    import duckdb
+
+    cases = [
+        ("\t\nDon't  end.\n\t", ["Don't", "end."], ["Don", "'", "t", "end", "."]),
+        ("a\vb", ["a", "b"], ["a", "b"]),
+        ("", [], []),
+    ]
+    texts = [t for t, _, _ in cases]
+    expected = [(tok, bpe) for _, tok, bpe in cases]
+    rows = spark.createDataFrame([(t,) for t in texts], "text: string").select(
+        tokens_array("text").alias("tok"),
+        F.regexp_extract_all("text", F.lit(BPE_TOKEN_RE), F.lit(0)).alias("bpe"),
+    ).collect()
+    assert [(r.tok, r.bpe) for r in rows] == expected
+    con = duckdb.connect()
+    sql = (
+        f"SELECT {tokens_sql()}, regexp_extract_all(text, '{BPE_TOKEN_RE}') "
+        "FROM (SELECT ? AS text)"
+    )
+    assert [con.execute(sql, [t]).fetchone() for t in texts] == expected
 
 def test_word_doc_pairs_distinct(spark, micro_docs):
     """'the' appears 3x in doc 3 but yields one (the, 3) pair (main.cc:62-63)."""

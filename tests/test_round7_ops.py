@@ -57,25 +57,6 @@ def test_ivfpq_recall_floor_at_shipped_nprobe(spark, sf_dir):
     assert rows[2]["coverage"] >= 0.6, rows[2]
 
 
-def test_pq_family_training_is_shared(spark, sf_dir):
-    """The memoized training contract: the PQ family queries reuse ONE
-    persisted training run per (session, sf_dir) — identical objects, so
-    embedding_pq/similarity_pq_adc (and ann_ivfpq/ivfpq_recall_report)
-    can never silently train divergent codebooks, and the bench suite
-    pays each training floor once."""
-    from mapreduce_model_spark.queries_similarity import (
-        _ivfpq_train,
-        _pq_train,
-    )
-
-    a = _pq_train(spark, sf_dir)
-    b = _pq_train(spark, sf_dir)
-    assert a[0] is b[0] and a[1] is b[1]
-    x = _ivfpq_train(spark, sf_dir)
-    y = _ivfpq_train(spark, sf_dir)
-    assert x[0] is y[0] and x[1] is y[1] and x[2] is y[2]
-
-
 def test_pq_fit_rejects_undersized_corpus(spark, sf_dir):
     """pq_fit must fail loudly (not IndexError deep in the Lloyd loop)
     when the corpus has fewer vectors than codewords."""

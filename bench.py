@@ -27,18 +27,6 @@ Env:
   BENCH_FULL_PATH     durable sidecar path (default <repo>/BENCH_FULL.json;
                       NOT written on BENCH_QUERIES subset runs, so smoke
                       probes never clobber the last full-suite record)
-  BENCH_CLEAR_CACHE   "1" → spark.catalog.clearCache() between queries, so
-                      each timing is isolated from prior queries' persisted
-                      frames (the registry's documented never-unpersist
-                      policy otherwise accumulates MEMORY_AND_DISK storage
-                      across the 200+ query suite). DEFAULT OFF: the r1-r6
-                      records were measured without it, and flipping it
-                      would silently shift every cross-round ratio.
-                      No query keeps a memo between calls; without this
-                      flag a later run can still read a frame an earlier
-                      one persisted, where Spark's CacheManager matches
-                      the plan (operator-internal persists, e.g. pq_fit's
-                      corpus view).
   BENCH_CHUNK         DEFAULT 30 (since r11 — the chunked record IS the
                       record of note; set 0 for the legacy single-session
                       mode). N > 0 → run the suite as sequential CHILD processes
@@ -56,9 +44,7 @@ Env:
                       BENCH_FULL_CHUNKED.json (BENCH_FULL_PATH still wins
                       if set); the LEGACY single-session record keeps its
                       default path/format so cross-round ratios stay
-                      interpretable during the transition. Chunk boundary
-                      note: CacheManager reuse of persisted frames only
-                      spans queries inside one chunk.
+                      interpretable during the transition.
 """
 
 from __future__ import annotations
@@ -259,13 +245,9 @@ def main() -> None:
     # the median already discounts a slow first run.
     retry_threshold = float(os.environ.get("BENCH_RETRY_THRESHOLD", "3.0"))
 
-    clear_cache = os.environ.get("BENCH_CLEAR_CACHE", "0") == "1"
-
     timings: dict[str, float] = {}
     all_runs: dict[str, list[float]] = {}
     for name in names:
-        if clear_cache:
-            spark.catalog.clearCache()
         fn = registry.QUERIES[name]
         samples: list[float] = []
         # repeat>1: one extra run up front, discarded below as warmup

@@ -78,11 +78,11 @@ def sample_frame(df: DataFrame, id_col: str, cap: int | None = None) -> DataFram
     cap so small-scale results equal the unsampled parent's.
 
     When sampling actually applies (thr < 16, i.e. only at generated
-    scales), the filtered frame is PERSISTED before returning: every twin
-    immediately re-consumes it 2-3 times (adaptive-k/stride count, lowest-
-    id query collect, then the pipeline itself), and without the persist
-    each consumer re-ran the full-corpus scan + md5 filter (r9 ADVICE).
-    Lifecycle is the registry's documented evict-don't-unpersist policy."""
+    scales), the filtered frame is CHECKPOINTED before returning: every
+    twin immediately re-consumes it 2-3 times (adaptive-k/stride count,
+    lowest-id query collect, then the pipeline itself), and without the
+    checkpoint each consumer re-ran the full-corpus scan + md5 filter
+    (sharing a frame: registry.py docstring)."""
     from pyspark.sql import functions as F
 
     thr = sample_thr(df.count(), cap)
@@ -93,7 +93,7 @@ def sample_frame(df: DataFrame, id_col: str, cap: int | None = None) -> DataFram
             f"locate(substr(md5(cast({id_col} as string)), 1, 1), "
             f"'{_HEX}') <= {thr}"
         )
-    ).persist()
+    ).localCheckpoint(eager=False)
 
 
 def duck_sample_pred(tbl: str, id_col: str, cap: int | None = None) -> str:
@@ -139,7 +139,7 @@ def sample_frame_fine(
     df: DataFrame, id_col: str, cap: int | None = None
 ) -> DataFrame:
     """Spark face of the fine contract (see sample_frame for the count()
-    rationale and the persist-on-sample policy)."""
+    rationale and the checkpoint-on-sample rule)."""
     from pyspark.sql import functions as F
 
     thr = sample_thr_fine(df.count(), cap)
@@ -150,7 +150,7 @@ def sample_frame_fine(
             f"CAST(conv(substr(md5(cast({id_col} as string)), 1, 2), 16, 10)"
             f" AS INT) < {thr}"
         )
-    ).persist()
+    ).localCheckpoint(eager=False)
 
 
 def duck_sample_pred_fine(tbl: str, id_col: str, cap: int | None = None) -> str:

@@ -112,7 +112,7 @@ def shingle_set_arrays(
     text once, then any consumer that needs (id, x) rows re-explodes the
     cheap integer arrays instead of re-tokenizing and re-hashing the
     corpus. Callers that fan out into several signature/truth pipelines
-    persist this frame and share it (r12: the recall-report family)."""
+    checkpoint this frame and share it (r12: the recall-report family)."""
     return (
         doc_shingle_hashes(df, text_col, id_col, k)
         .groupBy(id_col)
@@ -143,7 +143,7 @@ def minhash_signatures(
     shuffle is the cheap part; losing codegen is the expensive part.
 
     ``shingle_hashes``: a precomputed (id, x) frame (e.g. re-exploded from
-    a shared persisted :func:`shingle_set_arrays` cache) — the min
+    a shared checkpointed :func:`shingle_set_arrays` frame) — the min
     aggregates are set-based, so values are identical by construction."""
     params = perm_params(k, seed)
     sh = (
@@ -285,10 +285,9 @@ def lsh_near_dup_pairs(
     )
     # The signature frame feeds three consumers (bucket counts + both sides
     # of the band self-join); without materialization each consumer re-runs
-    # the whole shingle→md5→32-way-min pipeline. Persist it — k×8-byte rows,
-    # ~256 B/doc, memory-and-disk-safe at any corpus size (ContextCleaner
-    # unpersists once the plan is unreferenced).
-    sig = sig.persist()
+    # the whole shingle→md5→32-way-min pipeline. Checkpoint it — k×8-byte
+    # rows, ~256 B/doc.
+    sig = sig.localCheckpoint(eager=False)
     banded = sig.select(
         F.col(id_col),
         "sig",
@@ -370,14 +369,14 @@ def _blocked_pair_intersections(
     # Hash the text ONCE: per-doc shingle-set arrays are the only artifact
     # derived from raw text; the blocking branch re-explodes the (cheap)
     # integer arrays instead of re-scanning and re-hashing the corpus.
-    # ``sets``: a caller-provided (already persisted) shingle_set_arrays
+    # ``sets``: a caller-provided (already checkpointed) shingle_set_arrays
     # frame, shared with sibling signature pipelines (r12 recall family).
     if sets is None:
         sets = (
             shingle_set_arrays(df, text_col, id_col, shingle_k)
             # five consumers (df counts, both blocking sides, both measure
-            # sides) — persist or the corpus is re-hashed for each
-            .persist()
+            # sides) — checkpoint or the corpus is re-hashed for each
+            .localCheckpoint(eager=False)
         )
     exploded = sets.select(id_col, F.explode("xs").alias("x"))
     # document frequency via groupBy (partial-agg + tiny result) rather than
@@ -455,7 +454,7 @@ def jaccard_decile_pairs(
     This is the ground-truth side of the LSH recall audit
     (``lsh_recall_report``); same rare-shingle blocking (recall contract)
     and pair engine as :func:`ngram_jaccard_pairs`. ``sets`` forwards a
-    shared persisted :func:`shingle_set_arrays` frame to the pair engine.
+    shared checkpointed :func:`shingle_set_arrays` frame to the pair engine.
     """
     pairs = _blocked_pair_intersections(
         df, text_col, id_col, shingle_k, max_shingle_df, sets=sets
@@ -604,10 +603,10 @@ def simhash_hamming_pairs(
             )
         ).alias("blk"),
     ).select(id_col, "simhash", F.col("blk.bi").alias("bi"), F.col("blk.bv").alias("bv"))
-    # sizes + both self-join sides read the blocks frame — persist or the
+    # sizes + both self-join sides read the blocks frame — checkpoint or the
     # corpus-wide explode+TF+simhash aggregation re-runs 4x (same reason
-    # lsh_near_dup_pairs persists its signature frame)
-    blocks = blocks.persist()
+    # lsh_near_dup_pairs checkpoints its signature frame)
+    blocks = blocks.localCheckpoint(eager=False)
     sizes = blocks.groupBy("bi", "bv").agg(F.count(F.lit(1)).alias("n"))
     capped = blocks.join(sizes.filter(F.col("n") <= max_block), ["bi", "bv"])
     a, b = capped.alias("ba"), capped.alias("bb")

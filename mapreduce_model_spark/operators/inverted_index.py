@@ -121,11 +121,11 @@ def invert_df_capped(
     Output: (letter, word, docs 'd1 d2 ...'-joined, n_docs); capped words
     carry docs = ''."""
     # pairs feeds BOTH phases (df count + postings collect) and cnt feeds
-    # both the under-cap filter and the final join — persist so the
+    # both the under-cap filter and the final join — checkpoint so the
     # tokenize/normalize pipeline runs once, not three times
-    # (cache lifecycle: registry.py docstring)
-    pairs = word_doc_pairs(docs, text_col, id_col).persist()
-    cnt = pairs.groupBy("word").agg(F.count(F.lit(1)).alias("n_docs")).persist()
+    # (sharing a frame: registry.py docstring)
+    pairs = word_doc_pairs(docs, text_col, id_col).localCheckpoint(eager=False)
+    cnt = pairs.groupBy("word").agg(F.count(F.lit(1)).alias("n_docs")).localCheckpoint(eager=False)
     under = cnt.filter(F.col("n_docs") <= df_cap).select("word")
     posted = postings(pairs.join(under, "word"))
     return cnt.join(posted, "word", "left").select(

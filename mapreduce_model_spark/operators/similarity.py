@@ -248,7 +248,7 @@ def _rank_centroids(
         #   vectors × 708 centroids under the 8g harness heap
         #   (semantic_dedup_scaled, gen-sf1, r8). Exchange bytes are the
         #   same either way; buffers drop to ~30 B/row, and a caller that
-        #   persists ``vectors`` hash-partitioned by vid gets the
+        #   checkpoints ``vectors`` hash-partitioned by vid gets the
         #   join-back without re-exchanging the corpus.
         # - join_back=False (small k, the k=8 exemplar faces): keep the
         #   payload in the buffer and skip the join — measured 1.7× faster
@@ -399,22 +399,22 @@ def kmeans_fit(
     Returns (cid, centroid array<double>, n_members) for the final
     assignment.
     """
-    # the corpus (with norms) feeds every iteration's assign pass — persist
-    # once so 1+n_iter+1 passes read cached columns, not parquet + re-normed
-    # arrays (ContextCleaner unpersists when the plan goes unreferenced).
+    # the corpus (with norms) feeds every iteration's assign pass —
+    # checkpoint once so 1+n_iter+1 passes read its blocks, not parquet +
+    # re-normed arrays.
     # Hash-partitioned by vid: _rank_centroids' join-back (see there) then
     # lines up with the groupBy("vid") output partitioning, so no assign
     # pass ever re-exchanges the corpus.
     # past ~64 cells the min_by buffer weight dominates (see
     # _rank_centroids): switch the assign passes to the join-back shape,
-    # and persist the corpus vid-partitioned so those joins re-use the
+    # and checkpoint the corpus vid-partitioned so those joins re-use the
     # partitioning. Small k keeps the buffer shape — no join, so the
     # repartition would be a pure extra exchange.
     heavy_k = k > 64
     v = vectors.select(
         F.col(id_col).alias("vid"), _as_double(vec_col).alias("v")
     ).withColumn("n", l2_norm(F.col("v")))
-    v = (v.repartition("vid") if heavy_k else v).persist()
+    v = (v.repartition("vid") if heavy_k else v).localCheckpoint(eager=False)
     seeds = v.orderBy("vid").limit(k)
     w = Window.orderBy("vid")  # k rows — single-partition window is fine
     cents = seeds.select(
@@ -521,7 +521,7 @@ def _assign_arrow(v: DataFrame, cents, payload: bool = False) -> DataFrame:
             if payload:
                 # the batch already holds v and n — emitting them here
                 # makes the final (vid -> cid) attachment join-free: one
-                # cached-corpus pass instead of a corpus-sized join (the
+                # checkpointed-corpus pass instead of a corpus-sized join (the
                 # join re-derived what this function had in hand)
                 yield pa.RecordBatch.from_arrays(
                     [pa.array(vid), b.column("v"), b.column("n"), pa.array(cid)],
@@ -672,12 +672,12 @@ def kmeans_fit_arrow(
     traffic per iteration is the k×dim mean matrix (the documented
     bounded-metadata pattern; ≤4096×64 doubles = 2 MB at the cap) — the
     centroids re-enter each pass as a numpy closure constant, never a
-    join side. Scale: per iteration ONE narrow cached-corpus pass whose
+    join side. Scale: per iteration ONE narrow checkpointed-corpus pass whose
     exchange is ≤ k rows per batch. r12: the ``repartition("vid")`` that
-    used to precede the persist is GONE — it existed for the final
+    used to precede the checkpoint is GONE — it existed for the final
     (vid → cid) join-back that r11's payload mode eliminated, so it had
     become a pure extra corpus exchange (guide §2.4); with payload mode
-    every pass over the cache is narrow. ``return_centroids=True``
+    every pass over the checkpoint is narrow. ``return_centroids=True``
     additionally returns the final centroid frame
     (cid int, centroid array<double>) — the kmeans_embeddings report face
     consumes it. ``small_rows`` overrides the local-finish row gate
@@ -688,9 +688,9 @@ def kmeans_fit_arrow(
     v = (
         vectors.select(F.col(id_col).alias("vid"), _as_double(vec_col).alias("v"))
         .withColumn("n", l2_norm(F.col("v")))
-        .persist()
+        .localCheckpoint(eager=False)
     )
-    # one count: materializes the persist AND gates the local finish
+    # one count: materializes the checkpoint AND gates the local finish
     n_rows = v.count()
     if n_rows < k:
         raise ValueError(f"kmeans_fit_arrow: k={k} > corpus size {n_rows}")
@@ -702,9 +702,9 @@ def kmeans_fit_arrow(
             " ccid int, ce array<double>",
         )
         if return_centroids:
-            # both faces filter the one mixed task output — persist it so
+            # both faces filter the one mixed task output — checkpoint it so
             # the Lloyd task runs once, not once per face
-            mixed = mixed.persist()
+            mixed = mixed.localCheckpoint(eager=False)
         assign = mixed.where(F.col("vid").isNotNull()).select(
             "vid", "v", "n", "cid"
         )
@@ -731,9 +731,9 @@ def kmeans_fit_arrow(
         for r in upd:
             new[r["cid"], r["pos"]] = r["s"] / r["c"]
         cents = new
-    # payload mode: the final assignment rides out of the SAME cached-corpus
+    # payload mode: the final assignment rides out of the SAME checkpointed-corpus
     # mapInArrow pass that computes it — no corpus-sized join (r11; the old
-    # v ⋈ _assign_arrow(v) shape re-read the persisted corpus on both join
+    # v ⋈ _assign_arrow(v) shape re-read the shared corpus on both join
     # sides and exchanged the narrow side)
     assign = _assign_arrow(v, cents, payload=True)
     if return_centroids:
@@ -826,7 +826,7 @@ def pq_fit(
     chunks = F.array(*[F.slice(ve, s * d_sub + 1, d_sub) for s in range(m)])
     sub = vectors.select(
         F.col(id_col).alias("vid"), F.posexplode(chunks).alias("s", "sve")
-    ).persist()
+    ).localCheckpoint(eager=False)
 
     seed_rows = vectors.select(id_col, ve.alias("v")).orderBy(id_col).limit(k).collect()
     if len(seed_rows) < k:

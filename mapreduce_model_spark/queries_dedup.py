@@ -256,9 +256,9 @@ def _lsh_recall_frame(docs):
     r12: hash the corpus ONCE. All three pipelines (truth, MinHash, OPH)
     derive from the same per-doc shingle-hash SETS, so the tokenize +
     shingle + md5 front end — previously run once per pipeline — is built
-    once, persisted as the per-doc ARRAY frame (|docs| rows, the frame
-    _blocked_pair_intersections persisted anyway), and the signature
-    aggregates re-explode the cached integer arrays. Values are identical
+    once, checkpointed as the per-doc ARRAY frame (|docs| rows, the frame
+    _blocked_pair_intersections checkpoints anyway), and the signature
+    aggregates re-explode the shared integer arrays. Values are identical
     by construction: both signature forms are set-based mins over the
     same distinct hashes (operators/dedup.py docstrings). This is NOT the
     rejected r-earlier experiment, which persisted the EXPLODED
@@ -266,7 +266,7 @@ def _lsh_recall_frame(docs):
     from mapreduce_model_spark.operators.dedup import shingle_set_arrays
 
     # read by the truth's pair engine and both signature pipelines
-    sets = shingle_set_arrays(docs, k=SHINGLE_K).persist()
+    sets = shingle_set_arrays(docs, k=SHINGLE_K).localCheckpoint(eager=False)
     truth = jaccard_decile_pairs(
         docs, shingle_k=SHINGLE_K, max_shingle_df=MAX_SHINGLE_DF, sets=sets
     )
@@ -1130,7 +1130,7 @@ def q_dedup_cluster_quality(spark, sf_dir):
     docs = table(spark, sf_dir, "documents").select("doc_id", "n_chars")
     pairs = _mh_pairs(table(spark, sf_dir, "documents")).select("id_a", "id_b")
     comp = connected_components(pairs)
-    # lab feeds BOTH the winner election and the final join: persist, or the
+    # lab feeds BOTH the winner election and the final join: checkpoint, or the
     # entire upstream (MinHash-LSH pair generation + connected components)
     # executes once per branch (r11 plan audit: the union-find MapInPandas
     # appeared twice; measured ~2x the dedup_clusters cost for the same
@@ -1139,7 +1139,7 @@ def q_dedup_cluster_quality(spark, sf_dir):
         "doc_id",
         F.coalesce(F.col("component"), F.col("doc_id")).alias("component"),
         "n_chars",
-    ).persist()
+    ).localCheckpoint(eager=False)
     winner = lab.groupBy("component").agg(
         F.min(F.struct((-F.col("n_chars")).alias("neg"), F.col("doc_id").alias("d")))
         .alias("w")

@@ -249,8 +249,8 @@ def multimodal_decode_real(spark, sf_dir):
     # media feeds TWO consumers (the sniffer branch and the decode branch);
     # without materialization the join re-runs the whole encode pass per
     # branch (r11 plan audit: the encode MapInPandas appeared twice).
-    # Persist = one encode pass at any scale; payloads are size-bounded.
-    media = synthetic_image_media(table(spark, sf_dir, "documents")).persist()
+    # Checkpoint = one encode pass at any scale; payloads are size-bounded.
+    media = synthetic_image_media(table(spark, sf_dir, "documents")).localCheckpoint(eager=False)
     fmts = media.select("doc_id", sniff_format(F.col("payload")).alias("fmt"))
     feats = decode_image_features(media)
     return feats.join(fmts, "doc_id").select(
@@ -316,10 +316,10 @@ def multimodal_resize_real(spark, sf_dir):
     )
 
     media = synthetic_image_media(table(spark, sf_dir, "documents"))
-    # resized feeds both the sniffer and the decode branch: persist so the
+    # resized feeds both the sniffer and the decode branch: checkpoint so the
     # encode→resize→re-encode chain runs ONCE, not once per branch (r11
     # plan audit: 5 MapInPandas nodes, i.e. build and resize duplicated).
-    resized = resize_image_real(media, out_w=_RSZ_W, out_h=_RSZ_H).persist()
+    resized = resize_image_real(media, out_w=_RSZ_W, out_h=_RSZ_H).localCheckpoint(eager=False)
     fmts = resized.select(
         "doc_id", sniff_format(F.col("payload")).alias("fmt"),
         "out_width", "out_height",
@@ -384,9 +384,9 @@ def multimodal_decode_jpeg(spark, sf_dir):
         synthetic_jpeg_media,
     )
 
-    # persist: two consumers (sniff + decode), one encode pass — see
+    # checkpoint: two consumers (sniff + decode), one encode pass — see
     # multimodal_decode_real
-    media = synthetic_jpeg_media(table(spark, sf_dir, "documents")).persist()
+    media = synthetic_jpeg_media(table(spark, sf_dir, "documents")).localCheckpoint(eager=False)
     fmts = media.select("doc_id", sniff_format(F.col("payload")).alias("fmt"))
     feats = decode_image_features(media)
     return feats.join(fmts, "doc_id").select(
@@ -451,9 +451,9 @@ def multimodal_decode_png(spark, sf_dir):
         synthetic_png_media,
     )
 
-    # persist: two consumers (sniff + decode), one encode pass — see
+    # checkpoint: two consumers (sniff + decode), one encode pass — see
     # multimodal_decode_real
-    media = synthetic_png_media(table(spark, sf_dir, "documents")).persist()
+    media = synthetic_png_media(table(spark, sf_dir, "documents")).localCheckpoint(eager=False)
     fmts = media.select("doc_id", sniff_format(F.col("payload")).alias("fmt"))
     feats = decode_image_features(media)
     return feats.join(fmts, "doc_id").select(
@@ -516,9 +516,9 @@ def multimodal_decode_gif(spark, sf_dir):
         synthetic_gif_media,
     )
 
-    # persist: two consumers (sniff + decode), one encode pass — see
+    # checkpoint: two consumers (sniff + decode), one encode pass — see
     # multimodal_decode_real
-    media = synthetic_gif_media(table(spark, sf_dir, "documents")).persist()
+    media = synthetic_gif_media(table(spark, sf_dir, "documents")).localCheckpoint(eager=False)
     fmts = media.select("doc_id", sniff_format(F.col("payload")).alias("fmt"))
     feats = decode_image_features(media)
     return feats.join(fmts, "doc_id").select(

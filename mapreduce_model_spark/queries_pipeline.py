@@ -187,8 +187,8 @@ def corpus_mix_temperature(spark, sf_dir):
         F.lit(1.0),
         q * F.floor(F.col("n_total") * _MIX_BUDGET_FRAC) / F.col("n_docs"),
     )
-    # thr is |sources| rows and feeds both output branches — persist so
-    # the stats-side corpus scan runs once (cache lifecycle: registry.py)
+    # thr is |sources| rows and feeds both output branches — checkpoint so
+    # the stats-side corpus scan runs once (sharing a frame: registry.py)
     thr = (
         per.crossJoin(F.broadcast(tot))
         .select(
@@ -198,7 +198,7 @@ def corpus_mix_temperature(spark, sf_dir):
             q.alias("q"),
             F.round(rate * 1000000 + 1e-3).cast("long").alias("sample_threshold"),
         )
-        .persist()
+        .localCheckpoint(eager=False)
     )
     h = md5_int32(F.concat(F.lit("tsample:"), F.col("doc_id").cast("string")))
     sampled = (
@@ -2005,7 +2005,7 @@ def time_embargo_split(spark, sf_dir):
 
     Scale: TWO fact scans — the 2-value min/max aggregate, then the tag
     pass (a narrow CASE against the broadcast boundaries) feeding a single
-    (split, user) aggregate. That persisted, |users|-bounded frame serves
+    (split, user) aggregate. That checkpointed, |users|-bounded frame serves
     both the split summary and the shared-user audit, so no branch ever
     re-derives the fact-table plan."""
     ev = table(spark, sf_dir, "events")
@@ -2029,11 +2029,11 @@ def time_embargo_split(spark, sf_dir):
     # ONE (split, user) aggregate off the tag pass; the split summary AND
     # the shared-user audit both derive from it, so the fact table is
     # scanned exactly twice (boundary stats + tag), never re-derived per
-    # branch. per_user is bounded by 3x|users| — persist, not re-plan.
+    # branch. per_user is bounded by 3x|users| — checkpoint, not re-plan.
     per_user = (
         tagged.groupBy("split", "user_id")
         .agg(F.count(F.lit(1)).alias("n"))
-        .persist()
+        .localCheckpoint(eager=False)
     )
     shared = (
         per_user.groupBy("user_id")
@@ -2268,15 +2268,15 @@ def dau_wau_stickiness(spark, sf_dir):
     one distinct-count aggregate keyed on the window-end day. Off-grid
     window ends are dropped by a broadcast semi join against the observed
     -day grid. The event log itself is touched once — the deduped
-    user-day frame persists and every branch (day grid, DAU, window
+    user-day frame is checkpointed and every branch (day grid, DAU, window
     contributions) reads the materialized frame, not the fact table."""
     ev = table(spark, sf_dir, "events").select(
         F.to_date("ts").alias("day"), "user_id"
     )
-    # persist the deduped user-day frame: days / dau / contrib all derive
+    # checkpoint the deduped user-day frame: days / dau / contrib all derive
     # from it, so the event log is scanned exactly once (the claim below);
-    # unpersisted, each branch would re-run the fact dedup
-    daily = ev.distinct().persist()
+    # without it, each branch would re-run the fact dedup
+    daily = ev.distinct().localCheckpoint(eager=False)
     days = daily.select("day").distinct()
     dau = daily.groupBy("day").agg(F.count(F.lit(1)).alias("dau"))
     contrib = daily.select(
@@ -2418,7 +2418,7 @@ def rfm_segments(spark, sf_dir):
     ntile ordering so both engines assign identical quintiles.
 
     Scale: one fact scan builds the |users|-sized RFM frame (map-side
-    combined, persisted across its four consumers). The three quintile
+    combined, checkpointed across its four consumers). The three quintile
     scores are EXACT ntile(5) but with NO global window: each axis gets
     a global rank from :func:`operators.ids.global_ordered_ids` (range
     exchange + narrow Arrow numbering — no single-partition stage,
@@ -2431,7 +2431,7 @@ def rfm_segments(spark, sf_dir):
     roll-up, not the per-user frame."""
     from mapreduce_model_spark.operators.ids import global_ordered_ids
 
-    per_user = _rfm_per_user(spark, sf_dir).persist()
+    per_user = _rfm_per_user(spark, sf_dir).localCheckpoint(eager=False)
     n = per_user.count()
     # Partition count scaled to the frame: n is already known, so don't pay
     # 32 range-exchange + Arrow tasks per axis for a few thousand users
@@ -2498,9 +2498,9 @@ def rfm_segments_scaled(spark, sf_dir):
     independent pandas recompute pin (tests/test_round6_ops.py) instead
     of a hash oracle."""
     # per_user feeds both the boundary aggregate and the scoring pass —
-    # persist the |users|-bounded frame so the fact scan runs once
-    # (cache lifecycle: registry.py docstring)
-    per_user = _rfm_per_user(spark, sf_dir).persist()
+    # checkpoint the |users|-bounded frame so the fact scan runs once
+    # (sharing a frame: registry.py docstring)
+    per_user = _rfm_per_user(spark, sf_dir).localCheckpoint(eager=False)
     bounds = per_user.agg(
         F.percentile_approx("recency_days", _RFM_QS, _RFM_ACC).alias("rb"),
         F.percentile_approx("frequency", _RFM_QS, _RFM_ACC).alias("fb"),
@@ -2545,11 +2545,11 @@ def wau_hll_sliding(spark, sf_dir):
     ev = table(spark, sf_dir, "events").select(
         F.to_date("ts").alias("day"), "user_id"
     )
-    # persist: the day grid and the contribution explode both consume
-    # per_day — unpersisted, column pruning gives each branch a different
+    # checkpoint: the day grid and the contribution explode both consume
+    # per_day — without it, column pruning gives each branch a different
     # partial-agg plan and the fact table aggregates twice
     per_day = (
-        ev.groupBy("day").agg(F.hll_sketch_agg("user_id", 14).alias("sk")).persist()
+        ev.groupBy("day").agg(F.hll_sketch_agg("user_id", 14).alias("sk")).localCheckpoint(eager=False)
     )
     days = per_day.select("day")
     contrib = per_day.select(
@@ -2595,7 +2595,7 @@ def skew_audit(spark, sf_dir):
     their share of all rows and their multiple of the mean key load.
 
     Scale: one map-side-combining aggregate over the fact scan builds the
-    |keys| frame once (persisted — the totals and the top-k are two
+    |keys| frame once (checkpointed — the totals and the top-k are two
     consumers); the top-k is TakeOrderedAndProject (no global sort, no
     window), and only the 1-row totals frame is broadcast back. Nothing
     driver-side beyond 20+1 rows, however large the fact table."""
@@ -2603,7 +2603,7 @@ def skew_audit(spark, sf_dir):
         table(spark, sf_dir, "events")
         .groupBy("user_id")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .persist()
+        .localCheckpoint(eager=False)
     )
     tot = per_key.agg(
         F.sum("cnt").cast("double").alias("total"), F.avg("cnt").alias("avg_cnt")

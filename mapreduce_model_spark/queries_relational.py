@@ -1742,9 +1742,9 @@ def robust_outliers(spark, sf_dir):
 
     Two lineitem scans, not three: the median pass scans once; the
     deviation frame (fact ⋈ broadcast medians, plus the |x−med| column)
-    is persisted while the MAD aggregate materializes it, and the final
-    flag count re-reads that cache instead of re-scanning the fact — a
-    deliberate cache-vs-rescan trade on a 2-column projection (the MAD
+    is checkpointed while the MAD aggregate materializes it, and the final
+    flag count re-reads those blocks instead of re-scanning the fact — a
+    deliberate checkpoint-vs-rescan trade on a 2-column projection (the MAD
     needs the deviations anyway, so caching them is the marginal cost of
     one write). Exact percentiles sort within groups — at 100 TB swap
     ``percentile`` for ``approx_percentile`` (same plan shape,
@@ -1758,7 +1758,7 @@ def robust_outliers(spark, sf_dir):
     dev = (
         li.join(F.broadcast(med), "l_returnflag")
         .withColumn("adev", F.abs(F.col("l_extendedprice") - F.col("med")))
-        .persist()
+        .localCheckpoint(eager=False)
     )
     madt = dev.groupBy("l_returnflag").agg(
         F.expr("percentile(adev, 0.5D)").alias("mad")

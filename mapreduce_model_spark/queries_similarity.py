@@ -798,7 +798,7 @@ def _kmeans_report_frame(spark, emb):
     test_arrow_kmeans_matches_sql_kmeans); per-dimension means reassociate
     at ~1e-16, far below the 1e-6 centroid rounding — the same argument
     _kmeans_cte documents for cross-engine parity. Per iteration: ONE
-    narrow cached-corpus mapInArrow pass whose exchange is ≤ k rows per
+    narrow checkpointed-corpus mapInArrow pass whose exchange is ≤ k rows per
     batch, versus kmeans_fit's per-iteration posexplode shuffle + eager
     checkpoint + degeneracy-count jobs. Final centroids re-enter as a
     k-row driver frame; member counts come off the payload-mode
@@ -897,9 +897,9 @@ def graph_triangles(spark, sf_dir):
     u<v<w orientation so each wedge is probed once and each triangle
     counted exactly once. Every join is an equi-join on node keys —
     shuffle-partitioned, AQE-managed, no cartesian anywhere."""
-    # three consumers below — persist the (tiny, post-support) edge
+    # three consumers below — checkpoint the (tiny, post-support) edge
     # list so the order-blocked pair generation runs once, not thrice
-    edges = _copurchase_edges(spark, sf_dir).persist()
+    edges = _copurchase_edges(spark, sf_dir).localCheckpoint(eager=False)
     e1, e2, e3 = edges.alias("e1"), edges.alias("e2"), edges.alias("e3")
     return (
         e1.join(e2, F.col("e1.v") == F.col("e2.u"))
@@ -1311,7 +1311,7 @@ def _moment_frames(spark, sf_dir):
                 names=["sxy", "sx", "n"],
             )
 
-    parts = emb.mapInArrow(fn, "sxy array<double>, sx array<double>, n bigint").persist()
+    parts = emb.mapInArrow(fn, "sxy array<double>, sx array<double>, n bigint").localCheckpoint(eager=False)
     cells = (
         parts.select(F.posexplode("sxy").alias("k", "x"))
         .groupBy("k")
@@ -1529,8 +1529,8 @@ def _semantic_dedup_frame(
     # vid, v, n, cid — the training loop's own final assign pass. Three
     # consumers read it (both pair-join sides + the output join); each
     # re-derives it as a narrow broadcast-dot over kmeans_fit's ALREADY
-    # persisted corpus cache, so persisting here too was measured a wash
-    # (4.5 vs 4.2 s) while doubling cache memory — don't.
+    # checkpointed corpus, so a second shared copy here was measured a
+    # wash (4.5 vs 4.2 s, as a persist) while doubling memory — don't.
     assign = kmeans_fit(emb, k=k, n_iter=n_iter, return_assign=True)
     a = assign.select(
         "cid", F.col("vid").alias("vid_a"), F.col("v").alias("va"), F.col("n").alias("na")
@@ -1973,8 +1973,8 @@ def _ivfpq_train(spark, sf_dir, sampled: bool = False):
         emb.join(cells, "vec_id")
         .select("vec_id", "cell", resid.alias("vec"))
         # read by the residual-PQ training loop (4 passes) and the final
-        # cell lookup — persist or the coarse plan re-executes each time
-        .persist()
+        # cell lookup — checkpoint or the coarse plan re-executes each time
+        .localCheckpoint(eager=False)
     )
     codes_df, pcents = pq_fit(
         rdf,
@@ -2218,9 +2218,9 @@ def embedding_drift(spark, sf_dir):
         )
         .groupBy("label", "pos")
         .agg(F.avg("x").alias("mu"), F.sqrt(F.var_pop("x")).alias("sigma"))
-        # both sides of the self-join read this |labels|×64 frame — persist
+        # both sides of the self-join read this |labels|×64 frame — checkpoint
         # or the fact aggregation (and the parquet scan under it) runs 4×
-        .persist()
+        .localCheckpoint(eager=False)
     )
     a, b = stats.alias("a"), stats.alias("b")
     dmu = F.col("a.mu") - F.col("b.mu")

@@ -591,9 +591,9 @@ def sequence_packing(spark, sf_dir):
         "doc_id", "source", F.size(words_array("text")).alias("n_tokens")
     )
     # c feeds BOTH the per-source starts aggregate and the final join —
-    # persist so the range exchange + Arrow cumsum pass runs once, not
-    # twice (cache lifecycle: registry.py docstring)
-    c = global_prefix_sums(toks, ["source", "doc_id"], "n_tokens", "cum_g").persist()
+    # checkpoint so the range exchange + Arrow cumsum pass runs once, not
+    # twice (sharing a frame: registry.py docstring)
+    c = global_prefix_sums(toks, ["source", "doc_id"], "n_tokens", "cum_g").localCheckpoint(eager=False)
     starts = c.groupBy("source").agg(F.min("cum_g").alias("src_start"))
     return c.join(F.broadcast(starts), "source").select(
         "doc_id",
@@ -670,12 +670,12 @@ def source_token_caps(spark, sf_dir):
 
     docs = table(spark, sf_dir, "documents")
     # TWO consumers tokenize the corpus through this frame (the budget
-    # aggregate and the prefix-sum range exchange) — persist the narrow
+    # aggregate and the prefix-sum range exchange) — checkpoint the narrow
     # (id, source, n_tokens) rows so the regexp tokenize pass runs once
-    # (r12, guide §5; same move as sequence_packing's persisted cumsum)
+    # (r12, guide §5; same move as sequence_packing's checkpointed cumsum)
     toks = docs.select(
         "doc_id", "source", F.size(words_array("text")).alias("n_tokens")
-    ).persist()
+    ).localCheckpoint(eager=False)
     tot = toks.groupBy("source").agg(
         F.sum("n_tokens").cast("long").alias("src_tokens")
     )
@@ -697,11 +697,11 @@ def source_token_caps(spark, sf_dir):
             .cast("long")
             .alias("token_budget"),
         )
-        .persist()
+        .localCheckpoint(eager=False)
     )
     # same derivation as sequence_packing: per-source cumsum = global
     # cumsum − the source's first global cumsum; c feeds starts + the cut
-    c = global_prefix_sums(toks, ["source", "doc_id"], "n_tokens", "cum_g").persist()
+    c = global_prefix_sums(toks, ["source", "doc_id"], "n_tokens", "cum_g").localCheckpoint(eager=False)
     starts = c.groupBy("source").agg(F.min("cum_g").alias("src_start"))
     kept = (
         c.join(F.broadcast(starts), "source")
@@ -1095,7 +1095,7 @@ def bm25_topk(spark, sf_dir):
     function behind corpus search and hard-negative mining.
 
     Scale shape: the corpus is scanned TWICE and never more — pass 1 is
-    the narrow per-doc length projection (persisted while the 1-row
+    the narrow per-doc length projection (checkpointed while the 1-row
     N/avgdl aggregate materializes it, so the score join re-reads the
     cache, robust_outliers-style); pass 2 explodes words but filters to
     the query terms BEFORE the (doc, term) aggregate, so the shuffle
@@ -1104,7 +1104,7 @@ def bm25_topk(spark, sf_dir):
     top-k is TakeOrderedAndProject (per-partition heaps, never a global
     sort)."""
     docs = table(spark, sf_dir, "documents")
-    wl = docs.select("doc_id", F.size(words_array("text")).alias("dl")).persist()
+    wl = docs.select("doc_id", F.size(words_array("text")).alias("dl")).localCheckpoint(eager=False)
     stats = wl.agg(
         F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")
     )
@@ -1114,9 +1114,9 @@ def bm25_topk(spark, sf_dir):
         .filter(F.col("word").isin(*_BM25_TERMS))
         .groupBy("doc_id", "word")
         .agg(F.count(F.lit(1)).alias("tf"))
-        # two consumers (df aggregate + score join) — persist the tiny
+        # two consumers (df aggregate + score join) — checkpoint the tiny
         # (matching docs × |terms|) frame or the corpus explode runs twice
-        .persist()
+        .localCheckpoint(eager=False)
     )
     dfq = tf.groupBy("word").agg(F.count(F.lit(1)).alias("df"))
     k1, b = _BM25_K1, _BM25_B
@@ -1192,8 +1192,8 @@ def cms_heavy_hitters(spark, sf_dir):
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("n"))
         # three consumers (sketch build, candidate top-k, estimate probe) —
-        # persist the vocab-sized counts or the corpus explode runs thrice
-        .persist()
+        # checkpoint the vocab-sized counts or the corpus explode runs thrice
+        .localCheckpoint(eager=False)
     )
     rb = F.explode(
         F.array(
@@ -1212,7 +1212,7 @@ def cms_heavy_hitters(spark, sf_dir):
     buckets = wc.select("word", "n", rb.alias("rb")).select(
         "word", "n", F.col("rb.r").alias("r"), F.col("rb.bkt").alias("bkt")
     )
-    # d×w-row mergeable sketch; persisted implicitly via broadcast below
+    # d×w-row mergeable sketch; materialized once via broadcast below
     sketch = buckets.groupBy("r", "bkt").agg(F.sum("n").alias("bn"))
     cand = wc.orderBy(F.col("n").desc(), "word").limit(20)
     return (
@@ -1274,9 +1274,9 @@ def source_overlap(spark, sf_dir):
         )
         .select("source", (md5_int32(F.col("s")) % MERSENNE_P).alias("x"))
         .distinct()
-        # three consumers (totals + both pair-join sides) — persist the
+        # three consumers (totals + both pair-join sides) — checkpoint the
         # (source, shingle-hash) set or the corpus explode runs three times
-        .persist()
+        .localCheckpoint(eager=False)
     )
     tot = ss.groupBy("source").agg(F.count(F.lit(1)).alias("n_sh"))
     a, b = ss.alias("a"), ss.alias("b")
@@ -1345,8 +1345,8 @@ def lm_perplexity(spark, sf_dir):
     p(w2|w1) = (C(w1w2)+k) / (Cctx(w1)+k·V), ppl = exp(−mean ln p).
 
     Scale shape: the train pass (bigram counts) and the score pass are
-    two separate corpus explodes BY DESIGN — persisting the exploded
-    token stream would cache a corpus-sized frame, while re-scanning
+    two separate corpus explodes BY DESIGN — checkpointing the exploded
+    token stream would store a corpus-sized frame, while re-scanning
     parquet is the cheaper side of that trade (contrast robust_outliers,
     which caches a narrow projection); the vocabulary size V is a third
     scan but collapses to per-partition longs after the distributed
@@ -1368,9 +1368,9 @@ def lm_perplexity(spark, sf_dir):
     bcnt = (
         bi.groupBy("bg")
         .agg(F.count(F.lit(1)).alias("c_xy"))
-        # two consumers (context sums + the score join) — persist the
+        # two consumers (context sums + the score join) — checkpoint the
         # bigram-vocab-sized counts, not the corpus-sized token stream
-        .persist()
+        .localCheckpoint(eager=False)
     )
     cctx = (
         bcnt.select(F.split_part("bg", F.lit(" "), F.lit(1)).alias("w1"), "c_xy")
@@ -1566,7 +1566,7 @@ def phrase_search(spark, sf_dir):
     token_positions convention)."""
     docs = spread_for_fanout(table(spark, sf_dir, "documents"), "doc_id")
     # tokenize the corpus ONCE: restrict to the phrase vocabulary in the
-    # same pass and persist the (tiny) postings frame — unpersisted, each
+    # same pass and checkpoint the (tiny) postings frame — without it, each
     # word branch of the self-join re-runs the full posexplode fan-out
     pos = (
         docs.select(
@@ -1574,7 +1574,7 @@ def phrase_search(spark, sf_dir):
             F.posexplode(words_array("text")).alias("pos", "word"),
         )
         .where(F.col("word").isin(*_PHRASE))
-        .persist()
+        .localCheckpoint(eager=False)
     )
     a = pos.where(F.col("word") == _PHRASE[0]).select(
         "doc_id", F.col("pos").alias("pos_a")
@@ -1629,13 +1629,13 @@ def vocab_coverage_curve(spark, sf_dir):
     docs = spread_for_fanout(table(spark, sf_dir, "documents"), "doc_id")
     # tf feeds BOTH the total-token aggregate and the top-N pick, and
     # Catalyst does not reuse the exchange across the two subtrees (plan
-    # audit r12: 4 parquet scans, 0 ReusedExchange) — persist the
+    # audit r12: 4 parquet scans, 0 ReusedExchange) — checkpoint the
     # vocab-sized count frame so the corpus tokenize+explode runs once
     tf = (
         docs.select(F.explode(words_array("text")).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("n"))
-        .persist()
+        .localCheckpoint(eager=False)
     )
     tot = tf.agg(F.sum("n").alias("total"))
     top = tf.orderBy(F.desc("n"), "word").limit(max(_VOCAB_SIZES))
@@ -1713,8 +1713,8 @@ def dsir_importance(spark, sf_dir):
     rows. Pass 2 re-derives features narrowly in the scan stage and joins
     the BROADCAST λ table (256 rows), so per-doc scoring is one doc_id
     exchange of map-side-combined (sum, count) partials. The token-sized
-    exploded frame is deliberately NOT persisted — rescanning parquet is
-    cheaper than caching a row-per-token frame at scale."""
+    exploded frame is deliberately NOT checkpointed — rescanning parquet is
+    cheaper than storing a row-per-token frame at scale."""
     docs = spread_for_fanout(table(spark, sf_dir, "documents"), "doc_id")
     words = words_array("text")
     bigrams = F.when(
@@ -1728,14 +1728,14 @@ def dsir_importance(spark, sf_dir):
     # hash INSIDE the array (narrow, scan-stage), then explode ints only.
     # feats feeds the bucket-count aggregate AND the final scoring join;
     # cnt feeds the grand-total aggregate AND the lambda table — without
-    # the persists each consumer re-runs the corpus tokenize + bigram
+    # the checkpoints each consumer re-runs the corpus tokenize + bigram
     # hash (plan audit r12: 6 parquet scans, 0 ReusedExchange)
     buckets = F.transform(bigrams, lambda bg: F.pmod(md5_int32(bg), F.lit(_DSIR_B)))
-    feats = docs.select("doc_id", "source", F.explode(buckets).alias("b")).persist()
+    feats = docs.select("doc_id", "source", F.explode(buckets).alias("b")).localCheckpoint(eager=False)
     cnt = feats.groupBy("b").agg(
         F.count(F.lit(1)).alias("r"),
         F.sum(F.when(F.col("source") == _DSIR_TARGET, 1).otherwise(0)).alias("t"),
-    ).persist()
+    ).localCheckpoint(eager=False)
     tot = cnt.agg(
         F.sum("r").cast("double").alias("tr"), F.sum("t").cast("double").alias("tt")
     )
@@ -1839,7 +1839,7 @@ def quality_classifier(spark, sf_dir):
     CTEs (the kmeans-oracle move — see _qc_oracle on float stability).
 
     Scale: the feature frame is built once (explode → (doc,bucket) count
-    → dense 65-vector via map lookup) and persisted; each GD step is ONE
+    → dense 65-vector via map lookup) and checkpointed; each GD step is ONE
     job — a single global aggregate with 65 independent sum buffers
     (``sum(gx[i])``), so the gradient never materializes the ×65
     posexplode fan-out the first version paid (N×65 rows generated and
@@ -1850,7 +1850,7 @@ def quality_classifier(spark, sf_dir):
     carry millions of docs, not thousands. Hashes identical (re-verified
     sf0.001/sf0.01); only the 65-double weight vector ever reaches the
     driver (kmeans_fit's loop discipline). At 100 TB: 10 passes over a
-    cached narrow frame, one 65-buffer partial-agg row per partition,
+    checkpointed narrow frame, one 65-buffer partial-agg row per partition,
     520-byte driver traffic per step. Scoring re-enters weights as a
     literal — zero exchanges, like jl_projection."""
     docs = (
@@ -1878,12 +1878,12 @@ def quality_classifier(spark, sf_dir):
         F.array(F.lit(1.0)),
     )
     y = F.when(F.col("source") == "src0", 1.0).otherwise(0.0)
-    feats = per_doc.select("doc_id", x.alias("x"), y.alias("y")).persist()
+    feats = per_doc.select("doc_id", x.alias("x"), y.alias("y")).localCheckpoint(eager=False)
     n_docs = feats.count()
 
     if n_docs <= _QC_LOCAL_DOCS:
         # Local finish (r12): all 10 GD iterations + the final scoring in
-        # ONE executor task over the persisted feature frame — numpy matvec
+        # ONE executor task over the checkpointed feature frame — numpy matvec
         # instead of 10 collect() jobs each paying scheduler latency and an
         # interpreted 65-element HOF transform per row (guide §2 job
         # overhead + §4 vectorize-in-native-code). Float parity: X@w and
@@ -2411,8 +2411,8 @@ def lexical_topk(spark, sf_dir):
         .groupBy("doc_id", "x")
         .agg(F.count(F.lit(1)).alias("tf"))
         # three consumers: norms, the query slice, the corpus side of the
-        # dot join — persist or the corpus re-tokenizes per branch
-        .persist()
+        # dot join — checkpoint or the corpus re-tokenizes per branch
+        .localCheckpoint(eager=False)
     )
     nrm = tf.groupBy("doc_id").agg(
         F.sqrt(F.sum(F.col("tf") * F.col("tf")).cast("double")).alias("nrm")

@@ -11,14 +11,14 @@ Tables: region nation customer supplier part orders lineitem events
 documents embeddings (pre-registered as DuckDB views by the driver; loaded
 from ``{sf_dir}/{name}.parquet`` on the Spark side).
 
-Cache lifecycle: query functions return UNmaterialized DataFrames (the
-caller collects), so a ``.persist()`` placed to share a subframe across
-branches cannot be unpersisted inside the function — the intended
-lifecycle is Spark's own reclamation: executor LRU eviction under memory
-pressure (caches are MEMORY_AND_DISK and evictable) plus ContextCleaner
-release once the plan is unreferenced. Long-lived sessions running many
-queries (bench, sweep) rely on this deliberately; do NOT add eager
-unpersist calls that would force recomputation of shared branches.
+Sharing a frame: a subframe that several branches of one query read is
+built once with ``localCheckpoint(eager=False)``, never persisted. Spark's
+CacheManager keeps a persisted plan and serves any later identical plan
+from it, stale after a table is rewritten. A checkpoint is a ``LogicalRDD``
+that no later plan matches; ContextCleaner frees its blocks once the frame
+is unreferenced. Under AQE the call runs the frame's shuffle stages, before
+the caller's action, and lost blocks are not rebuilt from lineage (sessions
+are ``local[N]``).
 """
 
 from __future__ import annotations

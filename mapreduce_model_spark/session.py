@@ -91,11 +91,9 @@ def get_spark(
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     if shuffle_partitions is None:
-        shuffle_partitions = int(
-            os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", max(cpus, 8))
-        )
+        shuffle_partitions = max(cpus, 8)
     extra_conf = extra_conf or {}
-    driver_memory = extra_conf.get("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+    driver_memory = extra_conf.get("spark.driver.memory", "8g")
 
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")

@@ -197,22 +197,40 @@ def test_simhash_pairs_find_near_dups(spark, corpus):
 
 
 def test_dedup_queries_follow_a_rewritten_table(spark, sf_dir, tmp_path):
-    """A registry query keeps nothing between calls: after
-    documents.parquet is rewritten to half its rows, the next call in the
-    same session reads the new table. Each face's row count is checked
-    against its DuckDB oracle over the same file."""
+    """A registry query keeps nothing between calls: after its input table
+    is rewritten to half its rows, the next call in the same session reads
+    the new table, and no frame a query shared stays in Spark's
+    CacheManager, where a later identical plan would be served from it.
+    Each face's row count is checked against its DuckDB oracle over the
+    same file."""
     import duckdb
     import pyarrow.parquet as pq
 
     from mapreduce_model_spark.registry import ORACLE_SQL, QUERIES
 
-    names = ["dedup_minhash_sig", "dedup_minhash_oph", "dedup_simhash"]
-    path = tmp_path / "documents.parquet"
-    full = pq.read_table(f"{sf_dir}/documents.parquet")
+    faces = {
+        "documents": [
+            "dedup_minhash_sig",
+            "dedup_minhash_oph",
+            "dedup_simhash",
+            "dedup_near_minhash",
+            "dedup_simhash_pairs",
+        ],
+        "embeddings": ["embedding_pq"],
+    }
+    names = [n for ns in faces.values() for n in ns]
+    full = {t: pq.read_table(f"{sf_dir}/{t}.parquet") for t in faces}
+
+    def write(rows):
+        for t, tbl in full.items():
+            pq.write_table(tbl.slice(0, rows(tbl)), tmp_path / f"{t}.parquet")
 
     def counts():
         con = duckdb.connect()
-        con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{path}')")
+        for t in faces:
+            con.execute(
+                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{tmp_path / t}.parquet')"
+            )
         got = {n: QUERIES[n](spark, str(tmp_path)).count() for n in names}
         want = {
             n: con.execute(f"SELECT count(*) FROM ({ORACLE_SQL[n]})").fetchone()[0]
@@ -220,10 +238,12 @@ def test_dedup_queries_follow_a_rewritten_table(spark, sf_dir, tmp_path):
         }
         return got, want
 
-    pq.write_table(full, path)
+    spark.catalog.clearCache()
+    write(lambda tbl: tbl.num_rows)
     before, want = counts()
     assert before == want
-    pq.write_table(full.slice(0, full.num_rows // 2), path)
+    write(lambda tbl: tbl.num_rows // 2)
     after, want = counts()
     assert after == want
     assert all(after[n] < before[n] for n in names), (before, after)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

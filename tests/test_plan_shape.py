@@ -19,16 +19,38 @@ SF = "/root/testdata/sf0.001"
 # funnel, row-at-a-time Python) each walk all ~190 plans; building and
 # explaining a plan is pure (same session, same SF), so cache by name —
 # saves ~2 min of identical work per suite run (r6 review).
-_PLAN_CACHE: dict[str, str] = {}
+_PLAN_CACHE: dict[str, tuple[str, list[str]]] = {}
 
 
-def plan(spark, name: str) -> str:
+def _explain(df) -> str:
+    return df.sparkSession._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+
+
+def plan(spark, name: str, checkpoints: bool = False) -> str:
+    """Formatted physical plan of a registered query. A frame the query
+    shares through ``localCheckpoint`` reads as an ``ExistingRDD`` scan
+    whose plan ``explain`` does not show; ``checkpoints=True`` appends the
+    plan of every frame checkpointed while the query was built, so a count
+    over the result covers the whole computation."""
     if name not in _PLAN_CACHE:
-        df = QUERIES[name](spark, SF)
-        _PLAN_CACHE[name] = spark._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
-    return _PLAN_CACHE[name]
+        cls = type(spark.range(0))
+        original = cls.localCheckpoint
+        inner: list[str] = []
+
+        def recording(self, *args, **kwargs):
+            inner.append(_explain(self))
+            return original(self, *args, **kwargs)
+
+        cls.localCheckpoint = recording
+        try:
+            df = QUERIES[name](spark, SF)
+        finally:
+            cls.localCheckpoint = original
+        _PLAN_CACHE[name] = (_explain(df), inner)
+    final, inner = _PLAN_CACHE[name]
+    return "\n".join([final, *inner]) if checkpoints else final
 
 
 def test_join_multi_broadcasts_all_dims(spark):
@@ -87,7 +109,7 @@ def test_no_query_uses_cartesian_product(spark):
     product — at 100 TB that plan never finishes."""
     offenders = []
     for name in sorted(QUERIES):
-        if "CartesianProduct" in plan(spark, name):
+        if "CartesianProduct" in plan(spark, name, checkpoints=True):
             offenders.append(name)
     assert offenders == []
 
@@ -337,16 +359,18 @@ def test_ewma_is_one_exchange(spark):
 
 
 def test_robust_outliers_two_scans_and_broadcast_stats(spark):
-    """Median+MAD outlier screen: exactly TWO distinct lineitem scans (the
-    median pass, and the cache-populating deviation pass — the final flag
-    count reads the persisted deviation frame, never a third scan), and
-    both per-group stats frames broadcast back onto the fact."""
+    """Median+MAD outlier screen: exactly TWO lineitem scans in the whole
+    computation (the median pass, and the deviation pass that builds the
+    checkpoint — the final flag count reads the checkpointed deviation
+    frame, never a third scan), and both per-group stats frames broadcast
+    back onto the fact."""
     import re
 
-    p = plan(spark, "robust_outliers")
-    scan_ids = set(re.findall(r"Scan parquet\s+\((\d+)\)", p))
-    assert len(scan_ids) == 2, scan_ids
-    assert "InMemoryTableScan" in p  # flag pass reads the cached dev frame
+    p = plan(spark, "robust_outliers", checkpoints=True)
+    scans = re.findall(r"Scan parquet\s+\((\d+)\)", p)
+    assert len(scans) == 2, scans
+    # flag pass reads the checkpointed dev frame
+    assert "Scan ExistingRDD" in plan(spark, "robust_outliers")
     assert p.count("BroadcastHashJoin") >= 2
     assert "SortMergeJoin" not in p
 
@@ -378,13 +402,13 @@ def test_kmeans_assign_pass_is_narrow(spark):
     """Lloyd's loop (Arrow engine since r12): the corpus is never
     shuffled or joined to meet the centroids (no SortMergeJoin, no
     cartesian, no nested-loop join anywhere). Below the local-finish
-    gate the whole loop is ONE MapInPandas task over the persisted
+    gate the whole loop is ONE MapInPandas task over the checkpointed
     corpus; above it the final assign is a MapInArrow with the centroids
     as a numpy closure constant. Either way the only join is the k-row
     broadcast of member counts onto centroids."""
-    p = plan(spark, "kmeans_embeddings")
+    p = plan(spark, "kmeans_embeddings", checkpoints=True)
     assert "MapInPandas" in p or "MapInArrow" in p
-    assert "InMemoryTableScan" in p
+    assert "Scan ExistingRDD" in plan(spark, "kmeans_embeddings")
     assert "SortMergeJoin" not in p
     assert "BroadcastNestedLoopJoin" not in p
     assert "CartesianProduct" not in p
@@ -462,16 +486,15 @@ def test_ngram_novelty_has_no_self_join(spark):
     assert p.count("+- Exchange") <= 3
 
 
-def test_containment_reuses_persisted_shingle_sets(spark):
+def test_containment_reuses_checkpointed_shingle_sets(spark):
     """Containment shares the blocked-pair engine with Jaccard: the per-doc
-    shingle-set build must be a persisted artifact re-read by its five
-    consumers (InMemoryTableScan), not five re-scans of raw text, and the
+    shingle-set build must be a checkpointed artifact re-read by its five
+    consumers (Scan ExistingRDD), not five re-scans of raw text, and the
     pair work is equi-joins only."""
-    p = plan(spark, "dedup_containment")
-    # every consumer reads the cache (formatted explain reprints the cached
-    # relation's build lineage per reference, so "Scan parquet" overcounts —
-    # the InMemoryTableScans are what executes)
-    assert p.count("InMemoryTableScan") >= 5
+    # every consumer reads the checkpoint (the tree line and the detail
+    # header each name a Scan ExistingRDD node)
+    assert plan(spark, "dedup_containment").count("Scan ExistingRDD") >= 5
+    p = plan(spark, "dedup_containment", checkpoints=True)
     assert "CartesianProduct" not in p
     assert "SortMergeJoin" not in p
 
@@ -553,10 +576,9 @@ def test_entity_match_runs_on_name_dictionary(spark):
 def test_time_embargo_split_two_fact_scans(spark):
     """The fact table appears exactly twice (boundary min/max + the tag
     pass); the split summary and the shared-user audit must both read the
-    PERSISTED (split, user) aggregate, never re-derive the fact plan."""
-    p = plan(spark, "time_embargo_split")
-    assert p.count("events.parquet") == 2
-    assert "InMemoryTableScan" in p or "InMemoryRelation" in p
+    CHECKPOINTED (split, user) aggregate, never re-derive the fact plan."""
+    assert plan(spark, "time_embargo_split", checkpoints=True).count("events.parquet") == 2
+    assert "Scan ExistingRDD" in plan(spark, "time_embargo_split")
 
 
 def test_sql_udf_inlines_to_codegen(spark):
@@ -570,29 +592,27 @@ def test_sql_udf_inlines_to_codegen(spark):
 
 
 def test_dau_wau_single_events_scan(spark):
-    """The deduped user-day frame persists: day grid, DAU, and window
-    contributions must all read the cached frame — exactly ONE events
-    scan in the plan (review-caught triple scan)."""
-    p = plan(spark, "dau_wau_stickiness")
-    assert p.count("events.parquet") == 1
-    assert "InMemoryTableScan" in p or "InMemoryRelation" in p
+    """The deduped user-day frame is checkpointed: day grid, DAU, and
+    window contributions must all read the checkpointed frame — exactly
+    ONE events scan in the whole computation (review-caught triple scan)."""
+    assert plan(spark, "dau_wau_stickiness", checkpoints=True).count("events.parquet") == 1
+    assert "Scan ExistingRDD" in plan(spark, "dau_wau_stickiness")
 
 
 def test_wau_hll_single_events_scan(spark):
-    """Sketch path: per_day persists so the day grid and the explode
-    branch share one fact aggregation (review-caught double scan)."""
-    p = plan(spark, "wau_hll_sliding")
-    assert p.count("events.parquet") == 1
-    assert "InMemoryTableScan" in p or "InMemoryRelation" in p
+    """Sketch path: per_day is checkpointed so the day grid and the
+    explode branch share one fact aggregation (review-caught double
+    scan)."""
+    assert plan(spark, "wau_hll_sliding", checkpoints=True).count("events.parquet") == 1
+    assert "Scan ExistingRDD" in plan(spark, "wau_hll_sliding")
 
 
 def test_phrase_search_single_corpus_tokenize(spark):
-    """The phrase-restricted postings frame persists: the adjacency
+    """The phrase-restricted postings frame is checkpointed: the adjacency
     self-join must not re-run the posexplode per word branch — one
     documents scan only (review-caught double tokenize)."""
-    p = plan(spark, "phrase_search")
-    assert p.count("documents.parquet") == 1
-    assert "InMemoryTableScan" in p or "InMemoryRelation" in p
+    assert plan(spark, "phrase_search", checkpoints=True).count("documents.parquet") == 1
+    assert "Scan ExistingRDD" in plan(spark, "phrase_search")
 
 
 def test_rfm_scaled_twin_has_no_window(spark):
@@ -634,22 +654,23 @@ def test_rfm_exact_has_no_window_either(spark):
 
 
 def test_inverted_index_dfcap_single_tokenize(spark):
-    """pairs persists across its two phases (df count + postings) and cnt
-    across its two consumers — exactly ONE documents scan; without the
-    persists the tokenize/dedup pipeline ran three times (r6 plan audit)."""
-    p = plan(spark, "inverted_index_dfcap")
-    assert p.count("documents.parquet") == 1
-    assert "InMemoryTableScan" in p or "InMemoryRelation" in p
+    """pairs is checkpointed across its two phases (df count + postings)
+    and cnt across its two consumers — exactly ONE documents scan; without
+    the checkpoints the tokenize/dedup pipeline ran three times (r6 plan
+    audit)."""
+    assert plan(spark, "inverted_index_dfcap", checkpoints=True).count("documents.parquet") == 1
+    assert "Scan ExistingRDD" in plan(spark, "inverted_index_dfcap")
 
 
 def test_rfm_scaled_shares_per_user_frame(spark):
-    """The |users| RFM frame persists so the boundary aggregate and the
-    scoring pass BOTH read the cache instead of re-running the fact
-    aggregation (r6 plan audit: double scan). The cached build plan
+    """The |users| RFM frame is checkpointed so the boundary aggregate and
+    the scoring pass BOTH read it instead of re-running the fact
+    aggregation (r6 plan audit: double scan). The checkpointed build plan
     itself scans events twice (fact + broadcast max-ts branch — same as
-    the exact twin), so the pin is on the cache reads, not scan count."""
+    the exact twin), so the pin is on the checkpoint reads, not scan
+    count."""
     p = plan(spark, "rfm_segments_scaled")
-    assert p.count("InMemoryTableScan") >= 2
+    assert p.count("Scan ExistingRDD") >= 2
 
 
 def test_sequence_packing_global_never_single_partitions(spark):
@@ -757,7 +778,7 @@ def test_no_undocumented_global_window_funnels(spark):
     for name in sorted(QUERIES):
         if name in _WINDOW_SINGLEPARTITION_ALLOWED:
             continue
-        p = plan(spark, name)
+        p = plan(spark, name, checkpoints=True)
         if "Window" in p and "SinglePartition" in p:
             offenders.append(name)
     assert offenders == [], offenders
@@ -774,7 +795,7 @@ def test_no_row_at_a_time_python_in_hot_paths(spark):
     for name in sorted(QUERIES):
         if name in ("doc_chunks_udtf", "ngram_cols_udtf"):
             continue
-        p = plan(spark, name)
+        p = plan(spark, name, checkpoints=True)
         if "BatchEvalPython" in p:
             offenders.append(name)
     assert offenders == [], offenders

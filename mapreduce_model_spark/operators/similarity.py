@@ -673,11 +673,10 @@ def kmeans_fit_arrow(
     bounded-metadata pattern; ≤4096×64 doubles = 2 MB at the cap) — the
     centroids re-enter each pass as a numpy closure constant, never a
     join side. Scale: per iteration ONE narrow checkpointed-corpus pass whose
-    exchange is ≤ k rows per batch. r12: the ``repartition("vid")`` that
-    used to precede the checkpoint is GONE — it existed for the final
-    (vid → cid) join-back that r11's payload mode eliminated, so it had
-    become a pure extra corpus exchange (guide §2.4); with payload mode
-    every pass over the checkpoint is narrow. ``return_centroids=True``
+    exchange is ≤ k rows per batch. Payload mode carries each row's
+    payload through the assign pass, so no (vid → cid) join-back follows
+    and the corpus needs no repartition: every pass over the checkpoint
+    is narrow. ``return_centroids=True``
     additionally returns the final centroid frame
     (cid int, centroid array<double>) — the kmeans_embeddings report face
     consumes it. ``small_rows`` overrides the local-finish row gate

@@ -51,15 +51,16 @@ __all__ = [
 ]
 
 
-def word_doc_pairs(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Distinct normalized ``(word, doc_id)`` pairs — the map-phase output.
+def word_doc_pairs(docs: DataFrame) -> DataFrame:
+    """Distinct normalized ``(word, doc_id)`` pairs — the map-phase output
+    over ``(doc_id, text)`` rows.
 
     One input row is one document, so each row's ``array_distinct`` of its
     ``words_array`` is the reference's per-file ``std::set`` (main.cc:62-63,
     78-80): the pairs come out distinct with no exchange."""
     return docs.select(
-        F.explode(F.array_distinct(words_array(F.col(text_col)))).alias("word"),
-        F.col(id_col).alias("doc_id"),
+        F.explode(F.array_distinct(words_array(F.col("text")))).alias("word"),
+        F.col("doc_id"),
     )
 
 
@@ -90,19 +91,14 @@ def index_from_pairs(pairs: DataFrame) -> DataFrame:
     )
 
 
-def invert(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def invert(docs: DataFrame) -> DataFrame:
     """Full index: ``(letter, word, docs, n_docs)`` over one row per
     document — see ``index_from_pairs``. The pairs are narrow, so the one
     hash-partition shuffle is ``postings``' exchange on ``word``."""
-    return index_from_pairs(word_doc_pairs(docs, text_col, id_col))
+    return index_from_pairs(word_doc_pairs(docs))
 
 
-def invert_df_capped(
-    docs: DataFrame,
-    df_cap: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def invert_df_capped(docs: DataFrame, df_cap: int) -> DataFrame:
     """The true-stopword-scale index build the module docstring promises:
     words above a document-frequency cap keep their ``n_docs`` count but
     get NO postings array (empty string) — 'the' at 100 TB has an
@@ -124,7 +120,7 @@ def invert_df_capped(
     # both the under-cap filter and the final join — checkpoint so the
     # tokenize/normalize pipeline runs once, not three times
     # (sharing a frame: registry.py docstring)
-    pairs = word_doc_pairs(docs, text_col, id_col).localCheckpoint(eager=False)
+    pairs = word_doc_pairs(docs).localCheckpoint(eager=False)
     cnt = pairs.groupBy("word").agg(F.count(F.lit(1)).alias("n_docs")).localCheckpoint(eager=False)
     under = cnt.filter(F.col("n_docs") <= df_cap).select("word")
     posted = postings(pairs.join(under, "word"))

@@ -427,65 +427,6 @@ def extract_features(media: DataFrame, id_col: str = "doc_id") -> DataFrame:
     )
 
 
-def extract_features_arrow(
-    media: DataFrame, id_col: str = "doc_id", barrier: bool = False
-) -> DataFrame:
-    """``mapInArrow`` twin of :func:`extract_features` — identical output,
-    but the binary payloads are read straight out of the Arrow value
-    buffer (offsets + one contiguous byte buffer), never materialized as
-    Python bytes objects or pandas object-dtype cells. For multi-MB
-    image/video payloads this removes the one real cost of the pandas
-    path: per-cell object boxing of the binary column.
-
-    ``barrier=True`` runs the stage under barrier execution (gang
-    scheduling: every task launches together and may rendezvous via
-    ``BarrierTaskContext``). Irrelevant for this stub extractor's math —
-    results are identical either way, parity-pinned in tests — but it is
-    the switch a REAL extractor flips when tasks must coordinate once at
-    start: loading a sharded model checkpoint collectively, NCCL/gloo
-    group init for GPU featurizers, or rate-limit handshakes. Cost: the
-    whole stage's tasks must fit on the cluster at once (no wave
-    scheduling), so keep barrier stages narrow and short."""
-    import pyarrow as pa
-
-    def _extract(batches):
-        for batch in batches:
-            cols = {name: batch.column(i) for i, name in enumerate(batch.schema.names)}
-            arr = cols["payload"]
-            if isinstance(arr, pa.ChunkedArray):  # pragma: no cover — RecordBatch cols are flat
-                arr = arr.combine_chunks()
-            n = len(arr)
-            # binary layout: buffers = [validity, int32 offsets, data]
-            offsets_all = np.frombuffer(arr.buffers()[1], dtype=np.int32)
-            offsets = offsets_all[arr.offset : arr.offset + n + 1].astype(np.int64)
-            buf = arr.buffers()[2]
-            data = np.frombuffer(buf, dtype=np.uint8) if buf is not None else np.empty(0, np.uint8)
-            lens = np.diff(offsets)
-            byte_sum = np.zeros(n, dtype=np.int64)
-            nz = lens > 0
-            if nz.any():
-                byte_sum[nz] = np.add.reduceat(
-                    data.astype(np.int64), offsets[:-1][nz]
-                )
-            byte_sum %= 997
-            widths = np.sqrt(lens).astype(np.int64)
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "doc_id": cols[id_col],
-                    "n_bytes": pa.array(lens.astype(np.int32), pa.int32()),
-                    "byte_sum_mod": pa.array(byte_sum.astype(np.int32), pa.int32()),
-                    "fake_width": pa.array(widths.astype(np.int32), pa.int32()),
-                    "fake_height": pa.array(
-                        (lens // np.maximum(widths, 1)).astype(np.int32), pa.int32()
-                    ),
-                }
-            )
-
-    return spread_for_fanout(media.select(id_col, "payload"), id_col).mapInArrow(
-        _extract, FEATURE_SCHEMA, barrier=barrier
-    )
-
-
 DECODE_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),

@@ -212,19 +212,17 @@ def _rank_centroids(
     vectors: DataFrame,
     centroids: DataFrame,
     max_rank: int,
-    join_back: bool = False,
 ) -> DataFrame:
     """Score every vector against every (broadcast) centroid, keep the
     ``max_rank`` nearest cells. Output adds ``cid`` (and ``crank`` when
     ``max_rank`` > 1). Tie-break is (score desc, cid asc) in both paths.
 
     Only the multi-probe (query-side, small) path pays a window; rank-1 —
-    the CORPUS-side assignment in IVF and every k-means iteration — is a
-    ``min_by`` aggregate whose map-side partial collapses the ×centroids
-    fan-out before the exchange. The window formulation would shuffle
-    corpus × n_centroids rows (1B vectors × 1000 cells = 1T rows); the
-    aggregate shuffles one combined row per vector, and AQE coalesces
-    from there."""
+    IVF's CORPUS-side assignment — is a ``min_by`` aggregate whose
+    map-side partial collapses the ×centroids fan-out before the
+    exchange. The window formulation would shuffle corpus × n_centroids
+    rows (1B vectors × 1000 cells = 1T rows); the aggregate shuffles one
+    combined row per vector, and AQE coalesces from there."""
     scored = vectors.crossJoin(F.broadcast(centroids)).withColumn(
         "_cscore", dot(F.col("v"), F.col("ce")) / (F.col("n") * F.col("cn"))
     )
@@ -240,34 +238,14 @@ def _rank_centroids(
             .when(F.col("_cscore").isNull(), F.lit(float("inf")))
             .otherwise(-F.col("_cscore"))
         )
-        # Two shapes for the same argmin, chosen by the CALLER's k:
-        # - join_back=True (large k): aggregate ONLY (vid -> winning cid)
-        #   and join the payload columns back by vid. Carrying the vector
-        #   inside the min_by buffer weighs every aggregation/sort row
-        #   down with the 512-byte array — measured Java-heap OOM at 500k
-        #   vectors × 708 centroids under the 8g harness heap
-        #   (semantic_dedup_scaled, gen-sf1, r8). Exchange bytes are the
-        #   same either way; buffers drop to ~30 B/row, and a caller that
-        #   checkpoints ``vectors`` hash-partitioned by vid gets the
-        #   join-back without re-exchanging the corpus.
-        # - join_back=False (small k, the k=8 exemplar faces): keep the
-        #   payload in the buffer and skip the join — measured 1.7× faster
-        #   at k=8/sf0.1 (kmeans_embeddings 2.4 s vs 4.1 s), where buffer
-        #   weight never threatens the heap.
-        if join_back:
-            best = scored.groupBy("vid").agg(
-                F.min_by(
-                    F.col("cid"), F.struct(order_key.alias("neg"), F.col("cid"))
-                ).alias("cid")
-            )
-            return vectors.join(best, "vid").select("vid", *passthrough, "cid")
+        # the argmin carries only cid and the payload joins back by vid: a
+        # vector inside the min_by buffer weighs down every aggregate row
         best = scored.groupBy("vid").agg(
             F.min_by(
-                F.struct(*passthrough, "cid"),
-                F.struct(order_key.alias("neg"), F.col("cid")),
-            ).alias("_best")
+                F.col("cid"), F.struct(order_key.alias("neg"), F.col("cid"))
+            ).alias("cid")
         )
-        return best.select("vid", *[f"_best.{c}" for c in passthrough], "_best.cid")
+        return vectors.join(best, "vid").select("vid", *passthrough, "cid")
     w = Window.partitionBy("vid").orderBy(F.col("_cscore").desc(), F.col("cid"))
     return (
         scored.withColumn("crank", F.row_number().over(w))
@@ -303,7 +281,7 @@ def ivf_cosine_topk(
     cents = v.filter(F.col("vid") % stride == 0).select(
         F.col("vid").alias("cid"), F.col("v").alias("ce"), F.col("n").alias("cn")
     )
-    cells = _rank_centroids(v, cents, 1, join_back=True).select(
+    cells = _rank_centroids(v, cents, 1).select(
         F.col("vid").alias("vec_id"), F.col("v").alias("cv"), F.col("n").alias("cnm"), "cid"
     )
     q = queries.select(
@@ -364,107 +342,6 @@ def embedding_near_dup_pairs(
             F.col(f"a.{id_col}").alias("id_a"),
             F.col(f"b.{id_col}").alias("id_b"),
             F.round(F.col("cosine") + 1e-9, 6).alias("cosine"),
-        )
-    )
-
-
-def kmeans_fit(
-    vectors: DataFrame,
-    k: int = 8,
-    n_iter: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    return_assign: bool = False,
-) -> DataFrame:
-    """Spherical k-means (Lloyd's) — the one-training-pass upgrade to
-    ``ivf_cosine_topk``'s deterministic slice quantizer.
-
-    Deterministic init: the k lowest-id vectors seed the centroids (no
-    RNG — reproducible across runs and engines). Each iteration is
-
-    1. assign: every vector scores against the BROADCAST k×dim centroid
-       set and keeps its best cell (``_rank_centroids`` — a narrow pass
-       over the corpus, no corpus shuffle), then
-    2. update: per-(cell, dimension) mean via posexplode + two-level
-       aggregate (the embedding_centroids shape — partial sums absorb the
-       dim fan-out map-side; the shuffle carries k×dim keys only).
-
-    The new centroids are eagerly localCheckpoint-ed: k×dim rows, so the
-    materialization is trivially small, the growing lineage is cut every
-    iteration, and the next broadcast reads a stable tiny frame. Cosine
-    assignment makes centroid normalization unnecessary (the norm divides
-    out). At 100 TB each iteration = one broadcast + one tiny-key shuffle
-    — the canonical distributed Lloyd's.
-
-    Returns (cid, centroid array<double>, n_members) for the final
-    assignment.
-    """
-    # the corpus (with norms) feeds every iteration's assign pass —
-    # checkpoint once so 1+n_iter+1 passes read its blocks, not parquet +
-    # re-normed arrays.
-    # Hash-partitioned by vid: _rank_centroids' join-back (see there) then
-    # lines up with the groupBy("vid") output partitioning, so no assign
-    # pass ever re-exchanges the corpus.
-    # past ~64 cells the min_by buffer weight dominates (see
-    # _rank_centroids): switch the assign passes to the join-back shape,
-    # and checkpoint the corpus vid-partitioned so those joins re-use the
-    # partitioning. Small k keeps the buffer shape — no join, so the
-    # repartition would be a pure extra exchange.
-    heavy_k = k > 64
-    v = vectors.select(
-        F.col(id_col).alias("vid"), _as_double(vec_col).alias("v")
-    ).withColumn("n", l2_norm(F.col("v")))
-    v = (v.repartition("vid") if heavy_k else v).localCheckpoint(eager=False)
-    seeds = v.orderBy("vid").limit(k)
-    w = Window.orderBy("vid")  # k rows — single-partition window is fine
-    cents = seeds.select(
-        (F.row_number().over(w) - 1).alias("cid"),
-        F.col("v").alias("ce"),
-        F.col("n").alias("cn"),
-    ).localCheckpoint(eager=True)
-    for _ in range(n_iter):
-        assign = _rank_centroids(v, cents, 1, join_back=heavy_k)
-        upd = (
-            assign.select("cid", F.posexplode("v").alias("pos", "x"))
-            .groupBy("cid", "pos")
-            .agg(F.avg("x").alias("c"))
-            .groupBy("cid")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "c"))),
-                    lambda s: s["c"],
-                ).alias("ce")
-            )
-        )
-        new_cents = upd.withColumn("cn", l2_norm(F.col("ce"))).localCheckpoint(
-            eager=True
-        )
-        # a cell that lost every member emits no mean row — carry its
-        # previous centroid forward (standard Lloyd's degeneracy handling)
-        # instead of silently shrinking k for the rest of the run. The
-        # count() is on the k-row checkpointed frame (free); the join runs
-        # only on the degenerate path.
-        if new_cents.count() < k:
-            new_cents = (
-                cents.select("cid", F.col("ce").alias("prev_ce"))
-                .join(new_cents.drop("cn"), "cid", "left")
-                .select("cid", F.coalesce("ce", "prev_ce").alias("ce"))
-                .withColumn("cn", l2_norm(F.col("ce")))
-                .localCheckpoint(eager=True)
-            )
-        cents = new_cents
-    final = _rank_centroids(v, cents, 1, join_back=heavy_k)
-    if return_assign:
-        # (vid, v, n, cid) — consumers like semantic_dedup score member
-        # pairs; handing the assignment out saves them re-running the
-        # broadcast assign pass against the returned centroids
-        return final
-    counts = final.groupBy("cid").agg(F.count(F.lit(1)).alias("n_members"))
-    return (
-        cents.select("cid", F.col("ce").alias("centroid"))
-        .join(counts, "cid", "left")
-        .select(
-            "cid", "centroid", F.coalesce("n_members", F.lit(0)).alias("n_members")
         )
     )
 
@@ -660,27 +537,26 @@ def kmeans_fit_arrow(
     return_centroids: bool = False,
     small_rows: int | None = None,
 ):
-    """``kmeans_fit(return_assign=True)`` with the two corpus-sized inner
-    products moved to Arrow/BLAS — the configuration for LARGE k (the
-    k ∝ √N SemDeDup recipe), where the JVM expression dot is the
-    measured bottleneck and the min_by buffer weight OOMs (r8, gen-sf1).
+    """Spherical k-means (Lloyd's) with both corpus-sized inner products
+    in Arrow/BLAS; the engine's one k-means. Returns the final assignment
+    (vid long, v array<double>, n double, cid int).
 
-    Same recurrence, same determinism: lowest-id seeding, argmax cosine
-    with lowest-cid ties, per-dimension means, empty-cell carry-forward —
-    each implemented so the decision sequence matches kmeans_fit and the
-    unrolled DuckDB oracle (see _assign_arrow on ulp parity). Driver
-    traffic per iteration is the k×dim mean matrix (the documented
-    bounded-metadata pattern; ≤4096×64 doubles = 2 MB at the cap) — the
+    Deterministic, so it is checkable term for term against the unrolled
+    DuckDB oracle ``queries_similarity._kmeans_cte``: the k lowest-id
+    vectors seed the centroids (no RNG), each pass takes the argmax
+    cosine with lowest-cid ties, each update is a per-cell per-dimension
+    mean, and an emptied cell carries its previous centroid forward (see
+    _assign_arrow on ulp parity). Driver traffic per iteration is the
+    k×dim mean matrix (≤4096×64 doubles = 2 MB at the cap); the
     centroids re-enter each pass as a numpy closure constant, never a
-    join side. Scale: per iteration ONE narrow checkpointed-corpus pass whose
-    exchange is ≤ k rows per batch. Payload mode carries each row's
-    payload through the assign pass, so no (vid → cid) join-back follows
-    and the corpus needs no repartition: every pass over the checkpoint
-    is narrow. ``return_centroids=True``
-    additionally returns the final centroid frame
-    (cid int, centroid array<double>) — the kmeans_embeddings report face
-    consumes it. ``small_rows`` overrides the local-finish row gate
-    (default ``SMALL_KMEANS_ROWS``); tests pass 0 to force the
+    join side. Scale: per iteration ONE narrow checkpointed-corpus pass
+    whose exchange is ≤ k rows per batch. Payload mode carries each
+    row's payload through the final assign pass, so no (vid → cid)
+    join-back follows and the corpus needs no repartition.
+    ``return_centroids=True`` additionally returns the final centroid
+    frame (cid int, centroid array<double>) — the kmeans_embeddings
+    report face consumes it. ``small_rows`` overrides the local-finish
+    row gate (default ``SMALL_KMEANS_ROWS``); tests pass 0 to force the
     distributed loop — the graph operators' override contract."""
     import numpy as np
 
@@ -808,7 +684,7 @@ def pq_fit(
     partial-min row per (vector, subspace); the update is a
     (s, cid, pos)-keyed mean whose map-side partials collapse the fan-out
     to m·k·(dim/m)=1024 rows per exchange, and only those 1024 doubles
-    reach the driver per iteration (kmeans_fit's loop discipline with
+    reach the driver per iteration (kmeans_fit_arrow's loop discipline with
     quality_classifier's literal re-entry). The argmin key rk =
     c·c − 2·v·c drops the per-row constant v·v (winner unchanged; full
     dist² is reassembled as v·v + rk where MSE needs it), with the same

@@ -711,7 +711,8 @@ def _kmeans_cte(
     the pagerank-oracle move applied to k-means. Deterministic throughout:
     lowest-id seeding, cosine argmax with (score DESC, cid) tie-break,
     per-dimension means, empty-cell carry-forward via LEFT JOIN +
-    coalesce — each step the exact SQL twin of kmeans_fit's iteration.
+    coalesce — each step the exact SQL twin of kmeans_fit_arrow's
+    iteration.
     Dot products are bit-identical across engines (left-to-right double
     MAC); per-dimension means can differ by summation order at ~1e-16,
     far below the 1e-6 output rounding and the measured ≥1e-4 assignment
@@ -792,17 +793,15 @@ FROM c{n} LEFT JOIN members USING (cid)
 
 def _kmeans_report_frame(spark, emb):
     """Shared (cid, centroid, n_members) report body of kmeans_embeddings
-    and its sampled twin — the Arrow/BLAS engine since r12 (the r11
-    verdict's ask: port the SemDeDup-proven kmeans_fit_arrow path). Same
-    recurrence and decision sequence as kmeans_fit (pinned by
-    test_arrow_kmeans_matches_sql_kmeans); per-dimension means reassociate
-    at ~1e-16, far below the 1e-6 centroid rounding — the same argument
-    _kmeans_cte documents for cross-engine parity. Per iteration: ONE
-    narrow checkpointed-corpus mapInArrow pass whose exchange is ≤ k rows per
-    batch, versus kmeans_fit's per-iteration posexplode shuffle + eager
-    checkpoint + degeneracy-count jobs. Final centroids re-enter as a
-    k-row driver frame; member counts come off the payload-mode
-    assignment — zero corpus-sized joins."""
+    and its sampled twin, on kmeans_fit_arrow. Same recurrence and
+    decision sequence as the DuckDB oracle _kmeans_cte (pinned by
+    test_arrow_kmeans_matches_duckdb_recurrence); per-dimension means
+    reassociate at ~1e-16, far below the 1e-6 centroid rounding — the
+    same argument _kmeans_cte documents for cross-engine parity. Per
+    iteration: ONE narrow checkpointed-corpus mapInArrow pass whose
+    exchange is ≤ k rows per batch. Final centroids re-enter as a k-row
+    driver frame; member counts come off the payload-mode assignment —
+    zero corpus-sized joins."""
     from mapreduce_model_spark.operators.similarity import kmeans_fit_arrow
 
     assign, cdf = kmeans_fit_arrow(
@@ -819,11 +818,10 @@ def _kmeans_report_frame(spark, emb):
 @query("kmeans_embeddings", oracle=_kmeans_oracle())
 def kmeans_embeddings(spark, sf_dir):
     """Spherical k-means over the embedding corpus: deterministic
-    lowest-id seeding, 5 iterations of assign + per-dimension mean —
-    the Arrow/BLAS engine (kmeans_fit_arrow) since r12, decision-parity-
-    pinned against kmeans_fit (see _kmeans_report_frame). Hash-checked
-    (r6) against a 5-iteration unrolled-CTE DuckDB oracle (see
-    _kmeans_oracle on why the float recurrence is hash-stable); the numpy
+    lowest-id seeding, 5 iterations of assign + per-dimension mean on
+    kmeans_fit_arrow (see _kmeans_report_frame). Hash-checked (r6)
+    against a 5-iteration unrolled-CTE DuckDB oracle (see _kmeans_cte on
+    why the float recurrence is hash-stable); the numpy
     recompute in tests/test_round3_ops.py stays as defense in depth.
     Centroids rounded for stable cross-run comparison."""
     return _kmeans_report_frame(spark, table(spark, sf_dir, "embeddings"))
@@ -1469,8 +1467,8 @@ def semantic_dedup(spark, sf_dir):
     lower-id cluster-mate (the semantic-novelty score; NULL for the
     cluster's first member), and the keep flag. Fully hash-checked: the
     oracle replays the SAME unrolled Lloyd's recurrence (_kmeans_cte) and
-    the same pair scoring — bit-identical dot products make the float
-    recurrence comparable.
+    the same pair scoring; BLAS reassociation moves scores by ~1e-16, far
+    below the assignment decision gaps and the 1e-6 score rounding.
 
     EXEMPLAR-ONLY (r11): this face pins k=8 so the oracle can replay the
     unrolled Lloyd recurrence term-for-term — a fixed geometry whose
@@ -1481,74 +1479,33 @@ def semantic_dedup(spark, sf_dir):
     which is registered and hash-checked beside it. See PLANS.md
     "Cross-scale scaling evidence" exclusion note.
 
-    Scale: clustering is kmeans_fit (broadcast assign + k×dim-key
-    shuffle); the pair join is keyed on cid, so candidate volume is
-    Σ|cluster|² — SemDeDup's own recipe is k ∝ √N to bound cluster sizes
-    (at 100 TB: ~100k clusters), and the max-cosine election is an
-    algebraic MAX that collapses the fan-out map-side before any
-    exchange. Assignments come straight out of the training loop's own
-    final assign pass (kmeans_fit(return_assign=True)) — no re-assignment
-    pass, no extra shuffle."""
+    Scale: clustering is kmeans_fit_arrow; pairs are scored only within
+    a cluster, so candidate volume is Σ|cluster|² — SemDeDup's own recipe
+    is k ∝ √N to bound cluster sizes (at 100 TB: ~100k clusters).
+    Assignments come straight out of the training loop's own final
+    assign pass — no re-assignment pass, no extra shuffle."""
     return _semantic_dedup_frame(spark, sf_dir, k=_KM_K, n_iter=_KM_ITER)
 
 
-def _semantic_dedup_frame(
-    spark, sf_dir, k: int, n_iter: int, engine: str = "sql", emb=None
-):
-    """Shared SemDeDup body: kmeans assign → cid-keyed lower-id max-cosine
-    election → keep flag. Parameterized so the k=8 exemplar face and the
-    k∝√N scaled face cannot drift apart. ``engine="arrow"`` swaps BOTH
-    corpus-sized inner-product passes (assign, pair scoring) for the
-    Arrow/BLAS twins — same recurrence and decisions (see
-    operators.similarity kmeans_fit_arrow / semantic_max_cosine_arrow on
-    ulp parity), ~300× the JVM expression-dot throughput; the k=8
-    exemplar keeps the pure-expression plan the oracle replays
-    term-for-term."""
+def _semantic_dedup_frame(spark, sf_dir, k: int, n_iter: int, emb=None):
+    """Shared SemDeDup body: kmeans_fit_arrow assign → per-cluster
+    lower-id max-cosine election (semantic_max_cosine_arrow) → keep flag.
+    Parameterized so the k=8 exemplar face and the k∝√N scaled faces
+    cannot drift apart; all three are hash-checked against oracles built
+    on the same _kmeans_cte recurrence (see operators.similarity
+    kmeans_fit_arrow / _assign_arrow on ulp parity)."""
     from mapreduce_model_spark.operators.similarity import (
-        dot,
-        kmeans_fit,
         kmeans_fit_arrow,
         semantic_max_cosine_arrow,
     )
 
     if emb is None:
         emb = table(spark, sf_dir, "embeddings")
-    if engine == "arrow":
-        assign = kmeans_fit_arrow(emb, k=k, n_iter=n_iter)
-        # the election emits one row per member (mc NULL for each
-        # cluster's first) — the output IS the result frame, no join back
-        # onto assign (r11: the old left join re-ran the assign pass for
-        # its second consumer; plan audit showed the mapInArrow twice)
-        mc = semantic_max_cosine_arrow(assign)
-        return mc.select(
-            F.col("vid").alias("vec_id"),
-            "cid",
-            rnd("mc", 6).alias("sem_score"),
-            F.coalesce(F.col("mc") < _SEM_TAU, F.lit(True)).alias("is_kept"),
-        )
-    # vid, v, n, cid — the training loop's own final assign pass. Three
-    # consumers read it (both pair-join sides + the output join); each
-    # re-derives it as a narrow broadcast-dot over kmeans_fit's ALREADY
-    # checkpointed corpus, so a second shared copy here was measured a
-    # wash (4.5 vs 4.2 s, as a persist) while doubling memory — don't.
-    assign = kmeans_fit(emb, k=k, n_iter=n_iter, return_assign=True)
-    a = assign.select(
-        "cid", F.col("vid").alias("vid_a"), F.col("v").alias("va"), F.col("n").alias("na")
-    )
-    b = assign.select(
-        "cid", F.col("vid").alias("vid_b"), F.col("v").alias("vb"), F.col("n").alias("nb")
-    )
-    mc = (
-        a.join(b, "cid")
-        .where(F.col("vid_b") < F.col("vid_a"))
-        .select(
-            "vid_a",
-            (dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))).alias("cos"),
-        )
-        .groupBy("vid_a")
-        .agg(F.max("cos").alias("mc"))
-    )
-    return assign.join(mc, assign["vid"] == mc["vid_a"], "left").select(
+    assign = kmeans_fit_arrow(emb, k=k, n_iter=n_iter)
+    # the election emits one row per member (mc NULL for each cluster's
+    # first) — the output IS the result frame, no join back onto assign
+    mc = semantic_max_cosine_arrow(assign)
+    return mc.select(
         F.col("vid").alias("vec_id"),
         "cid",
         rnd("mc", 6).alias("sem_score"),
@@ -1619,11 +1576,7 @@ def semantic_dedup_scaled(spark, sf_dir):
     unrolled recurrence."""
     emb_n = table(spark, sf_dir, "embeddings").count()
     return _semantic_dedup_frame(
-        spark,
-        sf_dir,
-        k=adaptive_kmeans_k(emb_n),
-        n_iter=_SEM_SCALED_ITER,
-        engine="arrow",
+        spark, sf_dir, k=adaptive_kmeans_k(emb_n), n_iter=_SEM_SCALED_ITER
     )
 
 
@@ -1655,26 +1608,16 @@ def semantic_dedup_sampled(spark, sf_dir):
     whose unrolled-Lloyd + Σ|cluster|² pair-join oracle stays inside the
     sweep budget at gen-sf1 (62.5k sampled vectors, ~250 clusters →
     ~1.6e7 candidate pairs, vs the parents' oracle spilling tens of GB
-    at 500k). Arrow/BLAS engine path since r11 (decision-parity-pinned
-    and hash-green, see _semantic_dedup_frame); the pure-expression plan
-    the oracle replays term-for-term stays covered by the k=8 exemplar.
-    Below the 64k cap the sample is the full corpus, so this face equals
+    at 500k). Below the 64k cap the sample is the full corpus, so this face equals
     semantic_dedup_scaled's geometry at small scale."""
     emb = sample_frame(
         table(spark, sf_dir, "embeddings"), "vec_id", cap=SEM_SAMPLE_CAP
     )
-    # engine="arrow" since r11: the Arrow/BLAS path is decision-parity-
-    # pinned against the SQL recurrence (test_arrow_kmeans_matches_sql_
-    # kmeans) and hash-green vs the same oracle (semantic_dedup_scaled);
-    # the pure-expression plan the oracle replays term-for-term stays
-    # covered by the k=8 exemplar face. Saves the expression-dot assign
-    # and pair passes (~1.5 s at sf0.1; the gap widens with sample size).
     return _semantic_dedup_frame(
         spark,
         sf_dir,
         k=adaptive_kmeans_k(emb.count()),
         n_iter=_SEM_SCALED_ITER,
-        engine="arrow",
         emb=emb,
     )
 

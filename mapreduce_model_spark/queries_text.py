@@ -1849,7 +1849,7 @@ def quality_classifier(spark, sf_dir):
     removed per-step row materialization, which matters when partitions
     carry millions of docs, not thousands. Hashes identical (re-verified
     sf0.001/sf0.01); only the 65-double weight vector ever reaches the
-    driver (kmeans_fit's loop discipline). At 100 TB: 10 passes over a
+    driver (kmeans_fit_arrow's loop discipline). At 100 TB: 10 passes over a
     checkpointed narrow frame, one 65-buffer partial-agg row per partition,
     520-byte driver traffic per step. Scoring re-enters weights as a
     literal — zero exchanges, like jl_projection."""

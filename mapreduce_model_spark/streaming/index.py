@@ -71,12 +71,15 @@ def drain_streaming_index(query, n_files: int, timeout_s: float = 120.0) -> None
     manifest runs no batch and returns at its first progress event, which
     reports the final offset. A failed query raises its exception at once
     (a manifest entry missing on disk, say) instead of waiting out
-    ``timeout_s``."""
+    ``timeout_s``; a query still short of ``n_files`` at the deadline is
+    stopped and raises ``TimeoutError``, so no caller reads a partial
+    pair table as a drained one."""
     import ast
     import json
     import time
 
     deadline = time.time() + timeout_s
+    reached = 0
     while time.time() < deadline:
         err = query.exception()
         if err is not None:
@@ -91,11 +94,17 @@ def drain_streaming_index(query, n_files: int, timeout_s: float = 120.0) -> None
                     # Python-DataSource offsets round-trip as dict repr
                     # (single quotes), not JSON
                     end = ast.literal_eval(end)
-            if end and end.get("index", 0) >= n_files:
+            reached = end.get("index", 0) if end else 0
+            if reached >= n_files:
                 break
         time.sleep(0.3)
     query.stop()
     query.awaitTermination(30)
+    if reached < n_files:
+        raise TimeoutError(
+            f"stream not drained after {timeout_s} s: end offset {reached}"
+            f" of {n_files} files"
+        )
 
 
 def current_index(spark: SparkSession, pairs_path: str) -> DataFrame:

@@ -19,6 +19,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.stateful_processor import (
+    StatefulProcessor,
+    StatefulProcessorHandle,
+)
 
 OUTPUT_SCHEMA = T.StructType(
     [
@@ -73,56 +77,46 @@ def running_user_totals(events: DataFrame) -> DataFrame:
 
 # --- transformWithState (Spark 4 arbitrary-state v2) ------------------------
 
-try:  # Spark 4 only — gate so older runtimes still import this module
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
 
-    class RunningTotalsProcessor(StatefulProcessor):
-        """transformWithStateInPandas version of the running per-user
-        aggregate — the v2 state API: typed named state (ValueState here;
-        ListState/MapState/timers available), explicit init/close
-        lifecycle, RocksDB-backed on clusters. Strictly more expressive
-        than applyInPandasWithState (multiple independent state variables,
-        event-time timers) — the v2 surface for the reference's A20
-        pluggable-reducer contract."""
+class RunningTotalsProcessor(StatefulProcessor):
+    """transformWithStateInPandas version of the running per-user
+    aggregate — the v2 state API: typed named state (ValueState here;
+    ListState/MapState/timers available), explicit init/close
+    lifecycle, RocksDB-backed on clusters. Strictly more expressive
+    than applyInPandasWithState (multiple independent state variables,
+    event-time timers) — the v2 surface for the reference's A20
+    pluggable-reducer contract."""
 
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("totals", STATE_SCHEMA)
+    def init(self, handle: StatefulProcessorHandle) -> None:
+        self._state = handle.getValueState("totals", STATE_SCHEMA)
 
-        def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-            n, total, last_us = (
-                self._state.get() if self._state.exists() else (0, 0.0, 0)
-            )
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-                last_us = max(last_us, int(pdf["ts_us"].max()))
-            self._state.update((n, total, last_us))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_value": [round(total, 2)],
-                    "last_ts_us": [last_us],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    def running_user_totals_v2(events: DataFrame) -> DataFrame:
-        """Same contract as running_user_totals, on the v2 state engine."""
-        return events.groupBy("user_id").transformWithStateInPandas(
-            RunningTotalsProcessor(),
-            outputStructType=OUTPUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
+    def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
+        n, total, last_us = (
+            self._state.get() if self._state.exists() else (0, 0.0, 0)
+        )
+        for pdf in rows:
+            n += len(pdf)
+            total += float(pdf["value"].sum())
+            last_us = max(last_us, int(pdf["ts_us"].max()))
+        self._state.update((n, total, last_us))
+        yield pd.DataFrame(
+            {
+                "user_id": [key[0]],
+                "n_events": [n],
+                "total_value": [round(total, 2)],
+                "last_ts_us": [last_us],
+            }
         )
 
-except ImportError:  # pragma: no cover
-    RunningTotalsProcessor = None
+    def close(self) -> None:
+        pass
 
-    def running_user_totals_v2(events: DataFrame) -> DataFrame:
-        raise NotImplementedError("transformWithState requires Spark >= 4")
+
+def running_user_totals_v2(events: DataFrame) -> DataFrame:
+    """Same contract as running_user_totals, on the v2 state engine."""
+    return events.groupBy("user_id").transformWithStateInPandas(
+        RunningTotalsProcessor(),
+        outputStructType=OUTPUT_SCHEMA,
+        outputMode="Update",
+        timeMode="None",
+    )

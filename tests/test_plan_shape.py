@@ -7,6 +7,8 @@ nothing degenerates into an unblocked cartesian product. A regression here
 is a performance bug even when every value still matches the oracle.
 """
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -864,15 +866,21 @@ def test_dup_span_merge_never_shuffles_text(spark):
 
 
 def test_semantic_dedup_pair_join_is_cluster_keyed(spark):
-    """The SemDeDup pair join must be keyed on cid (candidate volume
-    Σ|cluster|²), never a cartesian; centroid assignment broadcasts."""
+    """SemDeDup scores member pairs only within a cluster (candidate
+    volume Σ|cluster|²), never as a cartesian product or a nested-loop
+    join anywhere in the computation: the election is one grouped
+    FlatMapGroupsInPandas fed by a sort on cid. No Exchange is required —
+    below the local-finish gate the assignment is already one
+    partition."""
     p = plan(spark, "semantic_dedup")
     assert "CartesianProduct" not in p
-    # BroadcastNestedLoopJoin appears ONLY as the k-row centroid broadcast
-    # (corpus × 8 assign pass); the member-pair join itself must be an
-    # equi-join on cid
-    assert "cid" in p and ("SortMergeJoin" in p or "ShuffledHashJoin" in p or
-                           "BroadcastHashJoin" in p)
+    assert "BroadcastNestedLoopJoin" not in p
+    final = final_plan(spark, "semantic_dedup")
+    fed_by = re.search(r"FlatMapGroupsInPandas \(\d+\)\n\s*\+- Sort \((\d+)\)", final)
+    assert fed_by, final
+    assert re.search(
+        rf"\({fed_by.group(1)}\) Sort\nInput[^\n]*\nArguments: \[cid#", final
+    ), final
 
 
 def test_text_normalize_is_narrow(spark):

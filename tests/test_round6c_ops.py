@@ -147,23 +147,6 @@ def test_ngram_udtf_matches_jvm_on_nonascii_whitespace(spark, sf_dir):
     assert got == want and got, (got, words)
 
 
-def test_extract_features_arrow_barrier_parity(spark, sf_dir):
-    """barrier=True is a pure SCHEDULING change — gang-launch for
-    collective init (sharded checkpoint load, NCCL group, rate-limit
-    handshake) — and must never change results: identical rows to the
-    default wave-scheduled stage. Also proves the barrier path actually
-    executes on local[N] (tasks ≤ slots after spread_for_fanout)."""
-    from mapreduce_model_spark.operators.multimodal import (
-        attach_payload,
-        extract_features_arrow,
-    )
-
-    media = attach_payload(table(spark, sf_dir, "documents"))
-    a = sorted(map(tuple, extract_features_arrow(media).collect()))
-    b = sorted(map(tuple, extract_features_arrow(media, barrier=True).collect()))
-    assert a == b and a
-
-
 def test_observe_metrics_ride_the_build_job(spark, sf_dir):
     """Pipeline QA without a second scan: Observation metrics (input
     count, input byte mass) ride the SAME job as the filtered build —

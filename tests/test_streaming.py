@@ -602,6 +602,27 @@ def test_drain_raises_when_the_stream_fails(spark, tmp_path):
     assert time.monotonic() - t0 < 60
 
 
+def test_drain_raises_when_the_deadline_passes(spark, tmp_path):
+    """A stream still short of its manifest at the deadline is stopped
+    and reported, never returned as drained: its pair table is partial."""
+    from mapreduce_model_spark.sources.pyds import register
+    from mapreduce_model_spark.streaming.index import drain_streaming_index, start_streaming_index
+
+    files = [f"{REFERENCE_SMALL}/test_in_small/{i}.txt" for i in (1, 2, 3)]
+    manifest = tmp_path / "manifest.txt"
+    manifest.write_text("\n".join([str(len(files)), *files]) + "\n")
+    register(spark)
+    q = start_streaming_index(
+        spark, str(manifest), str(tmp_path / "pairs"), str(tmp_path / "ckpt")
+    )
+    try:
+        with pytest.raises(TimeoutError, match="of 3 files"):
+            drain_streaming_index(q, n_files=len(files), timeout_s=0)
+        assert not q.isActive
+    finally:
+        q.stop()
+
+
 def test_streaming_inverted_index_matches_batch_generated(spark, generated_corpus, tmp_path):
     """Generated-corpus sibling of the test above (41 manifest entries, one
     file listed twice, 16 files per microbatch): the streamed index equals

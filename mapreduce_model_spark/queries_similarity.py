@@ -1608,8 +1608,8 @@ def semantic_dedup_sampled(spark, sf_dir):
     whose unrolled-Lloyd + Σ|cluster|² pair-join oracle stays inside the
     sweep budget at gen-sf1 (62.5k sampled vectors, ~250 clusters →
     ~1.6e7 candidate pairs, vs the parents' oracle spilling tens of GB
-    at 500k). Below the 64k cap the sample is the full corpus, so this face equals
-    semantic_dedup_scaled's geometry at small scale."""
+    at 500k). Below the 64k cap the sample is the full corpus, so this
+    face equals semantic_dedup_scaled's geometry at small scale."""
     emb = sample_frame(
         table(spark, sf_dir, "embeddings"), "vec_id", cap=SEM_SAMPLE_CAP
     )
